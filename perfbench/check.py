@@ -1,47 +1,18 @@
 """Untimed output checks: Spark results against DuckDB oracles.
 
-Row count plus an order-insensitive value hash: columns in name order,
-each row rendered with floats at six decimals, rows sorted, then
-hashed. Six decimals absorbs the last-digit differences of summing in
-another order; anything coarser is a wrong answer.
+The comparison is the repository's own parity gate (``tools/parity.py``,
+default mode): row count, column names, and its order-insensitive value
+hash. This module only holds the DuckDB connection over a run's
+generated tables and the glue that applies the gate to one query.
 """
 
 from __future__ import annotations
 
-import datetime
-import decimal
-import hashlib
-import math
+from tools.parity import table_hash
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-def _canon(val: object) -> str:
-    if val is None:
-        return "<null>"
-    if isinstance(val, bool):
-        return "true" if val else "false"
-    if isinstance(val, (float, decimal.Decimal)):
-        f = float(val)
-        if math.isnan(f):
-            return "nan"
-        return f"{f + 0.0:.6f}"
-    if isinstance(val, datetime.datetime):
-        return val.replace(tzinfo=None).isoformat()
-    if isinstance(val, (list, tuple)):
-        return "[" + ",".join(_canon(v) for v in val) + "]"
-    if isinstance(val, dict):
-        return "{" + ",".join(f"{_canon(k)}:{_canon(v)}" for k, v in sorted(val.items())) + "}"
-    return str(val)
-
-
-def table_hash(cols: list[str], rows: list[tuple]) -> tuple[int, str]:
-    """(row count, 16-hex digest) independent of row and column order."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i].lower())
-    lines = sorted("\x01".join(_canon(r[i]) for i in order) for r in rows)
-    return len(rows), hashlib.sha256("\n".join(lines).encode()).hexdigest()[:16]
 
 
 class Oracle:
@@ -55,21 +26,17 @@ class Oracle:
         for t in TABLES:
             self.con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    def expected(self, sql: str) -> tuple[list[str], tuple[int, str]]:
-        res = self.con.sql(sql)
-        cols = list(res.columns)
-        return cols, table_hash(cols, res.fetchall())
-
     def close(self) -> None:
         self.con.close()
 
 
 def check_query(df, oracle: Oracle, sql: str) -> str | None:
     """None when ``df`` (already built) matches the oracle; else why not."""
-    rows = [tuple(r) for r in df.collect()]
-    got = table_hash(df.columns, rows)
-    cols, want = oracle.expected(sql)
-    if sorted(c.lower() for c in df.columns) != sorted(c.lower() for c in cols):
+    got = table_hash(df.columns, [tuple(r) for r in df.collect()])
+    res = oracle.con.sql(sql)
+    cols = list(res.columns)
+    want = table_hash(cols, res.fetchall())
+    if sorted(df.columns) != sorted(cols):
         return f"columns {sorted(df.columns)} != oracle {sorted(cols)}"
     if got[0] == 0:
         return "empty result"

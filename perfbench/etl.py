@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import math
 import os
+import sys
 import time
 from collections import defaultdict
 
@@ -25,8 +26,13 @@ import numpy as np
 
 import gen
 
-WAVE_EVENTS = 20_000
+# Sized from traced runs at 5k, 20k and 80k events per wave
+# (README.md): at 80k the row-proportional work (landing, bronze
+# addBatch) is about a quarter of a wave and the per-trigger commit and
+# offset protocol about a tenth; at 20k the rows were under a tenth.
+WAVE_EVENTS = 80_000
 WAVES_PER_ROUND = 4
+# user_id range only; the rollup groups by (day, event_type)
 N_USERS = 1_500
 TINY_WAVE_EVENTS = 500
 TINY_WAVES_PER_ROUND = 2
@@ -39,6 +45,10 @@ def _progress_ms(query, keys: tuple[str, ...]) -> float:
 
 
 class EtlCatchup:
+    # The cold round and one more round are eight waves; wave latency
+    # levels off after about that many.
+    WARMUP_ROUNDS = 1
+
     def __init__(self, run):
         self.run = run
         self.wave_events = TINY_WAVE_EVENTS if run.tiny else WAVE_EVENTS
@@ -129,7 +139,9 @@ class EtlCatchup:
             return self.sink.rollup_view(spark, self.store).collect()
 
     def round(self, i: int) -> tuple[float, list[float], int]:
+        t0 = time.perf_counter()
         waves = [self._next_wave() for _ in range(self.waves_per_round)]
+        t_gen = time.perf_counter() - t0
         lat, wall = [], 0.0
         for wave, df, agg, landed in waves:
             t0 = time.perf_counter()
@@ -156,6 +168,8 @@ class EtlCatchup:
             except Exception as exc:
                 self.run.fail(f"compact after wave {self.wave - 1}: {type(exc).__name__}: {exc}")
         wall += time.perf_counter() - t0
+        waves_s = " ".join(f"{x:.2f}" for x in lat)
+        print(f"perfbench: round {i} waves {waves_s}s, generated in {t_gen:.2f}s", file=sys.stderr)
         return wall, lat, len(waves)
 
     def _check_view(self, wave: int, rows) -> None:

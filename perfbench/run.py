@@ -5,7 +5,7 @@
 Run from the repository root. One process, one ``local[nproc]``
 session built by the engine's own ``get_spark``. The run generates its
 inputs from ``--seed`` under a fresh temp root inside the checkout,
-measures a cold round, runs an untimed warm-up round, measures warm
+measures a cold round, runs untimed warm-up rounds, measures warm
 rounds for ``--seconds``, checks
 every output untimed, deletes what it wrote, and prints one JSON
 object as the last line of stdout. See README.md for the workloads and
@@ -51,6 +51,9 @@ class Run:
         self.windows: list[tuple[float, float]] = []  # traced rounds, epoch ms
         self.spark = None
         self.failures: list[str] = []
+        # benchmark-side set-up work (input generation), left out of setup_s
+        self.untimed_setup_s = 0.0
+        self.stores: list[str] = []  # store dirs this run made the engine build
 
     def path(self, *parts: str) -> str:
         return os.path.join(self.tmp, *parts)
@@ -120,20 +123,20 @@ class Run:
         if self.tracer.enabled:
             self.spark.sparkContext.setJobGroup(name, name)
 
-    def measure(self, one_round) -> dict:
-        """Cold round, one untimed warm-up round, then warm rounds until
-        ``seconds`` have passed. ``one_round(i)`` returns (wall_s,
+    def measure(self, one_round, warmup_rounds: int) -> dict:
+        """Cold round, ``warmup_rounds`` untimed rounds, then warm rounds
+        until ``seconds`` have passed. ``one_round(i)`` returns (wall_s,
         op_latencies_s, attempted). In the traced run warm rounds
         alternate untraced and traced."""
-        t_setup = time.perf_counter() - T_PROCESS
+        t_setup = time.perf_counter() - T_PROCESS - self.untimed_setup_s
         cold, _, attempted = one_round(0)
-        # JIT compilation is still settling after the cold round: warm
-        # sweeps kept getting faster for two more rounds (6.3, 6.0, 5.2,
-        # 4.9 s), which made the median depend on how many fit in time.
-        attempted += one_round(1)[2]
+        # JIT compilation is still settling after the cold round; timing
+        # rounds before it settles makes the median follow the trend.
+        for i in range(1, 1 + warmup_rounds):
+            attempted += one_round(i)[2]
         warm, ops, traced = [], [], []
         deadline = time.perf_counter() + self.seconds
-        i = 2
+        i = 1 + warmup_rounds
         while (
             time.perf_counter() < deadline
             or len(warm) < MIN_WARM_ROUNDS
@@ -180,6 +183,7 @@ def per_layer(run: Run, res: dict, setup_layers: dict, steal_s: float) -> dict[s
         vals[k] = vals.get(k, 0.0) + v
     out = {k: v / n for k, v in vals.items()}
     out.update(setup_layers)
+    out["cold_s"] = res["cold_s"]
     out["host.steal_s"] = steal_s
     out["trace.overhead_s"] = res["trace_overhead_s"]
     return out
@@ -205,18 +209,23 @@ def main(argv: list[str] | None = None) -> int:
 
     run = Run(args.workload, args.seed, args.seconds, bool(args.trace), args.tiny)
     steal0 = read_steal_s()
-    warehouse = os.path.join(ROOT, "spark-warehouse")
-    stores_before = set(os.listdir(warehouse)) if os.path.isdir(warehouse) else set()
     try:
         os.makedirs(run.tmp)
         run.start_session()
         workload = etl.EtlCatchup(run) if args.workload == "etl_catchup" else fleet.Fleet(run)
         workload.setup()
-        res = run.measure(workload.round)
+        res = run.measure(workload.round, workload.WARMUP_ROUNDS)
         workload.verify()
         run.stop_session()
         steal_s = read_steal_s() - steal0
-        summary = dict(res, workload=args.workload, seed=args.seed, steal_s=steal_s)
+        summary = dict(
+            res,
+            workload=args.workload,
+            seed=args.seed,
+            steal_s=steal_s,
+            generate_s=run.untimed_setup_s,
+            **workload.setup_layers,
+        )
         print("perfbench: summary " + json.dumps(summary), file=sys.stderr)
         if run.tracer.enabled:
             values = per_layer(run, res, workload.setup_layers, steal_s)
@@ -238,9 +247,8 @@ def main(argv: list[str] | None = None) -> int:
         with contextlib.suppress(OSError):  # other runs may still use it
             os.rmdir(os.path.dirname(run.tmp))
         # stores the engine persisted for this run's (fresh) inputs
-        if os.path.isdir(warehouse):
-            for name in set(os.listdir(warehouse)) - stores_before:
-                shutil.rmtree(os.path.join(warehouse, name), ignore_errors=True)
+        for store in run.stores:
+            shutil.rmtree(store, ignore_errors=True)
 
 
 if __name__ == "__main__":

@@ -58,7 +58,8 @@ def report(spec: dict, workload: str, runs: list[dict]) -> bool:
         med, sp = spread(vals)
         first, second = statistics.median(vals[:half]), statistics.median(vals[half:])
         drift = second / first - 1.0
-        flag = "" if m["name"] == "setup_s" or sp <= m["bound"] else "  SPREAD OVER BOUND"
+        flag = "" if sp <= m["bound"] else "  SPREAD OVER BOUND"
+        flag += "" if abs(drift) <= m["bound"] else "  DRIFT OVER BOUND"
         ok &= not flag
         print(
             f"{m['name']:>10}: median {med:.3f} {m['unit']}  spread {sp:.3f} "
