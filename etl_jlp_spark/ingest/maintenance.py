@@ -35,6 +35,8 @@ import shutil
 
 from pyspark.sql import DataFrame, Row, SparkSession
 
+from etl_jlp_spark import stores
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 ZORDER_BITS = 16  # per-column rank resolution (2 × 16 → 32-bit z-key)
 
@@ -117,9 +119,7 @@ def compact_small_files(
         out = df.coalesce(n_out)
     tmp = f"{dest_dir}.compact-{os.getpid()}"
     out.write.mode("overwrite").parquet(tmp)
-    if os.path.isdir(dest_dir):
-        shutil.rmtree(dest_dir)
-    os.rename(tmp, dest_dir)
+    stores.replace_dir(tmp, dest_dir)
     files_out, bytes_out = dir_file_stats(dest_dir)
     return Row(
         files_in=files_in,
@@ -162,38 +162,25 @@ def overlap_count(ranges: list[tuple[object, object]], point: object) -> int:
     return sum(1 for lo, hi in ranges if lo <= point <= hi)
 
 
-# persisted-index stores are content+algo-keyed ({family}_{8-hex}; see
-# functions/storekey.py): a regenerated corpus resolves to a NEW key and
-# the old store becomes garbage on disk. This janitor closes that loop.
-# The family prefix is part of the convention — a closed list, so a user
-# table that HAPPENS to end in 8 hex-ish chars (events_20240101) can
-# never be mistaken for a store.
-STORE_FAMILIES = ("ir", "ivf", "mh", "fj", "rollup", "cc")
-STORE_FAMILY_RE = (
-    rf"^({'|'.join(STORE_FAMILIES)})(_[a-z0-9]+)*_[0-9a-f]{{8}}(\.build-\d+)?$"
-)
-
-
 def sweep_stale_stores(
     warehouse_dir: str, live_paths: set[str], dry_run: bool = False
 ) -> list[str]:
     """Delete content-keyed store directories not in ``live_paths``
     (absolute paths of every store the CURRENT corpora resolve to —
-    collect them by calling each family's ``*_store_paths`` helper).
-    Only names matching the ``{family}_{8hexkey}`` convention are ever
-    touched, so tables or checkpoints sharing the warehouse are safe;
-    orphaned ``.build-{pid}`` temp dirs (crashed builders) are swept
-    too. Returns the removed paths (or would-remove, when dry_run)."""
-    import re
-
-    pat = re.compile(STORE_FAMILY_RE)
+    ``live_store_paths``). A regenerated corpus resolves to a NEW key
+    and abandons its old store; this janitor reclaims it. Only names
+    matching a registered family's ``{family}_…_{8hexkey}`` convention
+    are ever touched, so tables or checkpoints sharing the warehouse
+    are safe; orphaned ``.build-{pid}`` temp dirs (crashed builders)
+    are swept too. Returns the removed paths (or would-remove, when
+    dry_run)."""
     live = {os.path.abspath(p) for p in live_paths}
     removed = []
     if not os.path.isdir(warehouse_dir):
         return removed
     for name in sorted(os.listdir(warehouse_dir)):
         full = os.path.abspath(os.path.join(warehouse_dir, name))
-        if not os.path.isdir(full) or not pat.match(name) or full in live:
+        if not os.path.isdir(full) or stores.parse_name(name) is None or full in live:
             continue
         removed.append(full)
         if not dry_run:
@@ -203,20 +190,15 @@ def sweep_stale_stores(
 
 def live_store_paths(sf_dirs: list[str]) -> set[str]:
     """Every store path the given corpora currently resolve to, across
-    all persisted-index families — the ``live_paths`` input to
-    ``sweep_stale_stores``."""
-    from etl_jlp_spark.operators import components, ir, linkage, rollup, similarity
-
-    live: set[str] = set()
-    for sf in sf_dirs:
-        live.update(ir._ir_index_paths(sf))
-        live.update(linkage._fuzzy_store_paths(sf))
-        live.add(rollup._rollup_store_path(sf))
-        live.update(similarity._minhash_store_paths(sf))
-        live.update(similarity._ivf_store_paths(sf))
-        live.update(similarity._ivf_store_paths(sf, "scaled"))
-        live.update(components._cc_store_paths(sf))
-    return live
+    all registered store families and their live algo variants — the
+    ``live_paths`` input to ``sweep_stale_stores``."""
+    return {
+        p
+        for sf in sf_dirs
+        for fam in stores.families()
+        for algo in fam.algos
+        for p in fam.paths(sf, algo)
+    }
 
 
 def affected_delete_files(
@@ -354,14 +336,7 @@ def propagate_deletes(
                     i += 1
             shutil.rmtree(rewrite)
     open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    if os.path.isdir(dest):
-        # the rename target must not exist; src==dest in-place swap
-        old = f"{dest}.old-{os.getpid()}"
-        os.rename(dest, old)
-        os.rename(tmp, dest)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, dest)
+    stores.replace_dir(tmp, dest)
     return Row(
         files_total=files_total,
         files_rewritten=len(hit),
@@ -484,31 +459,22 @@ def store_subfamily_inventory(sf_dir: str) -> list[tuple]:
     CURRENT corpus resolves to is built, orphaned generations (what
     ``sweep_stale_stores`` would reclaim), crashed ``.build-`` temps,
     and file/byte footprint. Pure filesystem metadata — the subfamily
-    list derives from the ``live_store_paths`` registry, so the row
-    count is fixed by CODE, not by what happens to be on disk."""
-    import re
-
-    wh = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    live = live_store_paths([sf_dir])
-    fams: dict[str, set[str]] = {}
-    for p in live:
-        base = os.path.basename(p)
-        fams.setdefault(re.sub(r"_[0-9a-f]{8}$", "", base), set()).add(os.path.abspath(p))
+    list derives from the store family registry, so the row count is
+    fixed by CODE, not by what happens to be on disk."""
+    wh = stores.WAREHOUSE
     on_disk = sorted(os.listdir(wh)) if os.path.isdir(wh) else []
+    parsed = {n: stores.parse_name(n) for n in on_disk}
+    live: dict[str, set[str]] = {}  # subfamily -> its live paths
+    for fam in stores.families():
+        for algo in fam.algos:
+            for part, path in zip(fam.parts, fam.paths(sf_dir, algo)):
+                live.setdefault(f"{fam.name}_{part}", set()).add(path)
     rows = []
-    for fam in sorted(fams):
-        gen_pat = re.compile(rf"^{re.escape(fam)}_[0-9a-f]{{8}}$")
-        tmp_pat = re.compile(rf"^{re.escape(fam)}_[0-9a-f]{{8}}\.build-\d+$")
-        gens = [n for n in on_disk if gen_pat.match(n)]
-        temps = [n for n in on_disk if tmp_pat.match(n)]
-        live_paths = fams[fam]
-        built = sum(
-            1 for p in live_paths if os.path.exists(os.path.join(p, "_SUCCESS"))
-        )
-        orphans = [n for n in gens if os.path.abspath(os.path.join(wh, n)) not in live_paths]
+    for sub, live_paths in sorted(live.items()):
+        gens = [n for n in on_disk if parsed[n] == (sub, False)]
+        temps = [n for n in on_disk if parsed[n] == (sub, True)]
+        built = sum(1 for p in live_paths if stores.built(p))
+        orphans = [n for n in gens if os.path.join(wh, n) not in live_paths]
         n_files = t_bytes = 0
         for n in gens + temps:
             f, b = dir_file_stats(os.path.join(wh, n))
@@ -516,7 +482,7 @@ def store_subfamily_inventory(sf_dir: str) -> list[tuple]:
             t_bytes += b
         rows.append(
             (
-                fam,
+                sub,
                 len(live_paths),
                 built,
                 len(gens),
@@ -543,7 +509,7 @@ def _register_store_inventory() -> None:
         counterpart of the rollup store's retention: content-keyed
         stores are abandoned (never mutated) on corpus regeneration,
         so this report IS the reclaim queue. Row count is fixed by the
-        subfamily registry (one row per ``live_store_paths`` family),
+        store family registry (one row per family part),
         so the rows-only gate pins a stable shape. At 100 TB this is
         one object-store LIST per family prefix — output bounded by
         #families, never by data."""

@@ -22,8 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_jlp_spark import stores
 from etl_jlp_spark.catalog import load_table
-from etl_jlp_spark.operators.similarity import dedup_minhash_lsh
+from etl_jlp_spark.operators.similarity import MH_BATCH_HEX, dedup_minhash_lsh
 from etl_jlp_spark.registry import query
 
 MAX_ROUNDS = 64  # hard safety cap only; the loop exits on convergence
@@ -307,45 +308,24 @@ def softdedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _cc_store_paths(sf_dir: str) -> tuple[str, str]:
-    import os
-
-    from etl_jlp_spark.functions.storekey import corpus_store_key
-    from etl_jlp_spark.operators.similarity import MH_BATCH_HEX
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    h = corpus_store_key(sf_dir, "documents", algo=f"ccinc-v1-{MH_BATCH_HEX}")
-    return os.path.join(root, f"cc_edges_{h}"), os.path.join(root, f"cc_labels_{h}")
+CC_STORE = stores.Family("cc", ("edges", "labels"), "documents", f"ccinc-v1-{MH_BATCH_HEX}")
 
 
 def ensure_cc_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize the EXISTING corpus's near-dup graph once: its
     verified pair list (the edges — needed so merges can re-resolve
-    affected clusters) and its component labels. Same md5-slice corpus
-    split, content+algo-keyed paths, and tmp+rename protocol as
-    ``ensure_minhash_store``.
-
-    Single-writer contract + janitor: see ensure_minhash_store
-    (operators/similarity.py) — the canonical statement for the whole
-    ensure_*_store family.
-    """
-    import os
-    import shutil
-
+    affected clusters) and its component labels, over the same
+    md5-slice corpus split as ``ensure_minhash_store``."""
     from etl_jlp_spark.operators.similarity import (
-        MH_BATCH_HEX,
         MINHASH_TAU,
         _jaccard_on_candidates,
         _minhash_bands,
         _word_shingles,
     )
 
-    edges_path, labels_path = _cc_store_paths(sf_dir)
-    if all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in (edges_path, labels_path)):
-        return edges_path, labels_path
+    paths = CC_STORE.paths(sf_dir)
+    if stores.built(*paths):
+        return paths
     docs = load_table(spark, sf_dir, "documents")
     existing = docs.filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) >= MH_BATCH_HEX
@@ -366,15 +346,10 @@ def ensure_cc_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
     pairs = _jaccard_on_candidates(sh, cand, MINHASH_TAU).select("doc_a", "doc_b")
     labels = connected_components(pairs)
-    for final, df in ((edges_path, pairs), (labels_path, labels)):
-        tmp = f"{final}.build-{os.getpid()}"
-        df.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, final)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+    for path, df in zip(paths, (pairs, labels)):
+        stores.publish(path, df.write.mode("overwrite").parquet)
     sh.unpersist()
-    return edges_path, labels_path
+    return paths
 
 
 @query(

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_jlp_spark import stores
 from etl_jlp_spark.catalog import load_table, widen
 from etl_jlp_spark.registry import query
 
@@ -373,23 +374,9 @@ def term_buckets(terms: list[str]) -> list[str]:
     return sorted({"b" + hashlib.md5(t.encode()).hexdigest()[:2] for t in terms})
 
 
-def _ir_index_paths(sf_dir: str) -> tuple[str, str, str]:
-    import os
-
-    from etl_jlp_spark.functions.storekey import corpus_store_key
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    # algo v2: letter-prefixed pbucket partition values (r5) — keys the
-    # store to the layout so an old-layout store can't be served
-    h = corpus_store_key(sf_dir, "documents", algo="ir-v2")
-    return (
-        os.path.join(root, f"ir_postings_{h}"),
-        os.path.join(root, f"ir_termstats_{h}"),
-        os.path.join(root, f"ir_corpusstats_{h}"),
-    )
+# algo v2: letter-prefixed pbucket partition values (r5) — keys the
+# store to the layout so an old-layout store can't be served
+IR_STORE = stores.Family("ir", ("postings", "termstats", "corpusstats"), "documents", "ir-v2")
 
 
 def ensure_ir_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
@@ -406,22 +393,10 @@ def ensure_ir_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     - term stats (term, df) — vocabulary-sized,
     - corpus stats 1-row (n_docs, avgdl over docs with ≥1 token —
       matching the oracle's dl CTE).
-
-    Build lands in a per-pid temp dir then renames into place, so a
-    concurrent builder can never expose a half-written store.
-
-    Single-writer contract + janitor: see ensure_minhash_store
-    (operators/similarity.py) — the canonical statement for the whole
-    ensure_*_store family.
     """
-    import os
-    import shutil
-
-    paths = _ir_index_paths(sf_dir)
-    if all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths):
+    paths = IR_STORE.paths(sf_dir)
+    if stores.built(*paths):
         return paths
-    postings_path, termstats_path, corpus_path = paths
-
     docs = load_table(spark, sf_dir, "documents")
     tf = _words(docs, spark, sf_dir).groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
@@ -440,20 +415,10 @@ def ensure_ir_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     corpus = doclens.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    for final, df, part in (
-        (postings_path, postings, "pbucket"),
-        (termstats_path, termstats, None),
-        (corpus_path, corpus, None),
-    ):
-        tmp = f"{final}.build-{os.getpid()}"
-        writer = df.write.mode("overwrite")
-        if part:
-            writer = writer.partitionBy(part)
-        writer.parquet(tmp)
-        try:
-            os.rename(tmp, final)
-        except OSError:  # another process won the race — use its store
-            shutil.rmtree(tmp, ignore_errors=True)
+    postings_path, termstats_path, corpus_path = paths
+    stores.publish(postings_path, postings.write.mode("overwrite").partitionBy("pbucket").parquet)
+    stores.publish(termstats_path, termstats.write.mode("overwrite").parquet)
+    stores.publish(corpus_path, corpus.write.mode("overwrite").parquet)
     return paths
 
 

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_jlp_spark import stores
 from etl_jlp_spark.catalog import load_table, widen
 from etl_jlp_spark.registry import query
 
@@ -182,50 +183,27 @@ def fuzzy_join_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
 FUZZY_BATCH_HEX = "28"
 
 
-def _fuzzy_store_paths(sf_dir: str) -> tuple[str, str]:
-    import os
-
-    from etl_jlp_spark.functions.storekey import corpus_store_key
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    h = corpus_store_key(sf_dir, "documents", algo=f"fj-v1-{FUZZY_K}-{FUZZY_BATCH_HEX}")
-    return os.path.join(root, f"fj_segs_{h}"), os.path.join(root, f"fj_keys_{h}")
+FUZZY_STORE = stores.Family(
+    "fj", ("segs", "keys"), "documents", f"fj-v1-{FUZZY_K}-{FUZZY_BATCH_HEX}"
+)
 
 
 def ensure_fuzzy_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize the existing corpus's PassJoin index once: the
     segment relation (seg_id, lb, seg, doc_id) probes equi-join
-    against, and the key relation (doc_id, pfx) verification reads —
-    content+algo-keyed paths, per-pid temp dir + rename, the same
-    protocol as the IVF/BM25/MinHash stores.
-
-    Single-writer contract + janitor: see ensure_minhash_store
-    (operators/similarity.py) — the canonical statement for the whole
-    ensure_*_store family.
-    """
-    import os
-    import shutil
-
-    segs_path, keys_path = _fuzzy_store_paths(sf_dir)
-    if all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in (segs_path, keys_path)):
-        return segs_path, keys_path
+    against, and the key relation (doc_id, pfx) verification reads."""
+    paths = FUZZY_STORE.paths(sf_dir)
+    if stores.built(*paths):
+        return paths
     existing = _keys(spark, sf_dir).filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) >= FUZZY_BATCH_HEX
     )
     segs = existing.select(
         F.col("doc_id"), F.explode(F.expr(_INDEX_SEGS)).alias("s")
     ).select("doc_id", "s.seg_id", "s.lb", "s.seg")
-    for final, df in ((segs_path, segs), (keys_path, existing)):
-        tmp = f"{final}.build-{os.getpid()}"
-        df.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, final)
-        except OSError:  # another process won the race — use its store
-            shutil.rmtree(tmp, ignore_errors=True)
-    return segs_path, keys_path
+    for path, df in zip(paths, (segs, existing)):
+        stores.publish(path, df.write.mode("overwrite").parquet)
+    return paths
 
 
 @query(
@@ -258,8 +236,7 @@ def fuzzy_join_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline which arriving docs are typo-level duplicates of
     already-kept ones. Same brute-force oracle contract as
     fuzzy_join_editdist, restricted to the batch × corpus split."""
-    segs_path, keys_path = _fuzzy_store_paths(sf_dir)
-    ensure_fuzzy_store(spark, sf_dir)
+    segs_path, keys_path = ensure_fuzzy_store(spark, sf_dir)
     batch = _keys(spark, sf_dir).filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) < FUZZY_BATCH_HEX
     )

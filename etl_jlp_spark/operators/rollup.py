@@ -17,8 +17,8 @@ The merge-by-union-groupBy handles late/overlapping days for free (a
 partial for the same (day, type) from both sides just sums); with a
 midnight-aligned cutoff the day partitions are disjoint, so a
 partition-pruned rewrite would touch only delta days. The store is
-content+algo-keyed (``corpus_store_key``) and day-partitioned, the
-same protocol as the IVF/BM25/MinHash stores.
+content+algo-keyed and day-partitioned, one of the persisted stores
+``etl_jlp_spark.stores`` names and publishes.
 
 Oracle = one full GROUP BY over all of events: the driver's hash match
 proves store + delta == scratch recompute.
@@ -27,13 +27,12 @@ proves store + delta == scratch recompute.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_jlp_spark import stores
 from etl_jlp_spark.catalog import _ensure_session_confs, table_path
-from etl_jlp_spark.functions.storekey import corpus_store_key
 from etl_jlp_spark.registry import query
 
 ROLLUP_DELTA_DAYS = 7  # the "arriving" window: last N days are the delta
@@ -82,13 +81,7 @@ def _day_rollup(df: DataFrame) -> DataFrame:
     )
 
 
-def _rollup_store_path(sf_dir: str) -> str:
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    h = corpus_store_key(sf_dir, "events", algo=f"rollup-v1-{ROLLUP_DELTA_DAYS}")
-    return os.path.join(root, f"rollup_events_{h}")
+ROLLUP_STORE = stores.Family("rollup", ("events",), "events", f"rollup-v1-{ROLLUP_DELTA_DAYS}")
 
 
 def _cutoff_nanos(spark: SparkSession, sf_dir: str) -> int:
@@ -108,31 +101,23 @@ def _cutoff_nanos(spark: SparkSession, sf_dir: str) -> int:
 def ensure_rollup_store(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     """Materialize the historical (day < cutoff) rollup once; returns
     (store path, cutoff nanos). Day-partitioned so an upsert refresh
-    rewrites only touched day directories; per-pid temp dir + rename,
-    same race protocol as the other persisted stores.
-
-    Single-writer contract + janitor: see ensure_minhash_store
-    (operators/similarity.py) — the canonical statement for the whole
-    ensure_*_store family.
-    """
-    final = _rollup_store_path(sf_dir)
+    rewrites only touched day directories; the cutoff rides along as a
+    ``cutoff.txt`` sidecar next to the ``agg`` data."""
+    (final,) = ROLLUP_STORE.paths(sf_dir)
     marker = os.path.join(final, "cutoff.txt")
-    if os.path.exists(os.path.join(final, "agg", "_SUCCESS")) and os.path.exists(marker):
-        with open(marker) as fh:
-            return final, int(fh.read().strip())
-    cutoff = _cutoff_nanos(spark, sf_dir)
-    raw = _raw_events(spark, sf_dir)
-    hist = raw.filter(_cutoff_pred(raw, cutoff, "<"))
-    tmp = f"{final}.build-{os.getpid()}"
-    _day_rollup(_with_day(hist)).write.mode("overwrite").partitionBy("day").parquet(
-        os.path.join(tmp, "agg")
-    )
-    with open(os.path.join(tmp, "cutoff.txt"), "w") as fh:
-        fh.write(str(cutoff))
-    try:
-        os.rename(tmp, final)
-    except OSError:  # another process won the race — use its store
-        shutil.rmtree(tmp, ignore_errors=True)
+    if not (stores.built(os.path.join(final, "agg")) and os.path.exists(marker)):
+        cutoff = _cutoff_nanos(spark, sf_dir)
+        raw = _raw_events(spark, sf_dir)
+        hist = raw.filter(_cutoff_pred(raw, cutoff, "<"))
+
+        def write(tmp: str) -> None:
+            _day_rollup(_with_day(hist)).write.mode("overwrite").partitionBy("day").parquet(
+                os.path.join(tmp, "agg")
+            )
+            with open(os.path.join(tmp, "cutoff.txt"), "w") as fh:
+                fh.write(str(cutoff))
+
+        stores.publish(final, write)
     with open(marker) as fh:
         return final, int(fh.read().strip())
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_jlp_spark import stores
 from etl_jlp_spark.catalog import load_table, widen
 from etl_jlp_spark.functions.vectors import as_double_array, static_dot
 from etl_jlp_spark.registry import query
@@ -219,54 +220,25 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 MH_BATCH_HEX = "28"
 
 
-def _minhash_store_paths(sf_dir: str) -> tuple[str, str]:
-    import os
-
-    from etl_jlp_spark.functions.storekey import corpus_store_key
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    h = corpus_store_key(sf_dir, "documents", algo=f"mh-v1-{MH_BATCH_HEX}")
-    return os.path.join(root, f"mh_bands_{h}"), os.path.join(root, f"mh_shingles_{h}")
+MINHASH_STORE = stores.Family("mh", ("bands", "shingles"), "documents", f"mh-v1-{MH_BATCH_HEX}")
 
 
 def ensure_minhash_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Materialize the LSH index of the EXISTING corpus once: the band
     index (doc_id, band, key) and the shingle relation (doc_id, sh)
-    needed for exact-Jaccard verification. Content+algo-keyed paths,
-    per-pid temp dir + rename — same protocol as the IVF/BM25 stores.
-
-    Concurrency contract (applies to EVERY ensure_*_store family
-    member): the tmp+rename protocol is single-HOST atomic — two
-    concurrent sessions race benignly (the loser's rename fails and it
-    adopts the winner's store), but a builder that CRASHES mid-write
-    leaks its `.build-<pid>` temp dir. Cleanup is the explicit
-    janitor (`ingest.maintenance.sweep_stale_stores`), which removes
-    orphaned build temps and stores no live corpus resolves to; on a
-    shared filesystem without atomic rename semantics, run builds
-    single-writer (e.g. from the orchestrator's ingest step)."""
-    import os
-    import shutil
-
-    bands_path, sh_path = _minhash_store_paths(sf_dir)
-    if all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in (bands_path, sh_path)):
-        return bands_path, sh_path
+    needed for exact-Jaccard verification."""
+    paths = MINHASH_STORE.paths(sf_dir)
+    if stores.built(*paths):
+        return paths
     docs = load_table(spark, sf_dir, "documents")
     existing = docs.filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) >= MH_BATCH_HEX
     )
     shingles = _word_shingles(existing).persist()
-    for final, df in ((bands_path, _minhash_bands(shingles)), (sh_path, shingles)):
-        tmp = f"{final}.build-{os.getpid()}"
-        df.write.mode("overwrite").parquet(tmp)
-        try:
-            os.rename(tmp, final)
-        except OSError:  # another process won the race — use its store
-            shutil.rmtree(tmp, ignore_errors=True)
+    for path, df in zip(paths, (_minhash_bands(shingles), shingles)):
+        stores.publish(path, df.write.mode("overwrite").parquet)
     shingles.unpersist()
-    return bands_path, sh_path
+    return paths
 
 
 @query(
@@ -1022,24 +994,17 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_rank(cand, dim)
 
 
-def _ivf_store_paths(
-    sf_dir: str, n_centroids: int | str | None = None
-) -> tuple[str, str]:
-    from etl_jlp_spark.functions.storekey import corpus_store_key
-
-    import os
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
+def _ivf_algo(n_centroids: int | str | None) -> str:
     # algo v2: md5-TakeOrdered seed selection (r5) — keys the store to
     # the build algorithm so an old-layout store can't be served. A
     # non-default centroid count is part of the algo tag, so the pinned
     # k=16 oracle store and the √N-scaled production store coexist.
-    algo = "ivf-v2" if n_centroids is None else f"ivf-v2-k{n_centroids}"
-    h = corpus_store_key(sf_dir, "embeddings", algo=algo)
-    return os.path.join(root, f"ivf_assigned_{h}"), os.path.join(root, f"ivf_centroids_{h}")
+    return "ivf-v2" if n_centroids is None else f"ivf-v2-k{n_centroids}"
+
+
+IVF_STORE = stores.Family(
+    "ivf", ("assigned", "centroids"), "embeddings", _ivf_algo(None), _ivf_algo("scaled")
+)
 
 
 def ensure_ivf_store(
@@ -1049,38 +1014,24 @@ def ensure_ivf_store(
     parquet store (the production layout: one directory partition per
     coarse cell, so a probe read touches only the probed cells'
     partitions). Subsequent calls — and separate processes — reuse the
-    files; build lands in a per-pid temp dir then renames into place so
-    a concurrent builder can never expose a half-written store."""
-    import os
-    import shutil
-
-    assigned_path, cent_path = _ivf_store_paths(sf_dir, n_centroids)
-    if os.path.exists(os.path.join(assigned_path, "_SUCCESS")) and os.path.exists(
-        os.path.join(cent_path, "_SUCCESS")
-    ):
-        return assigned_path, cent_path
+    files."""
+    paths = IVF_STORE.paths(sf_dir, _ivf_algo(n_centroids))
+    if stores.built(*paths):
+        return paths
+    assigned_path, cent_path = paths
     corpus, assigned, centroids, dim = ivf_index(spark, sf_dir, n_centroids)
-    for final, df in (
-        (assigned_path, assigned.select("vec_id", "v", "nrm_vec_id", "cell")),
-        (cent_path, spark.createDataFrame(centroids, "cell int, cv array<double>")),
-    ):
-        tmp = f"{final}.build-{os.getpid()}"
-        writer = df.write.mode("overwrite")
-        if "vec_id" in df.columns:  # the assigned relation → one dir per cell
-            writer = writer.partitionBy("cell")
-        writer.parquet(tmp)
-        try:
-            os.rename(tmp, final)
-        except OSError:  # another process won the race — use its store
-            shutil.rmtree(tmp, ignore_errors=True)
+    assigned = assigned.select("vec_id", "v", "nrm_vec_id", "cell")
+    cent = spark.createDataFrame(centroids, "cell int, cv array<double>")
+    stores.publish(assigned_path, assigned.write.mode("overwrite").partitionBy("cell").parquet)
+    stores.publish(cent_path, cent.write.mode("overwrite").parquet)
     # only the corpus is persisted by ivf_index (r10 dropped the
     # assigned double-cache), so that is the one handle to release
     corpus.unpersist()
-    return assigned_path, cent_path
+    return paths
 
 
 # ≤ IVF_N_CENTROIDS rows per store; keyed by the content-hashed store
-# path (functions/storekey.py), so a regenerated corpus can't serve
+# path (etl_jlp_spark.stores), so a regenerated corpus can't serve
 # stale centroids — the amortized probe loads them once per process.
 _CENTROID_CACHE: dict[str, list] = {}
 

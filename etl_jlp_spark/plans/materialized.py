@@ -27,14 +27,11 @@ maintenance layer such a mart needs at scale.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_jlp_spark import stores
 from etl_jlp_spark.catalog import load_table
-from etl_jlp_spark.functions.storekey import corpus_store_key
 from etl_jlp_spark.registry import query
 
 # Fixed refresh horizon: lineitems shipped on/after this date are "the
@@ -65,34 +62,19 @@ def _join(li: DataFrame, orders: DataFrame) -> DataFrame:
     return li.join(orders, li.l_orderkey == orders.o_orderkey)
 
 
-def _mv_store_path(sf_dir: str) -> str:
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "spark-warehouse",
-    )
-    h = corpus_store_key(sf_dir, "lineitem", algo=f"mvjoin-v2-{MV_CUTOFF}")
-    return os.path.join(root, f"mv_priority_revenue_{h}")
+MV_STORE = stores.Family("mv", ("priority_revenue",), "lineitem", f"mvjoin-v2-{MV_CUTOFF}")
 
 
 def ensure_mv_store(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the base MV (shipped before MV_CUTOFF) once.
-
-    Single-writer contract + janitor: see ensure_minhash_store
-    (operators/similarity.py) — the canonical statement for the whole
-    ensure_*_store family."""
-    final = _mv_store_path(sf_dir)
-    if os.path.exists(os.path.join(final, "_SUCCESS")):
+    """Materialize the base MV (shipped before MV_CUTOFF) once."""
+    (final,) = MV_STORE.paths(sf_dir)
+    if stores.built(final):
         return final
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") < F.lit(MV_CUTOFF).cast("date")
     )
     orders = load_table(spark, sf_dir, "orders")
-    tmp = f"{final}.build-{os.getpid()}"
-    _mv_agg(_join(li, orders)).write.mode("overwrite").parquet(tmp)
-    try:
-        os.rename(tmp, final)
-    except OSError:  # another process won the race — use its store
-        shutil.rmtree(tmp, ignore_errors=True)
+    stores.publish(final, _mv_agg(_join(li, orders)).write.mode("overwrite").parquet)
     return final
 
 

@@ -157,7 +157,7 @@ def test_store_key_changes_when_corpus_regenerated(tmp_path):
     import shutil
     import time
 
-    from etl_jlp_spark.functions.storekey import corpus_store_key
+    from etl_jlp_spark.stores import corpus_store_key
 
     sf = tmp_path / "sf"
     sf.mkdir()

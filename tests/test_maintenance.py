@@ -68,6 +68,32 @@ def test_compaction_is_atomic_over_existing_dest(spark, tmp_path):
     assert stats.files_out >= 1
 
 
+def test_compaction_failed_publish_keeps_existing_dest(spark, tmp_path, monkeypatch):
+    """A failed final rename must leave the old destination in place,
+    not an empty path where the table used to be."""
+    import os
+
+    import pytest
+
+    src, ev = _fragmented(spark, tmp_path, n_files=4)
+    dest = str(tmp_path / "compact")
+    compact_small_files(spark, src, dest)
+    before = sorted(os.listdir(dest))
+    rename = os.rename
+
+    def failing_rename(a, b):
+        if ".compact-" in str(a):  # the new version's publish
+            raise OSError("injected rename failure")
+        rename(a, b)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        compact_small_files(spark, src, dest)
+    monkeypatch.undo()
+    assert sorted(os.listdir(dest)) == before
+    assert spark.read.parquet(dest).count() == ev.count()
+
+
 def test_store_janitor_sweeps_only_stale_store_dirs(tmp_path):
     """The janitor must remove content-keyed stores for corpora that no
     longer exist, keep live ones, sweep crashed .build temps, and never
@@ -79,6 +105,7 @@ def test_store_janitor_sweeps_only_stale_store_dirs(tmp_path):
     wh = tmp_path / "warehouse"
     names = [
         "ir_postings_deadbeef",       # stale store
+        "mv_priority_revenue_0badcafe",  # stale MV store
         "fj_segs_0badf00d.build-99",  # crashed builder temp
         "ivf_cells_12345678",         # live store
         "my_table",                   # not a store — must survive
@@ -92,6 +119,7 @@ def test_store_janitor_sweeps_only_stale_store_dirs(tmp_path):
     assert sorted(os.path.basename(p) for p in would) == [
         "fj_segs_0badf00d.build-99",
         "ir_postings_deadbeef",
+        "mv_priority_revenue_0badcafe",
     ]
     assert sorted(os.listdir(wh)) == sorted(names)  # dry run touched nothing
 
@@ -99,16 +127,37 @@ def test_store_janitor_sweeps_only_stale_store_dirs(tmp_path):
     assert sorted(os.path.basename(p) for p in removed) == [
         "fj_segs_0badf00d.build-99",
         "ir_postings_deadbeef",
+        "mv_priority_revenue_0badcafe",
     ]
     assert sorted(os.listdir(wh)) == ["checkpoint", "ivf_cells_12345678", "my_table"]
 
 
-def test_live_store_paths_cover_every_family():
+def test_live_store_paths_cover_every_family(spark):
+    """Every path any ``ensure_*`` returns is live and passes the
+    janitor's name check, and every registered family has an ``ensure_*``
+    — so the janitor can neither reclaim a store in use nor miss a
+    family (the MV store once escaped it)."""
+    import importlib
+    import os
+    import pkgutil
+
+    import etl_jlp_spark
+    from etl_jlp_spark import stores
     from etl_jlp_spark.ingest.maintenance import live_store_paths
 
-    live = live_store_paths(["/root/testdata/sf0.001"])
-    fams = {p.rsplit("/", 1)[-1].split("_")[0] for p in live}
-    assert {"ir", "fj", "rollup", "mh", "ivf"} <= fams
+    live = live_store_paths([SF_SMALL])
+    returned = set()
+    for mod in pkgutil.walk_packages(etl_jlp_spark.__path__, "etl_jlp_spark."):
+        m = importlib.import_module(mod.name)
+        for name, fn in vars(m).items():
+            if name.startswith("ensure_") and getattr(fn, "__module__", None) == m.__name__:
+                out = fn(spark, SF_SMALL)
+                paths = {out} if isinstance(out, str) else {p for p in out if isinstance(p, str)}
+                returned |= paths
+    assert returned and returned <= live
+    assert all(stores.parse_name(os.path.basename(p)) for p in live)
+    fams = {os.path.basename(p).split("_")[0] for p in returned}
+    assert fams == {f.name for f in stores.families()}
 
 
 def test_zorder_layout_skips_on_both_columns(spark, tmp_path):
@@ -336,8 +385,12 @@ def test_store_inventory_and_vacuum_invariance(spark):
             r["family"]: r
             for r in qs["store_inventory_report"](spark, SF_SMALL).collect()
         }
-        # fixed subfamily registry: one row per live_store_paths family
-        assert {"mh_bands", "mh_shingles", "ivf_centroids", "ir_postings"} <= set(inv)
+        # fixed subfamily registry: one row per registered family part
+        from etl_jlp_spark import stores
+
+        subs = {f"{f.name}_{p}" for f in stores.families() for p in f.parts}
+        assert set(inv) == subs
+        assert {"mh_bands", "mh_shingles", "ivf_centroids", "mv_priority_revenue"} <= subs
         assert inv["mh_bands"]["n_orphaned"] >= 1
         assert inv["mh_bands"]["n_live_built"] >= 1
         assert inv["mh_shingles"]["n_build_temps"] >= 1
