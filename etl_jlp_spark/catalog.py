@@ -9,9 +9,12 @@ into the file source.
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -58,11 +61,84 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
+# Session confs that change what parquet schema inference returns; a
+# cached schema is reused only under the same values.
+_PARQUET_READER_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# Bound on cached schemas: streaming state reads a new directory per
+# batch, so the cache must not grow with a long-lived session.
+_SCHEMA_CACHE_MAX = 512
+_schema_cache: OrderedDict[tuple[str, ...], tuple[tuple, StructType]] = OrderedDict()
+_schema_lock = threading.Lock()
+
+
+def _content_signature(path: str) -> tuple | None:
+    """``(relpath, size, mtime_ns)`` for every file under ``path`` (the
+    file itself when it is one). None when the path cannot be stat'ed
+    locally (missing, glob pattern, object-store URI): such reads are
+    never cached."""
+    if not os.path.exists(path):
+        return None
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_size, st.st_mtime_ns),)
+        sig = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                st = os.stat(os.path.join(root, f))
+                sig.append((os.path.relpath(os.path.join(root, f), path), st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(sig))
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` without a schema-inference job on a
+    repeat read: the engine's one parquet read path.
+
+    Applies ``_ensure_session_confs`` (so any session reads nano and
+    untagged timestamps as ours does), then looks up the schema inferred
+    for ``paths`` last time. A hit needs the same parquet reader confs
+    and the same ``(relpath, size, mtime_ns)`` for every file under each
+    path; it reads with ``spark.read.schema(s)``, which plans the same
+    scan but skips the footer job. Anything else (new files, a rewrite,
+    a toggled conf) infers afresh and replaces the entry, so the cache
+    holds one entry per path."""
+    _ensure_session_confs(spark)
+    key = tuple(os.path.abspath(p) for p in paths)
+    sigs = tuple(_content_signature(p) for p in key)
+    if None in sigs:
+        return spark.read.parquet(*paths)
+    stamp = (tuple(spark.conf.get(c) for c in _PARQUET_READER_CONFS), sigs)
+    with _schema_lock:
+        hit = _schema_cache.get(key)
+        if hit is not None:
+            _schema_cache.move_to_end(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    schema = df.schema
+    with _schema_lock:
+        _schema_cache[key] = (stamp, schema)
+        _schema_cache.move_to_end(key)
+        while len(_schema_cache) > _SCHEMA_CACHE_MAX:
+            _schema_cache.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    _ensure_session_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     for col in NANO_TS_COLS.get(name, ()):
         dtype = dict(df.dtypes).get(col)
         if dtype == "bigint":

@@ -26,7 +26,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_jlp_spark.catalog import load_table
+from etl_jlp_spark.catalog import load_table, read_parquet, table_path
 from etl_jlp_spark.operators.audit import with_audit_columns
 from etl_jlp_spark.registry import query
 
@@ -43,10 +43,7 @@ def _events_after_watermark(spark: SparkSession, sf_dir: str, watermark: str) ->
     difference is reading only new row groups vs the whole table."""
     from datetime import datetime, timezone
 
-    from etl_jlp_spark.catalog import _ensure_session_confs, table_path
-
-    _ensure_session_confs(spark)
-    raw = spark.read.parquet(table_path(sf_dir, "events"))
+    raw = read_parquet(spark, table_path(sf_dir, "events"))
     if dict(raw.dtypes).get("ts") == "bigint":
         wm_dt = datetime.strptime(watermark, "%Y-%m-%d %H:%M:%S").replace(tzinfo=timezone.utc)
         wm_nanos = int(wm_dt.timestamp()) * 1_000_000_000

@@ -36,6 +36,7 @@ import shutil
 from pyspark.sql import DataFrame, Row, SparkSession
 
 from etl_jlp_spark import stores
+from etl_jlp_spark.catalog import read_parquet
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
 ZORDER_BITS = 16  # per-column rank resolution (2 × 16 → 32-bit z-key)
@@ -92,7 +93,7 @@ def compact_small_files(
     input — no extra pass beyond the rewrite itself."""
     files_in, bytes_in = dir_file_stats(src_dir)
     n_out = max(1, math.ceil(bytes_in / target_bytes))
-    df = spark.read.parquet(src_dir)
+    df = read_parquet(spark, src_dir)
     if zorder_by:
         from pyspark.sql import functions as F
 
@@ -320,11 +321,11 @@ def propagate_deletes(
             by_dir[os.path.relpath(os.path.dirname(os.path.abspath(fp)), src_abs)].append(fp)
         keep = F.col(column).isNull() | ~F.col(column).isin(keys)
         for rel_dir, fps in sorted(by_dir.items()):
-            aff = spark.read.parquet(*fps)
+            aff = read_parquet(spark, *fps)
             n_before = aff.count()
             rewrite = f"{tmp}.rewrite"
             aff.filter(keep).write.mode("overwrite").parquet(rewrite)
-            n_after = spark.read.parquet(rewrite).count()
+            n_after = read_parquet(spark, rewrite).count()
             rows_deleted += n_before - n_after
             i = 0
             for root, _dirs, files in os.walk(rewrite):
@@ -431,9 +432,9 @@ GROUP BY user_id
             .write.mode("overwrite")
             .parquet(store)
         )
-        rows_before = spark.read.parquet(store).count()
+        rows_before = read_parquet(spark, store).count()
         audit = propagate_deletes(spark, store, "user_id", cohort)
-        rows_after = spark.read.parquet(store).count()
+        rows_after = read_parquet(spark, store).count()
         out = spark.createDataFrame(
             [
                 (
@@ -464,16 +465,16 @@ def store_subfamily_inventory(sf_dir: str) -> list[tuple]:
     wh = stores.WAREHOUSE
     on_disk = sorted(os.listdir(wh)) if os.path.isdir(wh) else []
     parsed = {n: stores.parse_name(n) for n in on_disk}
-    live: dict[str, set[str]] = {}  # subfamily -> its live paths
+    live: dict[str, tuple[stores.Family, set[str]]] = {}  # subfamily -> (family, live paths)
     for fam in stores.families():
         for algo in fam.algos:
             for part, path in zip(fam.parts, fam.paths(sf_dir, algo)):
-                live.setdefault(f"{fam.name}_{part}", set()).add(path)
+                live.setdefault(f"{fam.name}_{part}", (fam, set()))[1].add(path)
     rows = []
-    for sub, live_paths in sorted(live.items()):
+    for sub, (fam, live_paths) in sorted(live.items()):
         gens = [n for n in on_disk if parsed[n] == (sub, False)]
         temps = [n for n in on_disk if parsed[n] == (sub, True)]
-        built = sum(1 for p in live_paths if stores.built(p))
+        built = sum(1 for p in live_paths if fam.built(p))
         orphans = [n for n in gens if os.path.join(wh, n) not in live_paths]
         n_files = t_bytes = 0
         for n in gens + temps:

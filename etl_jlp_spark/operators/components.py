@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_jlp_spark import stores
-from etl_jlp_spark.catalog import load_table
+from etl_jlp_spark.catalog import load_table, read_parquet
 from etl_jlp_spark.operators.similarity import MH_BATCH_HEX, dedup_minhash_lsh
 from etl_jlp_spark.registry import query
 
@@ -324,7 +324,7 @@ def ensure_cc_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     )
 
     paths = CC_STORE.paths(sf_dir)
-    if stores.built(*paths):
+    if CC_STORE.built(*paths):
         return paths
     docs = load_table(spark, sf_dir, "documents")
     existing = docs.filter(
@@ -391,8 +391,8 @@ def dedup_cc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     edges_path, labels_path = ensure_cc_store(spark, sf_dir)
-    stored_edges = spark.read.parquet(edges_path)
-    stored_labels = spark.read.parquet(labels_path)
+    stored_edges = read_parquet(spark, edges_path)
+    stored_labels = read_parquet(spark, labels_path)
 
     bands_path, sh_path = ensure_minhash_store(spark, sf_dir)
     bsh, bb = batch_shingles_bands(spark, sf_dir, bands_path)

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_jlp_spark.catalog import load_table, widen
+from etl_jlp_spark.catalog import load_table, read_parquet, widen
 from etl_jlp_spark.functions.vectors import as_double_array, static_dot
 from etl_jlp_spark.registry import query
 
@@ -1482,7 +1482,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate ids from the probed cells' directory partitions only;
     # the stored float vectors are never read (column pruning)
     assigned = (
-        spark.read.parquet(assigned_path)
+        read_parquet(spark, assigned_path)
         .filter(F.col("cell").isin(probe_cells))
         .select("vec_id", "cell")
     )

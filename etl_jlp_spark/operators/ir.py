@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_jlp_spark import stores
-from etl_jlp_spark.catalog import load_table, widen
+from etl_jlp_spark.catalog import load_table, read_parquet, widen
 from etl_jlp_spark.registry import query
 
 WORD_PATTERN = "[a-z]+"  # alpha runs over lowercased text
@@ -395,7 +395,7 @@ def ensure_ir_index(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
       matching the oracle's dl CTE).
     """
     paths = IR_STORE.paths(sf_dir)
-    if stores.built(*paths):
+    if IR_STORE.built(*paths):
         return paths
     docs = load_table(spark, sf_dir, "documents")
     tf = _words(docs, spark, sf_dir).groupBy("doc_id", "term").agg(
@@ -433,11 +433,11 @@ def bm25_search_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings_path, termstats_path, corpus_path = ensure_ir_index(spark, sf_dir)
     terms = list(BM25_QUERY_TERMS)
     posts = (
-        spark.read.parquet(postings_path)
+        read_parquet(spark, postings_path)
         .filter(F.col("pbucket").isin(term_buckets(terms)) & F.col("term").isin(terms))
     )
-    tstats = spark.read.parquet(termstats_path).filter(F.col("term").isin(terms))
-    cstats = spark.read.parquet(corpus_path)
+    tstats = read_parquet(spark, termstats_path).filter(F.col("term").isin(terms))
+    cstats = read_parquet(spark, corpus_path)
     scored = (
         posts.join(F.broadcast(tstats), "term")
         .crossJoin(F.broadcast(cstats))

@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_jlp_spark import stores
-from etl_jlp_spark.catalog import load_table, widen
+from etl_jlp_spark.catalog import load_table, read_parquet, widen
 from etl_jlp_spark.registry import query
 
 FUZZY_PFX_LEN = 40  # the linkage key: first chars of the document text
@@ -193,7 +193,7 @@ def ensure_fuzzy_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     segment relation (seg_id, lb, seg, doc_id) probes equi-join
     against, and the key relation (doc_id, pfx) verification reads."""
     paths = FUZZY_STORE.paths(sf_dir)
-    if stores.built(*paths):
+    if FUZZY_STORE.built(*paths):
         return paths
     existing = _keys(spark, sf_dir).filter(
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) >= FUZZY_BATCH_HEX
@@ -241,10 +241,10 @@ def fuzzy_join_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) < FUZZY_BATCH_HEX
     )
     probe = _probe_segments(batch, "doc_new")
-    idx = spark.read.parquet(segs_path).withColumnRenamed("doc_id", "doc_old")
+    idx = read_parquet(spark, segs_path).withColumnRenamed("doc_id", "doc_old")
     cand = probe.join(idx, ["seg_id", "lb", "seg"]).select("doc_new", "doc_old").distinct()
     kn = batch.select(F.col("doc_id").alias("doc_new"), F.col("pfx").alias("pfx_n"))
-    ko = spark.read.parquet(keys_path).select(
+    ko = read_parquet(spark, keys_path).select(
         F.col("doc_id").alias("doc_old"), F.col("pfx").alias("pfx_o")
     )
     return (

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_jlp_spark import stores
-from etl_jlp_spark.catalog import _ensure_session_confs, table_path
+from etl_jlp_spark.catalog import read_parquet, table_path
 from etl_jlp_spark.registry import query
 
 ROLLUP_DELTA_DAYS = 7  # the "arriving" window: last N days are the delta
@@ -61,8 +61,7 @@ def _cutoff_pred(df: DataFrame, cutoff_ns: int, op: str):
 def _raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with ts still the RAW int64 nano column (filter-pushable);
     callers convert after filtering."""
-    _ensure_session_confs(spark)
-    return spark.read.parquet(table_path(sf_dir, "events"))
+    return read_parquet(spark, table_path(sf_dir, "events"))
 
 
 def _with_day(df: DataFrame) -> DataFrame:
@@ -81,7 +80,9 @@ def _day_rollup(df: DataFrame) -> DataFrame:
     )
 
 
-ROLLUP_STORE = stores.Family("rollup", ("events",), "events", f"rollup-v1-{ROLLUP_DELTA_DAYS}")
+ROLLUP_STORE = stores.Family(
+    "rollup", ("events",), "events", f"rollup-v1-{ROLLUP_DELTA_DAYS}", marker="agg/_SUCCESS"
+)
 
 
 def _cutoff_nanos(spark: SparkSession, sf_dir: str) -> int:
@@ -105,7 +106,7 @@ def ensure_rollup_store(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
     ``cutoff.txt`` sidecar next to the ``agg`` data."""
     (final,) = ROLLUP_STORE.paths(sf_dir)
     marker = os.path.join(final, "cutoff.txt")
-    if not (stores.built(os.path.join(final, "agg")) and os.path.exists(marker)):
+    if not (ROLLUP_STORE.built(final) and os.path.exists(marker)):
         cutoff = _cutoff_nanos(spark, sf_dir)
         raw = _raw_events(spark, sf_dir)
         hist = raw.filter(_cutoff_pred(raw, cutoff, "<"))
@@ -138,7 +139,7 @@ def rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     against) the from-scratch GROUP BY, while touching only
     ``ROLLUP_DELTA_DAYS`` days of raw data per refresh."""
     store, cutoff = ensure_rollup_store(spark, sf_dir)
-    hist = spark.read.parquet(os.path.join(store, "agg")).select(
+    hist = read_parquet(spark, os.path.join(store, "agg")).select(
         F.col("day").cast("date").alias("day"), "event_type", "n_events", "sum_value"
     )
     raw = _raw_events(spark, sf_dir)

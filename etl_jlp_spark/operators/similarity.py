@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_jlp_spark import stores
-from etl_jlp_spark.catalog import load_table, widen
+from etl_jlp_spark.catalog import load_table, read_parquet, widen
 from etl_jlp_spark.functions.vectors import as_double_array, static_dot
 from etl_jlp_spark.registry import query
 
@@ -228,7 +228,7 @@ def ensure_minhash_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     index (doc_id, band, key) and the shingle relation (doc_id, sh)
     needed for exact-Jaccard verification."""
     paths = MINHASH_STORE.paths(sf_dir)
-    if stores.built(*paths):
+    if MINHASH_STORE.built(*paths):
         return paths
     docs = load_table(spark, sf_dir, "documents")
     existing = docs.filter(
@@ -347,13 +347,13 @@ def _minhash_probe(
     cand = (
         new_bands.alias("n")
         .join(
-            spark.read.parquet(bands_path).alias("o"),
+            read_parquet(spark, bands_path).alias("o"),
             (F.col("n.band") == F.col("o.band")) & (F.col("n.key") == F.col("o.key")),
         )
         .select(F.col("n.doc_id").alias("doc_a"), F.col("o.doc_id").alias("doc_b"))
         .distinct()
     )
-    old_sh = spark.read.parquet(sh_path)
+    old_sh = read_parquet(spark, sh_path)
     out = _jaccard_on_candidates(bsh.unionByName(old_sh), cand, MINHASH_TAU)
     return out.select(
         F.col("doc_a").alias("doc_new"), F.col("doc_b").alias("doc_old"), "jaccard"
@@ -1016,7 +1016,7 @@ def ensure_ivf_store(
     partitions). Subsequent calls — and separate processes — reuse the
     files."""
     paths = IVF_STORE.paths(sf_dir, _ivf_algo(n_centroids))
-    if stores.built(*paths):
+    if IVF_STORE.built(*paths):
         return paths
     assigned_path, cent_path = paths
     corpus, assigned, centroids, dim = ivf_index(spark, sf_dir, n_centroids)
@@ -1042,7 +1042,7 @@ def _load_centroids(spark: SparkSession, cent_path: str) -> list[tuple[int, list
     cent_rows = _CENTROID_CACHE.get(cent_path)
     if cent_rows is None:
         cent_rows = sorted(
-            (int(r["cell"]), list(r["cv"])) for r in spark.read.parquet(cent_path).collect()
+            (int(r["cell"]), list(r["cv"])) for r in read_parquet(spark, cent_path).collect()
         )
         _CENTROID_CACHE[cent_path] = cent_rows
     return cent_rows
@@ -1069,7 +1069,7 @@ def ann_ivf_topk_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded collect (≤ IVF_N_CENTROIDS values): literal cell list makes
     # the store scan partition-prune to the probed cells only
     probe_cells = sorted({r["cell"] for r in probes.select("cell").distinct().collect()})
-    assigned = spark.read.parquet(assigned_path).filter(F.col("cell").isin(probe_cells))
+    assigned = read_parquet(spark, assigned_path).filter(F.col("cell").isin(probe_cells))
     cand = assigned.join(F.broadcast(probes), "cell").filter(
         F.col("query_id") != F.col("vec_id")
     )
@@ -1428,8 +1428,8 @@ def _semantic_dedup_impl(
     spark: SparkSession, sf_dir: str, n_centroids: int | str | None
 ) -> DataFrame:
     assigned_path, cent_path = ensure_ivf_store(spark, sf_dir, n_centroids)
-    dim = len(spark.read.parquet(cent_path).first()["cv"])  # k-row table
-    assigned = spark.read.parquet(assigned_path)
+    dim = len(read_parquet(spark, cent_path).first()["cv"])  # k-row table
+    assigned = read_parquet(spark, assigned_path)
     a = assigned.select(
         F.col("vec_id").alias("a_id"), F.col("v").alias("av"), F.col("nrm_vec_id").alias("na"),
         "cell",

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_jlp_spark import stores
-from etl_jlp_spark.catalog import load_table
+from etl_jlp_spark.catalog import load_table, read_parquet
 from etl_jlp_spark.registry import query
 
 # Fixed refresh horizon: lineitems shipped on/after this date are "the
@@ -68,7 +68,7 @@ MV_STORE = stores.Family("mv", ("priority_revenue",), "lineitem", f"mvjoin-v2-{M
 def ensure_mv_store(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the base MV (shipped before MV_CUTOFF) once."""
     (final,) = MV_STORE.paths(sf_dir)
-    if stores.built(final):
+    if MV_STORE.built(final):
         return final
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") < F.lit(MV_CUTOFF).cast("date")
@@ -97,7 +97,7 @@ def mv_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against) the from-scratch lineitem ⋈ orders GROUP BY,
     while re-joining only lineitems shipped on/after MV_CUTOFF."""
     store = ensure_mv_store(spark, sf_dir)
-    base = spark.read.parquet(store)
+    base = read_parquet(spark, store)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit(MV_CUTOFF).cast("date")
     )

@@ -42,21 +42,30 @@ def get_spark(app_name: str = "etl_jlp_spark", master: str | None = None) -> Spa
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Generated classes are cached by source text, and the default
+        # 100 entries is smaller than one sweep of the light fleet (about
+        # 110 distinct classes): the cache evicted in a cycle and every
+        # warm rep recompiled them all. 2000 holds the ~1240 distinct
+        # classes of a 60-query bench.py sweep at sf0.01 (4 cores): warm
+        # reps went from ~1510 compiles to 36-98 (queries whose code
+        # differs per run), for 217 vs 205 MiB Metaspace after four reps.
+        # Static conf: a caller's own session keeps Spark's default.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         # NEGATIVE RESULT pinned (r11): -XX:-DontCompileHugeMethods was
         # tried here. HotSpot refuses to JIT methods over 8000 bytecodes,
         # so codegen'd wide expression chains (the 64-dim static_dot
         # family compiles to 15-25 KB methods) run INTERPRETED — and the
         # flag made an isolated 1M-row scoring stage 7.8x faster. But
         # fleet-wide it measured a NET LOSS (full-sweep geomean 0.93 vs
-        # the unflagged tree in adjacent sessions): every bench rep
-        # rebuilds its plan, generated class names never repeat, so C2
-        # recompiles each huge method from scratch per run — and on the
-        # many short queries that compile time exceeds the interpreted
-        # savings. The durable fix is structural (keep generated methods
-        # small, or move wide arithmetic to numpy like knn_loo's
-        # mapInPandas scorer); on a long-lived production cluster where
-        # plans are reused the flag may still pay — revisit there, not
-        # here.
+        # the unflagged tree in adjacent sessions): C2 recompiled each
+        # huge method from scratch per bench rep, and on the many short
+        # queries that compile time exceeded the interpreted savings.
+        # That was measured while the 100-entry codegen cache above was
+        # thrashing, so every rep also regenerated its classes; with the
+        # classes now reused across reps the trade-off may differ, but
+        # the flag has not been re-measured. The durable fix is still
+        # structural (keep generated methods small, or move wide
+        # arithmetic to numpy like knn_loo's mapInPandas scorer).
         .config("spark.ui.enabled", "false")
     )
     if master is not None:

@@ -6,7 +6,8 @@ part, named ``{family}_{part}_{key}``. The 8-hex ``key`` folds the
 source table's content version and the build algorithm's version
 together (``corpus_store_key``), so a regenerated corpus or a changed
 build resolves to a NEW directory instead of serving stale answers. A
-store is built when every part holds its ``_SUCCESS`` marker.
+store is built when every part holds its family's marker file
+(``_SUCCESS`` unless the family declares another).
 
 Each ``ensure_*`` declares its ``Family`` next to its build body; the
 declaration registers the family, and ``families()`` is the one list
@@ -68,17 +69,26 @@ def corpus_store_key(sf_dir: str, table: str, algo: str = "") -> str:
 
 class Family:
     """One store family: the parts it writes, the corpus table its key
-    follows, and every algo tag whose store is live (the first is the
-    default). Constructing one registers it."""
+    follows, every algo tag whose store is live (the first is the
+    default) and the marker file, relative to a part directory, whose
+    presence means the part is published. Constructing one registers
+    it."""
 
-    def __init__(self, name: str, parts: tuple[str, ...], table: str, *algos: str):
+    def __init__(
+        self, name: str, parts: tuple[str, ...], table: str, *algos: str, marker: str = "_SUCCESS"
+    ):
         self.name, self.parts, self.table, self.algos = name, parts, table, algos
+        self.marker = marker
         _FAMILIES[name] = self
 
     def paths(self, sf_dir: str, algo: str | None = None) -> tuple[str, ...]:
         """One directory per part for the store ``sf_dir`` resolves to."""
         key = corpus_store_key(sf_dir, self.table, algo or self.algos[0])
         return tuple(os.path.join(WAREHOUSE, f"{self.name}_{p}_{key}") for p in self.parts)
+
+    def built(self, *paths: str) -> bool:
+        """True when every given part of this family is already published."""
+        return all(os.path.exists(os.path.join(p, self.marker)) for p in paths)
 
 
 @functools.cache
@@ -113,11 +123,6 @@ def parse_name(name: str) -> tuple[str, bool] | None:
     if m is None or m[1].split("_")[0] not in _FAMILIES:
         return None
     return m[1], m[2] is not None
-
-
-def built(*paths: str) -> bool:
-    """True when every part of a store is already published."""
-    return all(os.path.exists(os.path.join(p, "_SUCCESS")) for p in paths)
 
 
 def publish(final: str, write: Callable[[str], object]) -> None:

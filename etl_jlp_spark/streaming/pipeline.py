@@ -37,6 +37,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from etl_jlp_spark.catalog import read_parquet
 from etl_jlp_spark.operators.audit import with_audit_columns
 
 EVENTS_SCHEMA = StructType(
@@ -257,7 +258,7 @@ def streaming_bm25_search(
     )
 
     postings_path, termstats_path, corpus_path = ensure_ir_index(spark, sf_dir)
-    cstats = spark.read.parquet(corpus_path)  # 1 row
+    cstats = read_parquet(spark, corpus_path)  # 1 row
     stream = spark.readStream.format("parquet").schema(schema).load(queries_src_dir)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -279,10 +280,10 @@ def streaming_bm25_search(
         if not terms:
             write_batch_idempotent(empty, dest_dir, batch_id)
             return
-        posts = spark.read.parquet(postings_path).filter(
+        posts = read_parquet(spark, postings_path).filter(
             F.col("pbucket").isin(term_buckets(terms)) & F.col("term").isin(terms)
         )
-        tstats = spark.read.parquet(termstats_path).filter(F.col("term").isin(terms))
+        tstats = read_parquet(spark, termstats_path).filter(F.col("term").isin(terms))
         scored = (
             posts.join(F.broadcast(tstats), "term")
             .crossJoin(F.broadcast(cstats))
@@ -567,7 +568,7 @@ def streaming_cms_monitor(
 def cms_view(spark: SparkSession, dest_dir: str) -> DataFrame:
     """The merged sketch: sum the per-batch counter partitions."""
     return (
-        spark.read.parquet(dest_dir)
+        read_parquet(spark, dest_dir)
         .groupBy("r", "bucket")
         .agg(F.sum("c").cast("long").alias("c"))
     )
@@ -662,8 +663,8 @@ def streaming_cc_maintain(
         ptr = _ptr()
         if int(batch_id) <= ptr["through_batch"]:
             return
-        stored_edges = spark.read.parquet(ptr["edges"])
-        stored_labels = spark.read.parquet(ptr["labels"])
+        stored_edges = read_parquet(spark, ptr["edges"])
+        stored_labels = read_parquet(spark, ptr["labels"])
         bsh = _word_shingles(batch_df).persist()
         try:  # release the batch cache even on a failed batch (r11 ADVICE pattern)
             bands = _minhash_bands(bsh)
@@ -673,13 +674,13 @@ def streaming_cc_maintain(
             # are found no matter how the arriving corpus is sliced. On a
             # replay the current batch's own delta may already be present;
             # the resulting self-probe pairs re-merge as no-ops (semilattice).
-            prev_bands = spark.read.parquet(bands_path)
-            prev_sh = spark.read.parquet(sh_path)
+            prev_bands = read_parquet(spark, bands_path)
+            prev_sh = read_parquet(spark, sh_path)
             if os.path.isdir(xbands_dir):
                 prev_bands = prev_bands.unionByName(
-                    spark.read.parquet(xbands_dir).drop("batch_id")
+                    read_parquet(spark, xbands_dir).drop("batch_id")
                 )
-                prev_sh = prev_sh.unionByName(spark.read.parquet(xsh_dir).drop("batch_id"))
+                prev_sh = prev_sh.unionByName(read_parquet(spark, xsh_dir).drop("batch_id"))
             o = prev_bands.alias("o")
             n = bands.alias("n")
             probe_cand = (
@@ -751,7 +752,7 @@ def cc_state_labels(spark: SparkSession, state_dir: str) -> DataFrame:
     import os
 
     with open(os.path.join(state_dir, "_POINTER.json")) as fh:
-        return spark.read.parquet(json.load(fh)["labels"])
+        return read_parquet(spark, json.load(fh)["labels"])
 
 
 def streaming_hll_monitor(
@@ -789,7 +790,7 @@ def hll_view(spark: SparkSession, dest_dir: str) -> DataFrame:
     from etl_jlp_spark.operators.sketches import hll_estimate
 
     regs = (
-        spark.read.parquet(dest_dir)
+        read_parquet(spark, dest_dir)
         .groupBy("day", "bucket")
         .agg(F.max("m").alias("m"))
     )
@@ -835,7 +836,7 @@ def kmv_view(spark: SparkSession, dest_dir: str) -> DataFrame:
     from etl_jlp_spark.operators.kmv import KMV_K, KMV_M
 
     merged = (
-        spark.read.parquet(dest_dir)
+        read_parquet(spark, dest_dir)
         .select("g", "hv")
         .distinct()
         .withColumn("rn", F.row_number().over(Window.partitionBy("g").orderBy("hv")))
@@ -891,7 +892,7 @@ def did_view(spark: SparkSession, dest_dir: str) -> DataFrame:
     from etl_jlp_spark.plans.regression import did_readout
 
     cells = (
-        spark.read.parquet(dest_dir)
+        read_parquet(spark, dest_dir)
         .groupBy("event_type", "treated", "post")
         .agg(F.sum("n").cast("long").alias("n"), F.sum("s").cast("long").alias("s"))
     )
@@ -1047,7 +1048,7 @@ def streaming_sprt_monitor(
         prior = [i for i in ids if i < int(batch_id)]
         if not prior:
             return None
-        return spark.read.parquet(os.path.join(state_dir, f"batch_id={max(prior)}"))
+        return read_parquet(spark, os.path.join(state_dir, f"batch_id={max(prior)}"))
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_counts = (

@@ -35,6 +35,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_jlp_spark.catalog import read_parquet
 from etl_jlp_spark.operators.rollup import _day_rollup, _with_day
 
 _POINTER = "_POINTER.json"
@@ -85,11 +86,11 @@ def rollup_view(spark: SparkSession, store_dir: str) -> DataFrame:
     ptr = _pointer(store_dir)
     parts: list[DataFrame] = []
     if ptr["base"]:
-        parts.append(spark.read.parquet(os.path.join(store_dir, "base", ptr["base"])))
+        parts.append(read_parquet(spark, os.path.join(store_dir, "base", ptr["base"])))
     unfolded = [b for b in _delta_ids(store_dir) if b > ptr["through_batch"]]
     if unfolded:
         parts.append(
-            spark.read.parquet(os.path.join(store_dir, "deltas"))
+            read_parquet(spark, os.path.join(store_dir, "deltas"))
             .filter(F.col("batch_id").isin(unfolded))
             .drop("batch_id")
         )
@@ -168,10 +169,10 @@ def rollup_view_as_of(
         )
     parts: list[DataFrame] = []
     if base_v is not None:
-        parts.append(spark.read.parquet(os.path.join(store_dir, "base", f"v{base_v}")))
+        parts.append(read_parquet(spark, os.path.join(store_dir, "base", f"v{base_v}")))
     if deltas:
         parts.append(
-            spark.read.parquet(os.path.join(store_dir, "deltas"))
+            read_parquet(spark, os.path.join(store_dir, "deltas"))
             .filter(F.col("batch_id").isin(deltas))
             .drop("batch_id")
         )

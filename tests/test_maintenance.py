@@ -415,3 +415,19 @@ def test_store_inventory_and_vacuum_invariance(spark):
     finally:
         shutil.rmtree(orphan, ignore_errors=True)
         shutil.rmtree(temp, ignore_errors=True)
+
+
+def test_store_inventory_counts_built_rollup_store(spark):
+    """The rollup store publishes its marker under ``agg/``, not at the
+    part root; the inventory must still count its live store as built."""
+    import __spark_entry__ as ent
+    from etl_jlp_spark.operators.rollup import ROLLUP_STORE, ensure_rollup_store
+
+    store, _cutoff = ensure_rollup_store(spark, SF_SMALL)
+    assert ROLLUP_STORE.built(store)
+    inv = {
+        r["family"]: r
+        for r in ent.queries()["store_inventory_report"](spark, SF_SMALL).collect()
+    }
+    assert inv["rollup_events"]["n_live_keys"] == 1
+    assert inv["rollup_events"]["n_live_built"] == 1
