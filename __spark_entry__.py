@@ -72,6 +72,7 @@ from etl_jlp_spark.plans import (  # noqa: E402, F401
     tpch_extra,
 )
 from etl_jlp_spark.quality import drift, report  # noqa: E402, F401
+from etl_jlp_spark.session import ship_package  # noqa: E402
 
 # ---------------------------------------------------------------------------
 # Correctness-window rotation (SURVEY.md §8): the driver records only the
@@ -80,15 +81,17 @@ from etl_jlp_spark.quality import drift, report  # noqa: E402, F401
 # the in-repo replica of the driver gate — now with --pandas, the
 # driver-materialization replica that reproduced the r09 cliffs red row).
 # ---------------------------------------------------------------------------
-# Round-11 window (will be recorded as CORRECTNESS_r11): first the ten
-# round-10 rewrite clusters the r10 driver window did not sample (VERDICT
-# r10 item 4 — their equivalence rests on the builder's own sweeps until
-# the driver oracles them), then every query rewritten THIS round, the
-# four flagships, and as much of the never-driver-checked tail (45 names
-# as of r11) as fits the ~50-row window.
-_R12_PRIORITY = [
-    # Round-10 rewrite clusters the driver has NOT yet oracle-verified
-    # (VERDICT r10 "What's wrong" #4) — lead the round-11 window.
+# The list below leads the window, in order:
+# - ten query clusters whose plans were rewritten in round 10 and that no
+#   driver window has yet checked against its oracle;
+# - seven queries queued as round-11 rewrites (no code change reached
+#   spearman_corr_matrix or theil_sen_trend; golden_record_merge,
+#   minhash_recall_report, hits_authorities and hits_top_hubs were
+#   rewritten in round 11 but are not listed);
+# - the four flagships, in the window every time;
+# - the first 29 of the queries no driver window has checked yet.
+_ROTATION_PRIORITY = [
+    # Round-10 rewrite clusters not yet checked by a driver window.
     "fuzzy_join_editdist",
     "dedup_minhash_lsh",
     "graph_modularity",
@@ -99,7 +102,7 @@ _R12_PRIORITY = [
     "ann_ivf_topk",
     "ivf_nprobe_sweep",
     "semantic_dedup",
-    # Queries rewritten THIS round (11) — must be driver-verified.
+    # Queued as round-11 rewrites (see above for what actually changed).
     "doc_similarity_tfidf_topk",
     "winnowing_fingerprint_stats",
     "contrastive_triplets",
@@ -112,8 +115,8 @@ _R12_PRIORITY = [
     "curate_documents",
     "training_data_pipeline",
     "corpus_index_pipeline",
-    # Never-driver-checked remainder (45 as of r11), first ~29;
-    # overflow (conformal_forecast_interval onward) rotates next.
+    # Never driver-checked (45 as of round 11): the first 29; the rest
+    # (conformal_forecast_interval onward) are next in line.
     "mann_whitney_ab",
     "event_transition_matrix",
     "interarrival_burstiness",
@@ -147,12 +150,16 @@ _R12_PRIORITY = [
 
 
 def _rotated() -> None:
-    registry.reorder([n for n in _R12_PRIORITY if n in registry.QUERIES])
+    registry.reorder([n for n in _ROTATION_PRIORITY if n in registry.QUERIES])
 
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the reference's full preprocessing chain (dedup →
-    window-time → sessionize → time-on-page → audit) as one plan."""
+    window-time → sessionize → time-on-page → audit) as one plan.
+    First puts the package on the session's Python workers' path
+    (``ship_package``), so the queries' Arrow UDFs run from any
+    working directory."""
+    ship_package(spark)
     return pipeline.preprocess_pipeline(spark, "/root/testdata/sf0.001")
 
 

@@ -328,18 +328,12 @@ def run_on_schedule(
     with an unchanged clock is a no-op — the state file makes the
     poller idempotent, the way the streaming checkpoints make the
     ingest twins idempotent."""
-    import os
     from datetime import datetime
 
-    last = None
-    try:
-        with open(state_path, encoding="utf-8") as f:
-            state = json.load(f)
-        if state.get("last_logical_date"):
-            last = datetime.fromisoformat(state["last_logical_date"])
-    except FileNotFoundError:
-        pass
+    from etl_jlp_spark.stores import read_pointer, write_pointer
 
+    last = read_pointer(state_path, {}).get("last_logical_date")
+    last = datetime.fromisoformat(last) if last else None
     reports = []
     for logical in schedule.due_runs(last, now, catchup=catchup):
         report = pipeline.run(
@@ -349,8 +343,5 @@ def run_on_schedule(
         )
         report["logical_date"] = logical.isoformat()
         reports.append(report)
-        tmp = f"{state_path}.tmp-{os.getpid()}"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump({"last_logical_date": logical.isoformat()}, f)
-        os.replace(tmp, state_path)  # atomic: state never half-written
+        write_pointer(state_path, {"last_logical_date": logical.isoformat()})
     return reports

@@ -22,6 +22,21 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# The directory holding this package (the repo root in a checkout).
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def ship_package(spark: SparkSession) -> SparkSession:
+    """Put ``PACKAGE_ROOT`` on the Python workers' ``sys.path``. Arrow
+    UDFs (mapInPandas, applyInPandas) reference functions of this
+    package, and a worker otherwise imports only from the driver's
+    working directory. Every Python function built afterwards carries
+    the path; idempotent, once per session."""
+    includes = spark.sparkContext._python_includes
+    if PACKAGE_ROOT not in includes:
+        includes.append(PACKAGE_ROOT)
+    return spark
+
 
 def get_spark(app_name: str = "etl_jlp_spark", master: str | None = None) -> SparkSession:
     """Build (or reuse) the tuned SparkSession."""
@@ -72,4 +87,4 @@ def get_spark(app_name: str = "etl_jlp_spark", master: str | None = None) -> Spa
         builder = builder.master(master)
     elif not os.environ.get("SPARK_MASTER"):
         builder = builder.master(f"local[{DEFAULT_CPUS}]")
-    return builder.getOrCreate()
+    return ship_package(builder.getOrCreate())

@@ -1,5 +1,8 @@
 """Persisted per-corpus index stores: naming, content keys, atomic
-publish and the janitor's family list.
+publish and the janitor's family list, plus the atomic JSON pointer
+(``read_pointer``/``write_pointer``) that versioned state commits
+through: the streaming rollup and cluster stores, and the scheduler's
+run state.
 
 Every store lives under ``<repo>/spark-warehouse`` as one directory per
 part, named ``{family}_{part}_{key}``. The 8-hex ``key`` folds the
@@ -30,6 +33,7 @@ from __future__ import annotations
 
 import functools
 import hashlib
+import json
 import os
 import re
 import shutil
@@ -136,6 +140,30 @@ def publish(final: str, write: Callable[[str], object]) -> None:
         os.rename(tmp, final)
     except OSError:  # another process won the race — use its store
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def read_pointer(path: str, fresh: dict | None = None) -> dict:
+    """The JSON pointer at ``path``, or ``fresh`` when none was ever
+    committed (without ``fresh``, a missing pointer raises). An
+    unreadable pointer always raises: read as fresh it would make a
+    reader drop, and a janitor delete, the state it points to."""
+    try:
+        with open(path, encoding="utf-8") as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        if fresh is None:
+            raise
+        return fresh
+
+
+def write_pointer(path: str, value: dict) -> None:
+    """Commit ``value`` as the pointer at ``path``. It is written to a
+    per-pid temp file and moved over ``path`` with ``os.replace``, so a
+    reader sees the old pointer or the new one, never half of one."""
+    tmp = f"{path}.tmp-{os.getpid()}"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        json.dump(value, fh)
+    os.replace(tmp, path)
 
 
 def replace_dir(tmp: str, dest: str) -> None:

@@ -4,26 +4,35 @@ incremental pipeline.
 Reference: preprocessing_streaming_incremental_load.py:39-101 polls a
 lake folder, lists files newer than a watermark row in a CSV, reads
 them, transforms, writes, and advances the watermark by hand. In
-Spark, `readStream` + checkpointing IS that loop: the file source
-tracks processed files (the watermark), `withWatermark` bounds
-event-time state, and `foreachBatch`/sinks write downstream — exactly
-once, restartable, no hand-rolled bookkeeping.
+Spark, ``readStream`` + checkpointing IS that loop: the file source
+tracks processed files (the watermark) and ``withWatermark`` bounds
+event-time state. The transforms reuse the batch operator functions —
+one definition, two execution modes.
 
-Shapes provided:
-- ``stream_events``          — file-source stream over an events dir
-- ``windowed_event_counts``  — watermark + tumbling event-time window agg
-  (the streaming twin of plans.analytics.events_by_type_day)
-- ``streaming_sessionize``   — native ``session_window`` (30-min gap),
-  the streaming twin of operators.sessionize (bounded state per user)
-- ``incremental_to_bronze``  — audit-stamped append job via
-  ``trigger(availableNow=True)`` (the batch-ish catch-up run the
-  reference's Airflow DAG schedules)
+The exactly-once protocol, here and in ``rollup_sink``:
 
-All transforms reuse the batch operator functions — one definition,
-two execution modes.
+- ``launch`` starts every stream as one ``availableNow`` catch-up run
+  (process the backlog, then stop — the scheduled run of the
+  reference's Airflow DAG) checkpointed in its own directory. The
+  checkpoint delivers each micro-batch at least once: a batch whose
+  commit did not land replays on restart.
+- Each micro-batch writes its output with ``write_batch_idempotent``
+  to its own ``batch_id=N`` directory, overwriting, so a replay lands
+  on the same path and the sink is exactly-once. ``sink_batches`` is
+  that sink for one transform per batch; ``batch_ids`` lists the
+  directories. (``incremental_to_bronze`` uses Spark's parquet file
+  sink, whose own commit log is exactly-once.)
+- State replaced as a whole (the rollup base, the cluster store) goes
+  to a new versioned directory and is committed by swapping a JSON
+  pointer (``stores.write_pointer``); the pointer's batch watermark
+  drops replays it already covers.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +48,7 @@ from pyspark.sql.types import (
 
 from etl_jlp_spark.catalog import read_parquet
 from etl_jlp_spark.operators.audit import with_audit_columns
+from etl_jlp_spark.stores import read_pointer, write_pointer
 
 EVENTS_SCHEMA = StructType(
     [
@@ -55,6 +65,21 @@ SESSION_GAP = "30 minutes"
 DEFAULT_WATERMARK_DELAY = "1 hour"
 
 
+def launch(
+    stream: DataFrame, checkpoint_dir: str, sink: Callable[[DataFrame, int], None] | str
+) -> StreamingQuery:
+    """Start ``stream`` as one availableNow run checkpointed in
+    ``checkpoint_dir``; every stream of the engine starts here. ``sink``
+    is a ``foreachBatch`` handler, or a directory that Spark's parquet
+    file sink appends to."""
+    writer = stream.writeStream
+    if isinstance(sink, str):
+        writer = writer.format("parquet").option("path", sink).outputMode("append")
+    else:
+        writer = writer.foreachBatch(sink)
+    return writer.option("checkpointLocation", checkpoint_dir).trigger(availableNow=True).start()
+
+
 def write_batch_idempotent(df: DataFrame, dest_dir: str, batch_id: int) -> None:
     """Idempotent ``foreachBatch`` parquet write. A blind
     ``.mode("append")`` inside foreachBatch is only AT-LEAST-once: a
@@ -65,9 +90,32 @@ def write_batch_idempotent(df: DataFrame, dest_dir: str, batch_id: int) -> None:
     exactly-once end-to-end. Readers see ``dest_dir`` as a
     batch_id-partitioned parquet tree (drop the ``batch_id`` column if
     unwanted)."""
-    import os
-
     df.write.mode("overwrite").parquet(os.path.join(dest_dir, f"batch_id={int(batch_id)}"))
+
+
+def batch_ids(dest_dir: str) -> list[int]:
+    """Ascending ids of the ``batch_id=N`` directories under
+    ``dest_dir``; none while it does not exist."""
+    try:
+        names = os.listdir(dest_dir)
+    except FileNotFoundError:
+        return []
+    return sorted(int(d.split("=", 1)[1]) for d in names if d.startswith("batch_id="))
+
+
+def sink_batches(
+    stream: DataFrame,
+    transform: Callable[[DataFrame], DataFrame],
+    dest_dir: str,
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Launch ``stream`` writing ``transform(batch)`` of each micro-batch
+    to ``dest_dir`` with ``write_batch_idempotent``."""
+    return launch(
+        stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: write_batch_idempotent(transform(batch_df), dest_dir, batch_id),
+    )
 
 
 def stream_events(
@@ -138,23 +186,15 @@ def incremental_to_bronze(
     fmt: str = "parquet",
 ) -> StreamingQuery:
     """Land-zone → bronze incremental load: read new files, stamp audit
-    columns, append parquet. ``availableNow`` processes the backlog and
-    stops — the scheduled-catch-up execution model of the reference's
-    Airflow DAG, but with exactly-once file tracking."""
-    stamped = with_audit_columns(stream_events(spark, src_dir, fmt))
-    return (
-        stamped.writeStream.format("parquet")
-        .option("path", dest_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    columns, append parquet through Spark's file sink (exactly-once by
+    its own commit log)."""
+    return launch(with_audit_columns(stream_events(spark, src_dir, fmt)), checkpoint_dir, dest_dir)
 
 
 def stream_documents(spark: SparkSession, src_dir: str, schema) -> DataFrame:
-    """File-source stream over a documents dir (new files = new corpus
-    shards arriving from crawling/ingest)."""
+    """File-source stream over a parquet dir of the given schema (new
+    files = new shards arriving: corpus documents, search queries,
+    media)."""
     return spark.readStream.format("parquet").schema(schema).load(src_dir)
 
 
@@ -171,22 +211,14 @@ def streaming_decontaminate(
     broadcast into every micro-batch; each arriving corpus shard runs
     the same broadcast equi-join + per-doc agg via ``foreachBatch``.
     A document lives entirely inside one file → one micro-batch, so
-    per-doc overlap needs NO cross-batch streaming state; results land
-    exactly-once via the idempotent per-batch_id overwrite
-    (``write_batch_idempotent`` — a blind append here would duplicate
-    rows on crash-replay)."""
+    per-doc overlap needs NO cross-batch streaming state."""
     from etl_jlp_spark.operators.similarity import decon_overlap
 
-    stream = stream_documents(spark, docs_src_dir, schema)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(decon_overlap(batch_df, bench_shingles), dest_dir, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_documents(spark, docs_src_dir, schema),
+        lambda batch_df: decon_overlap(batch_df, bench_shingles),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -205,21 +237,14 @@ def streaming_lm_score(
     arriving corpus shard is scored by the same
     ``score_docs_with_lm`` the batch query uses. A document lives
     entirely inside one file → one micro-batch, so the per-doc mean
-    log-prob needs NO cross-batch state; results land exactly-once via
-    the idempotent per-batch_id overwrite (``write_batch_idempotent``
-    — a blind append here would duplicate rows on crash-replay)."""
+    log-prob needs NO cross-batch state."""
     from etl_jlp_spark.operators.ir import score_docs_with_lm
 
-    stream = stream_documents(spark, docs_src_dir, schema)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(score_docs_with_lm(batch_df, lm, lm_stats), dest_dir, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_documents(spark, docs_src_dir, schema),
+        lambda batch_df: score_docs_with_lm(batch_df, lm, lm_stats),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -243,7 +268,6 @@ def streaming_bm25_search(
     pairs broadcast into the join. Top-{K} per query via a
     query_id-partitioned rank window (high-cardinality key — the
     multi-query generalization of the batch probe's TakeOrdered).
-    Exactly-once via the idempotent per-batch_id overwrite.
 
     Reference: dwh_lab keyword ranking (SURVEY §2) has no serving
     path at all — this is the beyond-reference production shape."""
@@ -259,9 +283,8 @@ def streaming_bm25_search(
 
     postings_path, termstats_path, corpus_path = ensure_ir_index(spark, sf_dir)
     cstats = read_parquet(spark, corpus_path)  # 1 row
-    stream = spark.readStream.format("parquet").schema(schema).load(queries_src_dir)
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
+    def top_k(batch_df: DataFrame) -> DataFrame:
         qterms = batch_df.select(
             "query_id",
             F.explode(
@@ -274,12 +297,10 @@ def streaming_bm25_search(
         )
         # bounded collect: the BATCH's distinct terms, not the vocab
         terms = [r["term"] for r in qterms.select("term").distinct().collect()]
-        empty = spark.createDataFrame(
-            [], "query_id bigint, doc_id bigint, bm25 double, rank bigint"
-        )
         if not terms:
-            write_batch_idempotent(empty, dest_dir, batch_id)
-            return
+            return spark.createDataFrame(
+                [], "query_id bigint, doc_id bigint, bm25 double, rank bigint"
+            )
         posts = read_parquet(spark, postings_path).filter(
             F.col("pbucket").isin(term_buckets(terms)) & F.col("term").isin(terms)
         )
@@ -292,17 +313,13 @@ def streaming_bm25_search(
             .agg(F.round(F.sum(bm25_contrib()), 4).alias("bm25"))
         )
         w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-        topk = (
+        return (
             scored.withColumn("rank", F.row_number().over(w).cast("long"))
             .filter(F.col("rank") <= BM25_TOP_K)
         )
-        write_batch_idempotent(topk, dest_dir, batch_id)
 
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_documents(spark, queries_src_dir, schema), top_k, dest_dir, checkpoint_dir
     )
 
 
@@ -320,22 +337,14 @@ def streaming_span_check(
     (``spans.gram_directory`` — gram-set-sized, (nd, only_doc) excludes
     self-matches so replaying the reference corpus reproduces the batch
     rows exactly). Per-doc island merging needs no cross-batch state (a
-    doc lives in one file → one micro-batch); results land exactly-once
-    via the idempotent per-batch_id overwrite."""
+    doc lives in one file → one micro-batch)."""
     from etl_jlp_spark.operators.spans import span_report_vs_directory
 
-    stream = stream_documents(spark, docs_src_dir, schema)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(
-            span_report_vs_directory(batch_df, gram_directory), dest_dir, batch_id
-        )
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_documents(spark, docs_src_dir, schema),
+        lambda batch_df: span_report_vs_directory(batch_df, gram_directory),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -458,19 +467,14 @@ def streaming_scd2_enrich(
     their event time (``operators.scd.enrich_asof``) against a static
     SCD2 interval relation — the streaming half of the Type-2 dimension
     story: `scd2_apply` maintains the dimension, this serves it to the
-    stream. Exactly-once via the idempotent per-batch_id overwrite."""
+    stream."""
     from etl_jlp_spark.operators.scd import enrich_asof
 
-    stream = stream_events(spark, src_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(enrich_asof(batch_df, intervals), dest_dir, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_events(spark, src_dir),
+        lambda batch_df: enrich_asof(batch_df, intervals),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -485,25 +489,15 @@ def streaming_psi_monitor(
     distribution is scored (PSI) against a FIXED reference bucket-count
     relation — the streaming half of ``psi_drift_report``
     (quality/drift.py computes the batch twin; both share
-    ``bucket_counts`` / ``psi_against_reference``). Exactly-once via
-    the idempotent per-batch_id overwrite; downstream alerting reads
-    the per-batch PSI rows and applies the 0.1/0.25 thresholds."""
+    ``bucket_counts`` / ``psi_against_reference``). Downstream alerting
+    reads the per-batch PSI rows and applies the 0.1/0.25 thresholds."""
     from etl_jlp_spark.quality.drift import bucket_counts, psi_against_reference
 
-    stream = stream_events(spark, src_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(
-            psi_against_reference(bucket_counts(batch_df), ref_counts),
-            dest_dir,
-            batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_events(spark, src_dir),
+        lambda batch_df: psi_against_reference(bucket_counts(batch_df), ref_counts),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -520,21 +514,15 @@ def streaming_anomaly_monitor(
     ``plans.timeseries.baseline_stats``) — the streaming half of
     ``anomaly_zscore``; both share ``daily_counts`` and the
     ``anomaly_flag_cols`` algebra, so a day the batch query would flag
-    against the same baseline is flagged here too. Exactly-once via the
-    idempotent per-batch_id overwrite; the baseline is type-count-sized
-    and broadcast into every micro-batch."""
+    against the same baseline is flagged here too. The baseline is
+    type-count-sized and broadcast into every micro-batch."""
     from etl_jlp_spark.plans.timeseries import score_daily_anomaly
 
-    stream = stream_events(spark, src_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(score_daily_anomaly(batch_df, baseline), dest_dir, batch_id)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_events(spark, src_dir),
+        lambda batch_df: score_daily_anomaly(batch_df, baseline),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -545,24 +533,15 @@ def streaming_cms_monitor(
     checkpoint_dir: str,
 ) -> StreamingQuery:
     """Continuous count-min frequency state: each micro-batch writes its
-    OWN ≤ d×w counter relation (operators.sketches.cms_counters) to a
-    per-batch_id partition — idempotent under replay — and the serving
-    sketch is the SUM over batch partitions (``cms_view``), exact by
-    counter additivity. Total state on disk is #batches × d×w rows at
-    ANY key cardinality; estimates from the merged view are identical
-    to a batch build over the same rows (test-pinned)."""
+    OWN ≤ d×w counter relation (operators.sketches.cms_counters) to its
+    batch_id partition, and the serving sketch is the SUM over batch
+    partitions (``cms_view``), exact by counter additivity. Total state
+    on disk is #batches × d×w rows at ANY key cardinality; estimates
+    from the merged view are identical to a batch build over the same
+    rows (test-pinned)."""
     from etl_jlp_spark.operators.sketches import cms_counters
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(cms_counters(batch_df), dest_dir, batch_id)
-
-    return (
-        stream_events(spark, src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return sink_batches(stream_events(spark, src_dir), cms_counters, dest_dir, checkpoint_dir)
 
 
 def cms_view(spark: SparkSession, dest_dir: str) -> DataFrame:
@@ -586,26 +565,17 @@ def streaming_phash_dedup(
     hashed in-batch (Arrow mapInPandas over the in-repo codecs) and
     probe a STATIC hashed index (the already-ingested corpus's
     (media_id, phash) relation — 16 bytes/image, broadcastable far
-    beyond any realistic corpus); verified pairs (hamming ≤ 7) land
-    exactly-once via the idempotent per-batch_id overwrite. The
-    arriving batch never re-hashes the indexed corpus — the amortized
-    production shape, same discipline as dedup_minhash_prebuilt."""
+    beyond any realistic corpus) and land as verified pairs (hamming
+    ≤ 7). The arriving batch never re-hashes the indexed corpus — the
+    amortized production shape, same discipline as
+    dedup_minhash_prebuilt."""
     from etl_jlp_spark.multimodal.phash import image_phash, phash_pairs_vs_index
 
-    stream = spark.readStream.format("parquet").schema(media_schema).load(media_src_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(
-            phash_pairs_vs_index(image_phash(batch_df), index_hashed),
-            dest_dir,
-            batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_documents(spark, media_src_dir, media_schema),
+        lambda batch_df: phash_pairs_vs_index(image_phash(batch_df), index_hashed),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -621,18 +591,13 @@ def streaming_cc_maintain(
     incremental dedup story: arriving corpus shards probe the STATIC
     minhash store for verified pairs (plus their own internal pairs),
     and the (edges, labels) cluster state advances through versioned
-    directories committed by an atomic pointer swap (the rollup sink's
-    commit protocol). Two independent replay guards: the pointer drops
+    directories committed by the pointer swap of the module protocol.
+    Two independent replay guards: the pointer drops
     batches at/below its watermark, and cluster merge itself is a
     join-semilattice (``merge_pairs_into_clusters``) — re-merging the
     same pairs is a no-op, so even a duplicated delivery cannot corrupt
     the clustering."""
-    import json
-    import os
-    import shutil
-
     from etl_jlp_spark.operators.components import (
-        connected_components,
         ensure_cc_store,
         merge_pairs_into_clusters,
     )
@@ -649,18 +614,11 @@ def streaming_cc_maintain(
     bands_path, sh_path = ensure_minhash_store(spark, sf_dir)
     edges0, labels0 = ensure_cc_store(spark, sf_dir)
 
-    def _ptr() -> dict:
-        try:
-            with open(pointer_path) as fh:
-                return json.load(fh)
-        except (OSError, ValueError):
-            return {"edges": edges0, "labels": labels0, "through_batch": -1}
-
     xbands_dir = os.path.join(state_dir, "xbands")
     xsh_dir = os.path.join(state_dir, "xshingles")
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        ptr = _ptr()
+        ptr = read_pointer(pointer_path, {"edges": edges0, "labels": labels0, "through_batch": -1})
         if int(batch_id) <= ptr["through_batch"]:
             return
         stored_edges = read_parquet(spark, ptr["edges"])
@@ -719,12 +677,9 @@ def streaming_cc_maintain(
             v_labels = os.path.join(state_dir, f"labels_v{int(batch_id)}")
             edges.write.mode("overwrite").parquet(v_edges)
             labels.write.mode("overwrite").parquet(v_labels)
-            tmp = f"{pointer_path}.tmp-{os.getpid()}"
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {"edges": v_edges, "labels": v_labels, "through_batch": int(batch_id)}, fh
-                )
-            os.replace(tmp, pointer_path)
+            write_pointer(
+                pointer_path, {"edges": v_edges, "labels": v_labels, "through_batch": int(batch_id)}
+            )
             # superseded state versions are garbage after the swap
             for d in os.listdir(state_dir):
                 full = os.path.join(state_dir, d)
@@ -737,22 +692,12 @@ def streaming_cc_maintain(
         finally:
             bsh.unpersist()
 
-    stream = spark.readStream.format("parquet").schema(docs_schema).load(docs_src_dir)
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return launch(stream_documents(spark, docs_src_dir, docs_schema), checkpoint_dir, handle)
 
 
 def cc_state_labels(spark: SparkSession, state_dir: str) -> DataFrame:
     """Current cluster labels from the maintainer's pointer."""
-    import json
-    import os
-
-    with open(os.path.join(state_dir, "_POINTER.json")) as fh:
-        return read_parquet(spark, json.load(fh)["labels"])
+    return read_parquet(spark, read_pointer(os.path.join(state_dir, "_POINTER.json"))["labels"])
 
 
 def streaming_hll_monitor(
@@ -763,25 +708,19 @@ def streaming_hll_monitor(
 ) -> StreamingQuery:
     """Continuous cardinality state: each micro-batch writes its OWN
     ≤ days×64 HLL register relation (operators.sketches.hll_registers)
-    to a per-batch_id partition — idempotent under replay — and the
-    serving estimate MAX-merges register partitions (``hll_view``),
+    to its batch_id partition, and the serving estimate MAX-merges
+    register partitions (``hll_view``),
     exact by the max-merge property of HLL registers. State on disk is
     #batches × days×64 rows at ANY event-id cardinality; the merged
     estimate is identical to a batch build over the same rows
     (test-pinned)."""
     from etl_jlp_spark.operators.sketches import hll_registers
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
+    def registers(batch_df: DataFrame) -> DataFrame:
         days = batch_df.select(F.col("ts").cast("date").alias("day"), "event_id")
-        write_batch_idempotent(hll_registers(days, "event_id", ["day"]), dest_dir, batch_id)
+        return hll_registers(days, "event_id", ["day"])
 
-    return (
-        stream_events(spark, src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return sink_batches(stream_events(spark, src_dir), registers, dest_dir, checkpoint_dir)
 
 
 def hll_view(spark: SparkSession, dest_dir: str) -> DataFrame:
@@ -805,24 +744,19 @@ def streaming_kmv_monitor(
 ) -> StreamingQuery:
     """Continuous distinct-user state per event type as KMV/theta
     sketches (operators.kmv): each micro-batch writes its OWN ≤
-    types×K sketch rows to a per-batch_id partition — idempotent under
-    replay — and the serving estimate union-merges partitions and
+    types×K sketch rows to its batch_id partition, and the serving
+    estimate union-merges partitions and
     keeps the K smallest hashes per type (``kmv_view``), exact by the
     KMV merge property (sketch(A∪B) = topK(sketch(A) ∪ sketch(B)),
     test-pinned against the batch build). Unlike the HLL twin this
     state supports SET ALGEBRA across streams (kmv_type_overlap)."""
     from etl_jlp_spark.operators.kmv import kmv_sketch
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        sk = kmv_sketch(batch_df, "event_type", "user_id").select("g", "hv")
-        write_batch_idempotent(sk, dest_dir, batch_id)
-
-    return (
-        stream_events(spark, src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_events(spark, src_dir),
+        lambda batch_df: kmv_sketch(batch_df, "event_type", "user_id").select("g", "hv"),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -865,8 +799,8 @@ def streaming_did_monitor(
 ) -> StreamingQuery:
     """Continuous experiment readout state: each micro-batch writes its
     OWN (event_type, treated, post) exact e4-integer cell sums
-    (plans.regression.did_cells) to a per-batch_id partition —
-    idempotent under replay — and the serving readout sums the cells
+    (plans.regression.did_cells) to its batch_id partition, and the
+    serving readout sums the cells
     across batch partitions (``did_view``), exact by additivity of
     (n, Σv). The merged readout is row-identical to running
     ``did_lift_report`` over the union of arrived events
@@ -874,16 +808,7 @@ def streaming_did_monitor(
     diverges from the offline analysis."""
     from etl_jlp_spark.plans.regression import did_cells
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(did_cells(batch_df), dest_dir, batch_id)
-
-    return (
-        stream_events(spark, src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return sink_batches(stream_events(spark, src_dir), did_cells, dest_dir, checkpoint_dir)
 
 
 def did_view(spark: SparkSession, dest_dir: str) -> DataFrame:
@@ -908,9 +833,7 @@ def streaming_media_metadata(media_stream: DataFrame) -> DataFrame:
     after upload instead of at the next full-corpus sweep.
 
     mapInPandas is stateless row-wise work, so it composes with any
-    streaming source unchanged; exactly-once delivery to the report
-    table is the standard per-batch_id idempotent write
-    (write_batch_idempotent), replay-tested like every sink here."""
+    streaming source unchanged."""
     from etl_jlp_spark.multimodal.containers import media_metadata_report
 
     return media_metadata_report(media_stream)
@@ -919,19 +842,10 @@ def streaming_media_metadata(media_stream: DataFrame) -> DataFrame:
 def run_media_metadata_stream(
     spark: SparkSession, src_dir: str, dest_dir: str, checkpoint: str, schema
 ) -> None:
-    """File-source stream over staged media parquet → metadata report →
-    idempotent per-batch append; blocks until the backlog drains."""
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    out = streaming_media_metadata(stream)
-    q = (
-        out.writeStream.foreachBatch(
-            lambda df, bid: write_batch_idempotent(df, dest_dir, bid)
-        )
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    """File-source stream over staged media parquet → metadata report
+    per batch; blocks until the backlog drains."""
+    stream = streaming_media_metadata(stream_documents(spark, src_dir, schema))
+    sink_batches(stream, lambda batch_df: batch_df, dest_dir, checkpoint).awaitTermination()
 
 
 def streaming_w1_monitor(
@@ -948,24 +862,14 @@ def streaming_w1_monitor(
     ``wasserstein_value_drift``, sharing its grid-integral core
     (plans/nonparam.w1_against_reference), the same pairing
     streaming_psi_monitor has with psi_drift_report (PSI alarms on
-    significance-ish score; W1 reports how FAR the money moved).
-    Exactly-once via the idempotent per-batch_id overwrite."""
+    significance-ish score; W1 reports how FAR the money moved)."""
     from etl_jlp_spark.plans.nonparam import cents_counts, w1_against_reference
 
-    stream = stream_events(spark, src_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(
-            w1_against_reference(cents_counts(batch_df), ref_counts),
-            dest_dir,
-            batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_events(spark, src_dir),
+        lambda batch_df: w1_against_reference(cents_counts(batch_df), ref_counts),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -983,24 +887,14 @@ def streaming_ad_monitor(
     integer core (plans/nonparam.ad_against_reference) the same way
     streaming_w1_monitor shares w1_against_reference. W1 alarms on how
     much mass moved; AD alarms when the TAILS move (where W1/CvM barely
-    look — precisely the failure mode of a value-capping regression).
-    Exactly-once via the idempotent per-batch_id overwrite."""
+    look — precisely the failure mode of a value-capping regression)."""
     from etl_jlp_spark.plans.nonparam import ad_against_reference, cents_counts
 
-    stream = stream_events(spark, src_dir)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_idempotent(
-            ad_against_reference(cents_counts(batch_df), ref_counts),
-            dest_dir,
-            batch_id,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return sink_batches(
+        stream_events(spark, src_dir),
+        lambda batch_df: ad_against_reference(cents_counts(batch_df), ref_counts),
+        dest_dir,
+        checkpoint_dir,
     )
 
 
@@ -1024,31 +918,13 @@ def streaming_sprt_monitor(
 
     Unlike the stateless W1/AD monitors, SPRT needs running totals:
     state is versioned per batch (``state_dir/batch_id=N`` holds the
-    cumulative counts THROUGH batch N, idempotent overwrite) and each
-    batch reads the newest state STRICTLY BELOW its own id — so a
+    cumulative counts THROUGH batch N, written like the output) and
+    each batch reads the newest state STRICTLY BELOW its own id — so a
     crash-replay of batch N re-reads N−1's state and rewrites the same
-    N state and output (exactly-once end-to-end, same protocol as
-    write_batch_idempotent)."""
-    import os
-
+    N state and output."""
     from etl_jlp_spark.plans.experiment import AB_SPLIT_HEX, sprt_score
 
-    stream = stream_events(spark, src_dir)
     hyp = spark.createDataFrame([(int(p0_e6), int(p1_e6))], "p0_e6 long, p1_e6 long")
-
-    def _prior_state(batch_id: int) -> DataFrame | None:
-        try:
-            ids = [
-                int(d.split("=", 1)[1])
-                for d in os.listdir(state_dir)
-                if d.startswith("batch_id=")
-            ]
-        except FileNotFoundError:
-            return None
-        prior = [i for i in ids if i < int(batch_id)]
-        if not prior:
-            return None
-        return read_parquet(spark, os.path.join(state_dir, f"batch_id={max(prior)}"))
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_counts = (
@@ -1068,14 +944,13 @@ def streaming_sprt_monitor(
                 F.sum("conv").cast("long").alias("conv"),
             )
         )
-        prior = _prior_state(batch_id)
-        merged = (
-            batch_counts
-            if prior is None
-            else batch_counts.unionByName(
+        older = [b for b in batch_ids(state_dir) if b < int(batch_id)]
+        merged = batch_counts
+        if older:
+            prior = read_parquet(spark, os.path.join(state_dir, f"batch_id={older[-1]}"))
+            merged = merged.unionByName(
                 prior.select("arm", F.col("cum_n").alias("n"), F.col("cum_conv").alias("conv"))
             )
-        )
         cum = merged.groupBy("arm").agg(
             F.sum("n").cast("long").alias("cum_n"),
             F.sum("conv").cast("long").alias("cum_conv"),
@@ -1084,9 +959,7 @@ def streaming_sprt_monitor(
         # (localCheckpoint first: the write below must not lazily
         # re-read the prior-state dir while a replay overwrites it)
         cum = cum.localCheckpoint(eager=True)
-        cum.write.mode("overwrite").parquet(
-            os.path.join(state_dir, f"batch_id={int(batch_id)}")
-        )
+        write_batch_idempotent(cum, state_dir, batch_id)
         out = sprt_score(cum, hyp).join(
             batch_counts.select("arm", "n", "conv"), "arm", "left"
         ).select(
@@ -1102,15 +975,8 @@ def streaming_sprt_monitor(
         # garbage-collect superseded state AFTER the output commit (the
         # same discipline as streaming_cc_maintain's version pruning): a
         # replay of batch N only ever reads N−1, so ids < N−1 are dead.
-        import shutil
+        for b in older:
+            if b < int(batch_id) - 1:
+                shutil.rmtree(os.path.join(state_dir, f"batch_id={b}"), ignore_errors=True)
 
-        for d in os.listdir(state_dir):
-            if d.startswith("batch_id=") and int(d.split("=", 1)[1]) < int(batch_id) - 1:
-                shutil.rmtree(os.path.join(state_dir, d), ignore_errors=True)
-
-    return (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return launch(stream_events(spark, src_dir), checkpoint_dir, handle)

@@ -9,18 +9,19 @@ the store. This module uses the minimal lakehouse commit protocol
 instead:
 
 - **delta log**: each micro-batch writes its (day, event_type) partial
-  aggregate to ``deltas/batch_id=N`` with overwrite — a replay of the
-  same batch rewrites the same directory to the same content
-  (idempotent), never touching other batches' data.
+  aggregate to ``deltas/batch_id=N`` through the pipeline's idempotent
+  per-batch write (``streaming.pipeline``), never touching other
+  batches' data.
 - **serving view**: compacted base ∪ unfolded deltas, re-aggregated —
   always rollup-sized relations, never raw events.
 - **compaction**: folds deltas into a NEW versioned base directory,
-  then atomically swaps a pointer file (``os.replace``) recording the
-  base version and the highest folded batch id. A crash before the
-  swap leaves the old pointer valid (old base + deltas still serve the
-  correct view); after the swap, folded delta dirs are garbage and are
-  swept. Replays of batches at or below the folded watermark are
-  dropped by the sink — the pointer IS the dedup state.
+  then atomically swaps a pointer file (``stores.write_pointer``)
+  recording the base version and the highest folded batch id. A crash
+  before the swap leaves the old pointer valid (old base + deltas still
+  serve the correct view); after the swap, folded delta dirs are
+  garbage and are swept. Replays of batches at or below the folded watermark are
+  dropped by the sink — the pointer IS the dedup state, so an
+  unreadable pointer raises instead of reading as an empty store.
 
 Nothing here is driver-looped per row; every step is a Spark plan over
 rollup-sized data.
@@ -28,7 +29,6 @@ rollup-sized data.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -37,26 +37,19 @@ from pyspark.sql import functions as F
 
 from etl_jlp_spark.catalog import read_parquet
 from etl_jlp_spark.operators.rollup import _day_rollup, _with_day
+from etl_jlp_spark.stores import read_pointer, write_pointer
+from etl_jlp_spark.streaming.pipeline import (
+    batch_ids,
+    launch,
+    stream_events,
+    write_batch_idempotent,
+)
 
 _POINTER = "_POINTER.json"
 
 
 def _pointer(store_dir: str) -> dict:
-    try:
-        with open(os.path.join(store_dir, _POINTER)) as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return {"base": None, "through_batch": -1}
-
-
-def _swap_pointer(store_dir: str, base: str, through_batch: int) -> None:
-    """Atomic commit: the pointer only ever moves via os.replace, so a
-    reader sees either the old or the new (base, watermark) — never a
-    half-written state."""
-    tmp = os.path.join(store_dir, f"{_POINTER}.tmp-{os.getpid()}")
-    with open(tmp, "w") as fh:
-        json.dump({"base": base, "through_batch": through_batch}, fh)
-    os.replace(tmp, os.path.join(store_dir, _POINTER))
+    return read_pointer(os.path.join(store_dir, _POINTER), {"base": None, "through_batch": -1})
 
 
 def rollup_upsert_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> None:
@@ -65,17 +58,8 @@ def rollup_upsert_batch(batch_df: DataFrame, store_dir: str, batch_id: int) -> N
     folded by compaction."""
     if int(batch_id) <= _pointer(store_dir)["through_batch"]:
         return
-    _day_rollup(_with_day(batch_df)).write.mode("overwrite").parquet(
-        os.path.join(store_dir, "deltas", f"batch_id={int(batch_id)}")
-    )
-
-
-def _delta_ids(store_dir: str) -> list[int]:
-    deltas = os.path.join(store_dir, "deltas")
-    if not os.path.isdir(deltas):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1]) for d in os.listdir(deltas) if d.startswith("batch_id=")
+    write_batch_idempotent(
+        _day_rollup(_with_day(batch_df)), os.path.join(store_dir, "deltas"), batch_id
     )
 
 
@@ -87,10 +71,11 @@ def rollup_view(spark: SparkSession, store_dir: str) -> DataFrame:
     parts: list[DataFrame] = []
     if ptr["base"]:
         parts.append(read_parquet(spark, os.path.join(store_dir, "base", ptr["base"])))
-    unfolded = [b for b in _delta_ids(store_dir) if b > ptr["through_batch"]]
+    deltas = os.path.join(store_dir, "deltas")
+    unfolded = [b for b in batch_ids(deltas) if b > ptr["through_batch"]]
     if unfolded:
         parts.append(
-            read_parquet(spark, os.path.join(store_dir, "deltas"))
+            read_parquet(spark, deltas)
             .filter(F.col("batch_id").isin(unfolded))
             .drop("batch_id")
         )
@@ -117,7 +102,7 @@ def compact_rollup(spark: SparkSession, store_dir: str, retain: bool = False) ->
     space becomes an explicit, separately-scheduled ``vacuum_rollup``
     (exactly VACUUM vs time travel). The default sweeps immediately —
     serving-only stores shouldn't pay history storage."""
-    ids = _delta_ids(store_dir)
+    ids = batch_ids(os.path.join(store_dir, "deltas"))
     ptr = _pointer(store_dir)
     if not ids or max(ids) <= ptr["through_batch"]:
         return ptr["through_batch"]
@@ -126,7 +111,7 @@ def compact_rollup(spark: SparkSession, store_dir: str, retain: bool = False) ->
     rollup_view(spark, store_dir).write.mode("overwrite").parquet(
         os.path.join(store_dir, "base", version)
     )
-    _swap_pointer(store_dir, version, through)
+    write_pointer(os.path.join(store_dir, _POINTER), {"base": version, "through_batch": through})
     if not retain:
         for b in ids:  # folded deltas are garbage after the swap
             shutil.rmtree(
@@ -161,7 +146,7 @@ def rollup_view_as_of(
     # explicit None check: base v0 is a real version (0 is falsy, so
     # `base_v or -1` would re-apply delta 0 on top of v0 — double count)
     floor = -1 if base_v is None else base_v
-    deltas = [b for b in _delta_ids(store_dir) if floor < b <= through]
+    deltas = [b for b in batch_ids(os.path.join(store_dir, "deltas")) if floor < b <= through]
     if base_v is None and _pointer(store_dir)["through_batch"] > through and not deltas:
         raise ValueError(
             f"history before batch {through} was vacuumed from {store_dir}; "
@@ -194,7 +179,7 @@ def vacuum_rollup(store_dir: str) -> int:
     touched — the serving view is identical before and after."""
     ptr = _pointer(store_dir)
     removed = 0
-    for b in _delta_ids(store_dir):
+    for b in batch_ids(os.path.join(store_dir, "deltas")):
         if b <= ptr["through_batch"]:
             shutil.rmtree(
                 os.path.join(store_dir, "deltas", f"batch_id={b}"), ignore_errors=True
@@ -215,17 +200,9 @@ def streaming_rollup_maintain(
     ``trigger(availableNow=True)`` — the scheduled catch-up run. The
     checkpoint gives at-least-once delivery of batches; the delta-log
     protocol upgrades the STORE to exactly-once."""
-    from etl_jlp_spark.streaming.pipeline import stream_events
-
     os.makedirs(store_dir, exist_ok=True)
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        rollup_upsert_batch(batch_df, store_dir, batch_id)
-
-    return (
-        stream_events(spark, src_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return launch(
+        stream_events(spark, src_dir),
+        checkpoint_dir,
+        lambda batch_df, batch_id: rollup_upsert_batch(batch_df, store_dir, batch_id),
     )

@@ -190,3 +190,29 @@ def test_time_travel_base_v0_does_not_double_count_delta_0(spark, tmp_path):
         for r in rollup_view_as_of(spark, store, 1).collect()
     }
     assert got1 == _expected(spark)
+
+
+def test_corrupt_pointer_raises_and_keeps_base(spark, tmp_path):
+    """Only a MISSING pointer means a fresh store. Read as fresh, an
+    unreadable one made the view drop the compacted base, compaction
+    publish a base without it, and vacuum delete every base version."""
+    import pytest
+
+    from etl_jlp_spark.streaming.rollup_sink import vacuum_rollup
+
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    a, b = _halves(spark)
+    rollup_upsert_batch(a, store, 0)
+    assert compact_rollup(spark, store) == 0  # base = v0
+    rollup_upsert_batch(b, store, 1)  # unfolded delta
+    with open(os.path.join(store, "_POINTER.json"), "w") as fh:
+        fh.write('{"base": "v0", "through_')
+    for call in (
+        lambda: rollup_view(spark, store),
+        lambda: compact_rollup(spark, store),
+        lambda: vacuum_rollup(store),
+    ):
+        with pytest.raises(ValueError):
+            call()
+    assert os.path.isdir(os.path.join(store, "base", "v0"))
