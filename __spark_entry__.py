@@ -84,12 +84,10 @@ from etl_jlp_spark.session import ship_package  # noqa: E402
 # The list below leads the window, in order:
 # - ten query clusters whose plans were rewritten in round 10 and that no
 #   driver window has yet checked against its oracle;
-# - seven queries queued as round-11 rewrites (no code change reached
-#   spearman_corr_matrix or theil_sen_trend; golden_record_merge,
-#   minhash_recall_report, hits_authorities and hits_top_hubs were
-#   rewritten in round 11 but are not listed);
+# - the nine queries whose code round 11 rewrote;
 # - the four flagships, in the window every time;
-# - the first 29 of the queries no driver window has checked yet.
+# - the first 27 of the queries no correctness window has checked yet, so
+#   the list fills the 50-row window exactly.
 _ROTATION_PRIORITY = [
     # Round-10 rewrite clusters not yet checked by a driver window.
     "fuzzy_join_editdist",
@@ -102,21 +100,24 @@ _ROTATION_PRIORITY = [
     "ann_ivf_topk",
     "ivf_nprobe_sweep",
     "semantic_dedup",
-    # Queued as round-11 rewrites (see above for what actually changed).
+    # Round-11 rewrites.
     "doc_similarity_tfidf_topk",
     "winnowing_fingerprint_stats",
     "contrastive_triplets",
     "knn_loo_accuracy",
-    "spearman_corr_matrix",
-    "theil_sen_trend",
     "audio_decode_report",
+    "golden_record_merge",
+    "minhash_recall_report",
+    "hits_authorities",
+    "hits_top_hubs",
     # Flagships — in-window every round.
     "preprocess_pipeline",
     "curate_documents",
     "training_data_pipeline",
     "corpus_index_pipeline",
-    # Never driver-checked (45 as of round 11): the first 29; the rest
-    # (conformal_forecast_interval onward) are next in line.
+    # Never window-checked (45 as of round 11): the first 27; the rest
+    # (bayesian_ab_conversion, periodogram_daily_revenue, then
+    # conformal_forecast_interval onward) are next in line.
     "mann_whitney_ab",
     "event_transition_matrix",
     "interarrival_burstiness",
@@ -144,8 +145,6 @@ _ROTATION_PRIORITY = [
     "new_vs_returning_daily",
     "user_active_streaks",
     "priority_mix_chisq",
-    "bayesian_ab_conversion",
-    "periodogram_daily_revenue",
 ]
 
 

@@ -292,7 +292,11 @@ def _rice_decode_block(
     "decode one code starting at j" is the jump j → nxt[j]+1+k. All n
     start positions come from pointer-doubling over that jump table
     (log2(n) vectorized gathers), then quotients and the k-bit suffixes
-    are plain gathers. Layout identical to the per-value reader."""
+    are plain gathers. Layout identical to the per-value reader. An
+    empty partition (n = 0, legal when the first partition holds only
+    the predictor warm-up) decodes to an empty block."""
+    if n == 0:
+        return np.empty(0, dtype=np.int64), pos
     L = len(bits)
     f = np.minimum(nxt + 1 + k, L)  # one-code jump; L = truncation sentinel
     starts = np.empty(n, dtype=np.int64)
@@ -459,11 +463,12 @@ def _read_subframe(br: _BitReader, n: int, bps: int) -> np.ndarray:
         # difference, so reconstruction is o chained cumsums seeded by
         # the warmup's difference pyramid — no per-sample python loop
         # (§4). Magnitude guard replaces the old python-int overflow
-        # trap: any level whose values leave ±2^48 can only come from a
+        # trap: any level whose values leave ±2^46 can only come from a
         # corrupt stream (legit bps ≤ 32 keeps every difference level
         # under ~2^37), and the bound guarantees the next cumsum cannot
-        # wrap int64 (2^48 · 65536 < 2^63).
-        _LIM = np.int64(1) << 48
+        # wrap int64: a block holds at most 2^16 samples, so
+        # |seed| + 2^16 · 2^46 < 2^63.
+        _LIM = np.int64(1) << 46
         if res.size and int(np.abs(res).max()) >= _LIM:
             raise ValueError("fixed-predictor residual overflow (corrupt stream)")
         out = np.empty(n, dtype=np.int64)

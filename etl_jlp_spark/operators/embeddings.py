@@ -760,9 +760,15 @@ def knn_loo_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dot = qc[:, 0][:, None] * b_V[:, 0][None, :]
                 for i in range(1, dim):
                     dot = dot + qc[:, i][:, None] * b_V[:, i][None, :]
-                cos = dot / (qnc[:, None] * b_cn[None, :])
-                cos[qid[s:e][:, None] == b_ids[None, :]] = -np.inf  # self-pairs
-                keep = cos >= (cos.max(axis=1, keepdims=True) - MARGIN)
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = dot / (qnc[:, None] * b_cn[None, :])
+                # a zero-norm vector has no cosine: mask it (and
+                # self-pairs) so one NaN cannot poison every row max,
+                # and skip queries left with no neighbor at all
+                cos[~np.isfinite(cos)] = -np.inf
+                cos[qid[s:e][:, None] == b_ids[None, :]] = -np.inf
+                m = cos.max(axis=1, keepdims=True)
+                keep = (cos >= m - MARGIN) & (m > -np.inf)
                 qi, ci = np.nonzero(keep)
                 out["qid"].append(qid[s:e][qi])
                 out["true_label"].append(tl[s:e][qi])

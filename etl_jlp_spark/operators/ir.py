@@ -430,22 +430,58 @@ def bm25_search_prebuilt(spark: SparkSession, sf_dir: str) -> DataFrame:
     directories its terms hash into (directory pruning on pbucket +
     row filter on term), broadcast-joins the term/corpus stats, and
     aggregates — the corpus text is never touched at query time."""
-    postings_path, termstats_path, corpus_path = ensure_ir_index(spark, sf_dir)
-    terms = list(BM25_QUERY_TERMS)
-    posts = (
-        read_parquet(spark, postings_path)
-        .filter(F.col("pbucket").isin(term_buckets(terms)) & F.col("term").isin(terms))
-    )
-    tstats = read_parquet(spark, termstats_path).filter(F.col("term").isin(terms))
-    cstats = read_parquet(spark, corpus_path)
     scored = (
-        posts.join(F.broadcast(tstats), "term")
-        .crossJoin(F.broadcast(cstats))
+        _bm25_probe(spark, sf_dir, list(BM25_QUERY_TERMS))
         .groupBy("doc_id")
         .agg(F.sum(bm25_contrib()).alias("s"))
         .select("doc_id", F.round("s", 4).alias("bm25"))
     )
     return scored.orderBy(F.desc("bm25"), F.asc("doc_id")).limit(BM25_TOP_K)
+
+
+def _bm25_probe(spark: SparkSession, sf_dir: str, terms: list[str]) -> DataFrame:
+    """The prebuilt index's postings of ``terms`` — only the ≤|terms|
+    pbucket directories they hash into are read — joined with their term
+    stats and the 1-row corpus stats (both broadcast)."""
+    postings_path, termstats_path, corpus_path = ensure_ir_index(spark, sf_dir)
+    posts = read_parquet(spark, postings_path).filter(
+        F.col("pbucket").isin(term_buckets(terms)) & F.col("term").isin(terms)
+    )
+    tstats = read_parquet(spark, termstats_path).filter(F.col("term").isin(terms))
+    cstats = read_parquet(spark, corpus_path)
+    return posts.join(F.broadcast(tstats), "term").crossJoin(F.broadcast(cstats))
+
+
+def bm25_search_queries(queries: DataFrame, sf_dir: str) -> DataFrame:
+    """Top-``BM25_TOP_K`` documents per query of a (query_id, query_text)
+    frame against the prebuilt index — the serving path of
+    ``bm25_search_prebuilt``; it streams per micro-batch of arriving
+    queries through ``streaming.pipeline.sink_batches``. The frame's
+    distinct terms are collected (∝ queries × terms/query, never
+    vocabulary-sized), so the postings scan prunes exactly like the batch
+    probe; the (query_id, term) pairs broadcast into the join, and a
+    query_id-partitioned rank window keeps each query's top-K (the
+    multi-query form of the batch probe's TakeOrdered)."""
+    spark = queries.sparkSession
+    qterms = queries.select(
+        "query_id",
+        F.explode(
+            F.array_distinct(F.regexp_extract_all(F.lower("query_text"), F.lit(WORD_PATTERN), 0))
+        ).alias("term"),
+    )
+    terms = [r["term"] for r in qterms.select("term").distinct().collect()]
+    if not terms:
+        return spark.createDataFrame([], "query_id bigint, doc_id bigint, bm25 double, rank bigint")
+    scored = (
+        _bm25_probe(spark, sf_dir, terms)
+        .join(F.broadcast(qterms), "term")
+        .groupBy("query_id", "doc_id")
+        .agg(F.round(F.sum(bm25_contrib()), 4).alias("bm25"))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
+    return scored.withColumn("rank", F.row_number().over(w).cast("long")).filter(
+        F.col("rank") <= BM25_TOP_K
+    )
 
 
 # ---------------------------------------------------------------------------

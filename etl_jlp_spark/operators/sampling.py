@@ -148,8 +148,9 @@ def balance_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     steps so the rate is a portable hex-prefix compare; the corpus then
     streams through one broadcast rate join + filter + agg. The rate
     table is bounded by #sources, so the broadcast holds at any corpus
-    scale; no global sort, no per-doc RNG state. Streaming twin:
-    streaming.pipeline.streaming_balance_mix."""
+    scale; no global sort, no per-doc RNG state. ``apply_mix_filter``
+    over ``doc_token_counts`` and the static rate table streams per
+    micro-batch through ``streaming.pipeline.sink_batches``."""
     sized = doc_token_counts(load_table(spark, sf_dir, "documents"))
     kept = apply_mix_filter(sized, mix_rates(sized))
     return kept.groupBy("source").agg(

@@ -522,7 +522,9 @@ def decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the benchmark shingle SET is bounded by the benchmark
     size (fixed, small — broadcast at any corpus scale); the corpus side
     streams through one broadcast equi-join + one doc_id agg. Never
-    corpus×corpus. Streaming twin: streaming.pipeline.streaming_decontaminate."""
+    corpus×corpus. ``decon_overlap`` over the static bench set streams
+    per micro-batch of arriving corpus shards through
+    ``streaming.pipeline.sink_batches``."""
     docs = load_table(spark, sf_dir, "documents")
     is_bench = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) < DECON_BENCH_HEX
     return decon_overlap(docs.filter(~is_bench), bench_shingle_set(docs))

@@ -1770,8 +1770,8 @@ hurst_rs_exponent.__doc__ = (hurst_rs_exponent.__doc__ or "").format(BLOCKS=HURS
 # ---------------------------------------------------------------------------
 # Shared W1 core for the streaming twin: the same merged-cents-grid
 # integral as wasserstein_value_drift, but against an EXTERNAL
-# reference count relation (streaming/pipeline.streaming_w1_monitor
-# scores each micro-batch with it; the batch op derives ref/cur from
+# reference count relation (it streams per micro-batch through
+# streaming.pipeline.sink_batches; the batch op derives ref/cur from
 # the date split internally).
 # ---------------------------------------------------------------------------
 
@@ -1845,7 +1845,7 @@ def w1_against_reference(cur_counts: DataFrame, ref_counts: DataFrame) -> DataFr
     # zero term above) and a positive denominator, so W1 = 0.0 arrives
     # naturally. A NULL here means exact_sum NULL-poisoned an overflow
     # (or an empty side made the division undefined) — propagate it, as
-    # ad_against_reference does, so streaming_w1_monitor surfaces the
+    # ad_against_reference does, so a per-batch monitor surfaces the
     # poisoned group instead of silently reporting "no drift".
     return agg.select(
         "event_type",

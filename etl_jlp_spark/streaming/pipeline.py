@@ -22,6 +22,14 @@ The exactly-once protocol, here and in ``rollup_sink``:
   that sink for one transform per batch; ``batch_ids`` lists the
   directories. (``incremental_to_bronze`` uses Spark's parquet file
   sink, whose own commit log is exactly-once.)
+- A stateless streaming twin of a batch operator is no function of its
+  own: it is ``sink_batches(stream_events(spark, src, schema), op,
+  dest, ckpt)``, where ``op`` is the batch operator closed over its
+  static side input (a reference distribution, a trained model, an
+  index). ``op`` must need no cross-batch state: a per-document result
+  holds because a document lives in one file, so in one micro-batch.
+  A mergeable per-batch state (``cms_counters``, ``hll_registers``,
+  ``kmv_sketch``, ``did_cells``) is read back merged by its ``*_view``.
 - State replaced as a whole (the rollup base, the cluster store) goes
   to a new versioned directory and is committed by swapping a JSON
   pointer (``stores.write_pointer``); the pointer's batch watermark
@@ -119,13 +127,19 @@ def sink_batches(
 
 
 def stream_events(
-    spark: SparkSession, src_dir: str, fmt: str = "parquet", options: dict | None = None
+    spark: SparkSession,
+    src_dir: str,
+    schema: StructType = EVENTS_SCHEMA,
+    fmt: str = "parquet",
+    options: dict | None = None,
 ) -> DataFrame:
-    """File-source stream: new files in src_dir are the 'incremental
-    loads'; Spark's checkpoint replaces the reference's watermark CSV.
-    ``options`` passes SOURCE options through (e.g. maxFilesPerTrigger
-    to bound micro-batch size — a reader option, not a writer one)."""
-    reader = spark.readStream.format(fmt).schema(EVENTS_SCHEMA)
+    """File-source stream of ``schema`` rows (events by default; also
+    corpus documents, search queries, media): new files in src_dir are
+    the 'incremental loads'; Spark's checkpoint replaces the reference's
+    watermark CSV. ``options`` passes SOURCE options through (e.g.
+    maxFilesPerTrigger to bound micro-batch size — a reader option, not
+    a writer one)."""
+    reader = spark.readStream.format(fmt).schema(schema)
     if fmt == "json":
         reader = reader.option("multiLine", "false")
     for k, v in (options or {}).items():
@@ -188,177 +202,9 @@ def incremental_to_bronze(
     """Land-zone → bronze incremental load: read new files, stamp audit
     columns, append parquet through Spark's file sink (exactly-once by
     its own commit log)."""
-    return launch(with_audit_columns(stream_events(spark, src_dir, fmt)), checkpoint_dir, dest_dir)
-
-
-def stream_documents(spark: SparkSession, src_dir: str, schema) -> DataFrame:
-    """File-source stream over a parquet dir of the given schema (new
-    files = new shards arriving: corpus documents, search queries,
-    media)."""
-    return spark.readStream.format("parquet").schema(schema).load(src_dir)
-
-
-def streaming_decontaminate(
-    spark: SparkSession,
-    docs_src_dir: str,
-    schema,
-    bench_shingles: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming twin of operators.similarity.decontaminate_docs: the
-    benchmark shingle set is STATIC (evals don't change mid-stream) and
-    broadcast into every micro-batch; each arriving corpus shard runs
-    the same broadcast equi-join + per-doc agg via ``foreachBatch``.
-    A document lives entirely inside one file → one micro-batch, so
-    per-doc overlap needs NO cross-batch streaming state."""
-    from etl_jlp_spark.operators.similarity import decon_overlap
-
-    return sink_batches(
-        stream_documents(spark, docs_src_dir, schema),
-        lambda batch_df: decon_overlap(batch_df, bench_shingles),
-        dest_dir,
-        checkpoint_dir,
+    return launch(
+        with_audit_columns(stream_events(spark, src_dir, fmt=fmt)), checkpoint_dir, dest_dir
     )
-
-
-def streaming_lm_score(
-    spark: SparkSession,
-    docs_src_dir: str,
-    schema,
-    lm: DataFrame,
-    lm_stats: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming twin of operators.ir.ngram_lm_score's scoring phase:
-    the unigram LM comes from a prior batch training pass (LMs don't
-    retrain mid-stream) and is broadcast into every micro-batch; each
-    arriving corpus shard is scored by the same
-    ``score_docs_with_lm`` the batch query uses. A document lives
-    entirely inside one file → one micro-batch, so the per-doc mean
-    log-prob needs NO cross-batch state."""
-    from etl_jlp_spark.operators.ir import score_docs_with_lm
-
-    return sink_batches(
-        stream_documents(spark, docs_src_dir, schema),
-        lambda batch_df: score_docs_with_lm(batch_df, lm, lm_stats),
-        dest_dir,
-        checkpoint_dir,
-    )
-
-
-def streaming_bm25_search(
-    spark: SparkSession,
-    queries_src_dir: str,
-    schema,
-    sf_dir: str,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming twin of operators.ir.bm25_search_prebuilt — the
-    amortized-index story's serving path: the inverted index (bucketed
-    postings, term stats, corpus stats) is built ONCE by
-    ``ensure_ir_index``; arriving micro-batches of search queries
-    (query_id, query_text) are scored against the STATIC store. Per
-    batch, the query texts tokenize to a bounded term set (collected:
-    ∝ batch queries × terms/query, never corpus-sized), so the postings
-    scan partition-prunes to ≤|batch terms| pbucket directories exactly
-    like the batch probe; term/corpus stats and the (query_id, term)
-    pairs broadcast into the join. Top-{K} per query via a
-    query_id-partitioned rank window (high-cardinality key — the
-    multi-query generalization of the batch probe's TakeOrdered).
-
-    Reference: dwh_lab keyword ranking (SURVEY §2) has no serving
-    path at all — this is the beyond-reference production shape."""
-    from pyspark.sql import Window
-
-    from etl_jlp_spark.operators.ir import (
-        BM25_TOP_K,
-        WORD_PATTERN,
-        bm25_contrib,
-        ensure_ir_index,
-        term_buckets,
-    )
-
-    postings_path, termstats_path, corpus_path = ensure_ir_index(spark, sf_dir)
-    cstats = read_parquet(spark, corpus_path)  # 1 row
-
-    def top_k(batch_df: DataFrame) -> DataFrame:
-        qterms = batch_df.select(
-            "query_id",
-            F.explode(
-                F.array_distinct(
-                    F.regexp_extract_all(
-                        F.lower("query_text"), F.lit(WORD_PATTERN), 0
-                    )
-                )
-            ).alias("term"),
-        )
-        # bounded collect: the BATCH's distinct terms, not the vocab
-        terms = [r["term"] for r in qterms.select("term").distinct().collect()]
-        if not terms:
-            return spark.createDataFrame(
-                [], "query_id bigint, doc_id bigint, bm25 double, rank bigint"
-            )
-        posts = read_parquet(spark, postings_path).filter(
-            F.col("pbucket").isin(term_buckets(terms)) & F.col("term").isin(terms)
-        )
-        tstats = read_parquet(spark, termstats_path).filter(F.col("term").isin(terms))
-        scored = (
-            posts.join(F.broadcast(tstats), "term")
-            .crossJoin(F.broadcast(cstats))
-            .join(F.broadcast(qterms), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(F.round(F.sum(bm25_contrib()), 4).alias("bm25"))
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("bm25"), F.asc("doc_id"))
-        return (
-            scored.withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= BM25_TOP_K)
-        )
-
-    return sink_batches(
-        stream_documents(spark, queries_src_dir, schema), top_k, dest_dir, checkpoint_dir
-    )
-
-
-def streaming_span_check(
-    spark: SparkSession,
-    docs_src_dir: str,
-    schema,
-    gram_directory: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming twin of operators.spans.dup_span_report: arriving
-    corpus shards are checked for verbatim duplicated spans against a
-    STATIC gram directory built from the existing corpus
-    (``spans.gram_directory`` — gram-set-sized, (nd, only_doc) excludes
-    self-matches so replaying the reference corpus reproduces the batch
-    rows exactly). Per-doc island merging needs no cross-batch state (a
-    doc lives in one file → one micro-batch)."""
-    from etl_jlp_spark.operators.spans import span_report_vs_directory
-
-    return sink_batches(
-        stream_documents(spark, docs_src_dir, schema),
-        lambda batch_df: span_report_vs_directory(batch_df, gram_directory),
-        dest_dir,
-        checkpoint_dir,
-    )
-
-
-def streaming_balance_mix(docs_stream: DataFrame, rates: DataFrame) -> DataFrame:
-    """Streaming twin of operators.sampling.balance_source_mix's filter
-    phase: the per-source rate table comes from a prior batch pass (or
-    metadata service) and is broadcast-joined into the stream. The
-    keep/drop decision is a pure function of (doc_id, source rate) —
-    a STATELESS stream-static join + filter, so the stream appends with
-    no aggregation state at all; the kept-docs stream IS the production
-    artifact (the balanced corpus)."""
-    from etl_jlp_spark.operators.sampling import apply_mix_filter, doc_token_counts
-
-    return apply_mix_filter(doc_token_counts(docs_stream), rates)
 
 
 def streaming_dedup(
@@ -456,126 +302,13 @@ def streaming_quality_monitor(
     )
 
 
-def streaming_scd2_enrich(
-    spark: SparkSession,
-    src_dir: str,
-    intervals: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Arriving events enriched with the dimension attribute valid AT
-    their event time (``operators.scd.enrich_asof``) against a static
-    SCD2 interval relation — the streaming half of the Type-2 dimension
-    story: `scd2_apply` maintains the dimension, this serves it to the
-    stream."""
-    from etl_jlp_spark.operators.scd import enrich_asof
-
-    return sink_batches(
-        stream_events(spark, src_dir),
-        lambda batch_df: enrich_asof(batch_df, intervals),
-        dest_dir,
-        checkpoint_dir,
-    )
-
-
-def streaming_psi_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    ref_counts: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Continuous drift alarm: each arriving micro-batch's value
-    distribution is scored (PSI) against a FIXED reference bucket-count
-    relation — the streaming half of ``psi_drift_report``
-    (quality/drift.py computes the batch twin; both share
-    ``bucket_counts`` / ``psi_against_reference``). Downstream alerting
-    reads the per-batch PSI rows and applies the 0.1/0.25 thresholds."""
-    from etl_jlp_spark.quality.drift import bucket_counts, psi_against_reference
-
-    return sink_batches(
-        stream_events(spark, src_dir),
-        lambda batch_df: psi_against_reference(bucket_counts(batch_df), ref_counts),
-        dest_dir,
-        checkpoint_dir,
-    )
-
-
-def streaming_anomaly_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    baseline: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Continuous volume-anomaly alarm: each arriving micro-batch's
-    (day, type) counts are z-scored against a FIXED per-type baseline
-    (built by a prior batch pass over the reference period via
-    ``plans.timeseries.baseline_stats``) — the streaming half of
-    ``anomaly_zscore``; both share ``daily_counts`` and the
-    ``anomaly_flag_cols`` algebra, so a day the batch query would flag
-    against the same baseline is flagged here too. The baseline is
-    type-count-sized and broadcast into every micro-batch."""
-    from etl_jlp_spark.plans.timeseries import score_daily_anomaly
-
-    return sink_batches(
-        stream_events(spark, src_dir),
-        lambda batch_df: score_daily_anomaly(batch_df, baseline),
-        dest_dir,
-        checkpoint_dir,
-    )
-
-
-def streaming_cms_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Continuous count-min frequency state: each micro-batch writes its
-    OWN ≤ d×w counter relation (operators.sketches.cms_counters) to its
-    batch_id partition, and the serving sketch is the SUM over batch
-    partitions (``cms_view``), exact by counter additivity. Total state
-    on disk is #batches × d×w rows at ANY key cardinality; estimates
-    from the merged view are identical to a batch build over the same
-    rows (test-pinned)."""
-    from etl_jlp_spark.operators.sketches import cms_counters
-
-    return sink_batches(stream_events(spark, src_dir), cms_counters, dest_dir, checkpoint_dir)
-
-
 def cms_view(spark: SparkSession, dest_dir: str) -> DataFrame:
-    """The merged sketch: sum the per-batch counter partitions."""
+    """The merged count-min sketch of per-batch ``cms_counters``
+    partitions: the sum, exact by counter additivity."""
     return (
         read_parquet(spark, dest_dir)
         .groupBy("r", "bucket")
         .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
-def streaming_phash_dedup(
-    spark: SparkSession,
-    media_src_dir: str,
-    media_schema,
-    index_hashed: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Streaming twin of the pHash dedup: arriving media shards are
-    hashed in-batch (Arrow mapInPandas over the in-repo codecs) and
-    probe a STATIC hashed index (the already-ingested corpus's
-    (media_id, phash) relation — 16 bytes/image, broadcastable far
-    beyond any realistic corpus) and land as verified pairs (hamming
-    ≤ 7). The arriving batch never re-hashes the indexed corpus — the
-    amortized production shape, same discipline as
-    dedup_minhash_prebuilt."""
-    from etl_jlp_spark.multimodal.phash import image_phash, phash_pairs_vs_index
-
-    return sink_batches(
-        stream_documents(spark, media_src_dir, media_schema),
-        lambda batch_df: phash_pairs_vs_index(image_phash(batch_df), index_hashed),
-        dest_dir,
-        checkpoint_dir,
     )
 
 
@@ -692,7 +425,7 @@ def streaming_cc_maintain(
         finally:
             bsh.unpersist()
 
-    return launch(stream_documents(spark, docs_src_dir, docs_schema), checkpoint_dir, handle)
+    return launch(stream_events(spark, docs_src_dir, docs_schema), checkpoint_dir, handle)
 
 
 def cc_state_labels(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -700,31 +433,9 @@ def cc_state_labels(spark: SparkSession, state_dir: str) -> DataFrame:
     return read_parquet(spark, read_pointer(os.path.join(state_dir, "_POINTER.json"))["labels"])
 
 
-def streaming_hll_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Continuous cardinality state: each micro-batch writes its OWN
-    ≤ days×64 HLL register relation (operators.sketches.hll_registers)
-    to its batch_id partition, and the serving estimate MAX-merges
-    register partitions (``hll_view``),
-    exact by the max-merge property of HLL registers. State on disk is
-    #batches × days×64 rows at ANY event-id cardinality; the merged
-    estimate is identical to a batch build over the same rows
-    (test-pinned)."""
-    from etl_jlp_spark.operators.sketches import hll_registers
-
-    def registers(batch_df: DataFrame) -> DataFrame:
-        days = batch_df.select(F.col("ts").cast("date").alias("day"), "event_id")
-        return hll_registers(days, "event_id", ["day"])
-
-    return sink_batches(stream_events(spark, src_dir), registers, dest_dir, checkpoint_dir)
-
-
 def hll_view(spark: SparkSession, dest_dir: str) -> DataFrame:
-    """The merged registers + estimate: max over batch partitions,
+    """The merged per-day ``hll_registers`` of batch partitions + the
+    estimate: max over partitions (exact by the max-merge property),
     then the standard small-range-corrected estimate per day."""
     from etl_jlp_spark.operators.sketches import hll_estimate
 
@@ -736,33 +447,10 @@ def hll_view(spark: SparkSession, dest_dir: str) -> DataFrame:
     return hll_estimate(regs, ["day"])
 
 
-def streaming_kmv_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Continuous distinct-user state per event type as KMV/theta
-    sketches (operators.kmv): each micro-batch writes its OWN ≤
-    types×K sketch rows to its batch_id partition, and the serving
-    estimate union-merges partitions and
-    keeps the K smallest hashes per type (``kmv_view``), exact by the
-    KMV merge property (sketch(A∪B) = topK(sketch(A) ∪ sketch(B)),
-    test-pinned against the batch build). Unlike the HLL twin this
-    state supports SET ALGEBRA across streams (kmv_type_overlap)."""
-    from etl_jlp_spark.operators.kmv import kmv_sketch
-
-    return sink_batches(
-        stream_events(spark, src_dir),
-        lambda batch_df: kmv_sketch(batch_df, "event_type", "user_id").select("g", "hv"),
-        dest_dir,
-        checkpoint_dir,
-    )
-
-
 def kmv_view(spark: SparkSession, dest_dir: str) -> DataFrame:
     """Merged per-type sketch + distinct estimate: union of batch
-    sketches, re-ranked to the K smallest per type (the KMV merge),
+    ``kmv_sketch`` (g, hv) partitions, re-ranked to the K smallest per
+    type (the KMV merge, exact: sketch(A∪B) = topK(sketch(A) ∪ sketch(B))),
     then the (K−1)·M/h_(K) estimator; an unsaturated merged sketch IS
     the distinct hash set, so the estimate falls back to its size."""
     from pyspark.sql import Window
@@ -791,29 +479,10 @@ def kmv_view(spark: SparkSession, dest_dir: str) -> DataFrame:
     )
 
 
-def streaming_did_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Continuous experiment readout state: each micro-batch writes its
-    OWN (event_type, treated, post) exact e4-integer cell sums
-    (plans.regression.did_cells) to its batch_id partition, and the
-    serving readout sums the cells
-    across batch partitions (``did_view``), exact by additivity of
-    (n, Σv). The merged readout is row-identical to running
-    ``did_lift_report`` over the union of arrived events
-    (test-pinned), so the dashboard watching the experiment never
-    diverges from the offline analysis."""
-    from etl_jlp_spark.plans.regression import did_cells
-
-    return sink_batches(stream_events(spark, src_dir), did_cells, dest_dir, checkpoint_dir)
-
-
 def did_view(spark: SparkSession, dest_dir: str) -> DataFrame:
-    """The merged experiment readout: sum per-batch cells, then the
-    shared batch readout algebra."""
+    """The merged experiment readout: sum per-batch ``did_cells``
+    (exact by additivity of (n, Σv)), then the shared batch readout
+    algebra, so it equals ``did_lift_report`` over the arrived rows."""
     from etl_jlp_spark.plans.regression import did_readout
 
     cells = (
@@ -822,80 +491,6 @@ def did_view(spark: SparkSession, dest_dir: str) -> DataFrame:
         .agg(F.sum("n").cast("long").alias("n"), F.sum("s").cast("long").alias("s"))
     )
     return did_readout(cells)
-
-
-def streaming_media_metadata(media_stream: DataFrame) -> DataFrame:
-    """Streaming twin of multimodal/containers.media_metadata_report:
-    the SAME Arrow mapInPandas metadata extractors (EXIF / ID3 / FLAC
-    STREAMINFO / MP4 boxes) applied to a binary media STREAM — the
-    landing-time inventory pass a media lake runs as blobs arrive, so
-    corrupt or metadata-less payloads are quarantined one micro-batch
-    after upload instead of at the next full-corpus sweep.
-
-    mapInPandas is stateless row-wise work, so it composes with any
-    streaming source unchanged."""
-    from etl_jlp_spark.multimodal.containers import media_metadata_report
-
-    return media_metadata_report(media_stream)
-
-
-def run_media_metadata_stream(
-    spark: SparkSession, src_dir: str, dest_dir: str, checkpoint: str, schema
-) -> None:
-    """File-source stream over staged media parquet → metadata report
-    per batch; blocks until the backlog drains."""
-    stream = streaming_media_metadata(stream_documents(spark, src_dir, schema))
-    sink_batches(stream, lambda batch_df: batch_df, dest_dir, checkpoint).awaitTermination()
-
-
-def streaming_w1_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    ref_counts: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Continuous distribution-shift MAGNITUDE alarm: each arriving
-    micro-batch's value distribution is scored with the 1-D
-    Wasserstein distance (dollars of probability mass moved) against
-    a FIXED reference cents-count relation — the streaming half of
-    ``wasserstein_value_drift``, sharing its grid-integral core
-    (plans/nonparam.w1_against_reference), the same pairing
-    streaming_psi_monitor has with psi_drift_report (PSI alarms on
-    significance-ish score; W1 reports how FAR the money moved)."""
-    from etl_jlp_spark.plans.nonparam import cents_counts, w1_against_reference
-
-    return sink_batches(
-        stream_events(spark, src_dir),
-        lambda batch_df: w1_against_reference(cents_counts(batch_df), ref_counts),
-        dest_dir,
-        checkpoint_dir,
-    )
-
-
-def streaming_ad_monitor(
-    spark: SparkSession,
-    src_dir: str,
-    ref_counts: DataFrame,
-    dest_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Continuous TAIL-drift alarm: each micro-batch's value
-    distribution is scored with the two-sample Anderson–Darling
-    statistic against a FIXED reference cents-count relation — the
-    streaming half of ``anderson_darling_drift``, sharing its exact
-    integer core (plans/nonparam.ad_against_reference) the same way
-    streaming_w1_monitor shares w1_against_reference. W1 alarms on how
-    much mass moved; AD alarms when the TAILS move (where W1/CvM barely
-    look — precisely the failure mode of a value-capping regression)."""
-    from etl_jlp_spark.plans.nonparam import ad_against_reference, cents_counts
-
-    return sink_batches(
-        stream_events(spark, src_dir),
-        lambda batch_df: ad_against_reference(cents_counts(batch_df), ref_counts),
-        dest_dir,
-        checkpoint_dir,
-    )
 
 
 def streaming_sprt_monitor(
@@ -916,7 +511,7 @@ def streaming_sprt_monitor(
     registered batch query). Hypotheses arrive as the same exact e6
     integer rationals the batch query derives.
 
-    Unlike the stateless W1/AD monitors, SPRT needs running totals:
+    Unlike a stateless per-batch monitor, SPRT needs running totals:
     state is versioned per batch (``state_dir/batch_id=N`` holds the
     cumulative counts THROUGH batch N, written like the output) and
     each batch reads the newest state STRICTLY BELOW its own id — so a

@@ -13,6 +13,14 @@ Scale properties: state is two longs per user key; keys are hash-
 partitioned across executors; the watermark-driven timeout evicts idle
 users. The per-group pandas function sees one user's batch slice at a
 time (Arrow-transferred), so Python-side cost is O(rows), vectorized.
+
+Every operator here times out in EVENT time over a ``ts`` watermark.
+Spark runs another (no-data) micro-batch under a processing-time
+timeout on every trigger, so an ``availableNow`` run of such a stream
+never ends; under an event-time timeout it runs one only when the
+watermark moved, and the catch-up run stops once the backlog and the
+timeouts it makes due are processed. Rows older than the watermark
+(``DEFAULT_WATERMARK_DELAY`` behind the newest event) are dropped as late.
 """
 
 from __future__ import annotations
@@ -27,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from etl_jlp_spark.operators.sessionize import SESSION_GAP_S
+from etl_jlp_spark.streaming.pipeline import DEFAULT_WATERMARK_DELAY
 
 OUTPUT_SCHEMA = "user_id long, event_id long, ts timestamp, session_id long"
 STATE_SCHEMA = "last_ts_us long, session_ord long"
@@ -83,8 +92,9 @@ def _assign_sessions(
     )
 
     state.update((last_ts_us, session_ord))
-    # evict idle users once no new event can extend their session
-    state.setTimeoutDuration(SESSION_GAP_S * 1000)
+    # evict idle users once the watermark says no new event can extend
+    # their session
+    state.setTimeoutTimestamp(last_ts_us // 1000 + SESSION_GAP_S * 1000)
 
 
 def sessionize_stateful(events: DataFrame) -> DataFrame:
@@ -92,13 +102,14 @@ def sessionize_stateful(events: DataFrame) -> DataFrame:
     with cross-micro-batch continuity."""
     return (
         events.select("user_id", "event_id", "ts")
+        .withWatermark("ts", DEFAULT_WATERMARK_DELAY)
         .groupBy("user_id")
         .applyInPandasWithState(
             _assign_sessions,
             outputStructType=OUTPUT_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
@@ -107,9 +118,9 @@ def sessionize_stateful(events: DataFrame) -> DataFrame:
 # Streaming time-on-page: the streaming twin of the batch
 # time_on_page_incremental boundary patch (operators/sessionize.py,
 # reference update_last_record_time). Each event's time-on-page is
-# emitted exactly once — when its successor arrives (real gap) or when
-# the user times out (the reference's default). State per user is two
-# longs: the one event still awaiting a successor.
+# emitted exactly once — when its successor arrives (real gap), or with
+# the reference's default once the watermark is that default past it.
+# State per user is two longs: the one event still awaiting a successor.
 # ---------------------------------------------------------------------------
 
 from etl_jlp_spark.operators.sessionize import (  # noqa: E402
@@ -142,8 +153,8 @@ def _emit_time_on_page(
         )
 
     if state.hasTimedOut:
-        # no successor within the timeout: finalize the held event with
-        # the reference's default, then evict
+        # no successor before the watermark passed the held event by the
+        # default: finalize it with the reference's default, then evict
         if state.exists:
             eid, ts_us = state.get
             yield out([eid], [ts_us], [DEFAULT_LAST_PAGE_S])
@@ -175,7 +186,7 @@ def _emit_time_on_page(
         )
         yield out(eids[:-1], ts_list[:-1], raws)
     state.update((int(eids[-1]), int(ts_list[-1])))
-    state.setTimeoutDuration(int(DEFAULT_LAST_PAGE_S) * 1000)
+    state.setTimeoutTimestamp(int(ts_list[-1]) // 1000 + int(DEFAULT_LAST_PAGE_S) * 1000)
 
 
 def time_on_page_stateful(events: DataFrame) -> DataFrame:
@@ -191,13 +202,14 @@ def time_on_page_stateful(events: DataFrame) -> DataFrame:
     gap is clamped at 0 (see _emit_time_on_page)."""
     return (
         events.select("user_id", "event_id", "ts")
+        .withWatermark("ts", DEFAULT_WATERMARK_DELAY)
         .groupBy("user_id")
         .applyInPandasWithState(
             _emit_time_on_page,
             outputStructType=TOP_OUTPUT_SCHEMA,
             stateStructType=TOP_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
@@ -282,7 +294,7 @@ def rolling_distinct_deltas_stateful(events: DataFrame) -> DataFrame:
     is exactly what eviction made true."""
     return (
         events.select("user_id", "ts")
-        .withWatermark("ts", "1 hour")
+        .withWatermark("ts", DEFAULT_WATERMARK_DELAY)
         .groupBy("user_id")
         .applyInPandasWithState(
             _emit_rolling_deltas,

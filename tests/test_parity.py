@@ -1,23 +1,19 @@
 """Replicates the driver's correctness gate at sf0.001 (fast): every
 oracle-backed query must hash-match DuckDB on the same parquet."""
 
-import duckdb
 import pytest
 
 from tests.conftest import SF_SMALL
-from tools.parity import table_hash
+from tools.parity import oracle_connection, table_hash
 
 import __spark_entry__ as ent
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_SMALL}/{t}.parquet'")
+    con = oracle_connection(SF_SMALL)
     yield con
+    con.close()
 
 
 ORACLES = ent.oracle_sql()

@@ -111,52 +111,3 @@ def test_phash_flat_image_stable():
     the hash must be reproducible."""
     flat = np.full((H, W, 3), 128, dtype=np.uint8)
     assert phash64(flat) == phash64(flat)
-
-
-def test_streaming_phash_probe_matches_batch(spark, tmp_path):
-    """Arriving media shards hashed in-batch and probed against the
-    static index must find exactly the pairs the batch dedup finds for
-    those images, exactly-once under replay."""
-    from etl_jlp_spark.streaming.pipeline import streaming_phash_dedup
-    from etl_jlp_spark.multimodal.phash import image_phash, phash_pairs_vs_index
-
-    index_rows = [
-        ("bmp", encode_bmp(W, H, _ring)),  # 0 — will be re-seen noisy
-        ("bmp", encode_bmp(W, H, _blocks)),  # 1 — unrelated
-    ]
-    arriving_rows = [
-        ("bmp", encode_bmp(W, H, _noisy_ring)),  # near-dup of index 0
-        ("png", encode_png(W, H, _blocks)),  # re-encode of index 1
-    ]
-    index_hashed = image_phash(_media_df(spark, index_rows)).persist()
-    arriving = spark.createDataFrame(
-        [
-            (100 + i, kind, bytearray(p), (f"s{i}", len(p), W, H))
-            for i, (kind, p) in enumerate(arriving_rows)
-        ],
-        _media_df(spark, index_rows).schema,
-    )
-    src = str(tmp_path / "media_src")
-    arriving.filter("media_id = 100").coalesce(1).write.mode("overwrite").parquet(src)
-    arriving.filter("media_id = 101").coalesce(1).write.mode("append").parquet(src)
-    dest, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    q = streaming_phash_dedup(spark, src, arriving.schema, index_hashed, dest, ckpt)
-    q.awaitTermination(120)
-    got = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in spark.read.parquet(dest).drop("batch_id").collect()
-    }
-    want = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in phash_pairs_vs_index(image_phash(arriving), index_hashed).collect()
-    }
-    assert got == want
-    assert {(a, b) for a, b, _ in got} == {(100, 0), (101, 1)}
-    q2 = streaming_phash_dedup(spark, src, arriving.schema, index_hashed, dest, ckpt)
-    q2.awaitTermination(120)
-    got2 = {
-        (r["id_a"], r["id_b"], r["hamming"])
-        for r in spark.read.parquet(dest).drop("batch_id").collect()
-    }
-    assert got2 == want

@@ -205,6 +205,41 @@ def test_flac_rice_reader_rejects_truncation():
         _rice_read(_BitReader(data[: len(data) // 2]), 2, 256)
 
 
+def test_flac_rice_reader_accepts_empty_first_partition():
+    """blocksize >> partition_order == order leaves the first partition
+    with no residuals — spec-legal, and it must decode as empty."""
+    from etl_jlp_spark.multimodal.flac import _BitReader, _BitWriter, _rice_read, _rice_write
+
+    bw = _BitWriter()
+    res = np.array([5, -3, 0, 7], dtype=np.int64)
+    _rice_write(bw, res, 4, 8, partition_order=1)
+    bw.align()
+    assert np.array_equal(_rice_read(_BitReader(bw.bytes()), 4, 8), res)
+
+
+def test_flac_fixed_predictor_rejects_residual_beyond_int64_headroom():
+    """A residual of 2^47 passes a 2^48 guard, yet 2^16 such samples
+    would sum past 2^63. It can only come from a corrupt stream (bps ≤ 32
+    keeps real differences near 2^37), so the decoder must reject it."""
+    from etl_jlp_spark.multimodal.flac import _BitReader, _BitWriter, _read_subframe
+
+    bw = _BitWriter()
+    bw.write(0, 1)  # padding
+    bw.write(8 + 1, 6)  # FIXED, order 1
+    bw.write(0, 1)  # no wasted bits
+    bw.write(0, 16)  # warm-up sample
+    bw.write(1, 2)  # coding method 1: 5-bit rice parameters
+    bw.write(0, 4)  # one partition
+    k = 30
+    bw.write(k, 5)
+    for u in (2 * (1 << 47), 0, 0):  # zigzag of +2^47, 0, 0
+        bw.write_unary(u >> k)
+        bw.write(u & ((1 << k) - 1), k)
+    bw.align()
+    with pytest.raises(ValueError, match="overflow"):
+        _read_subframe(_BitReader(bw.bytes()), 4, 16)
+
+
 # ---------------------------------------------------------------------------
 # FLAC: cumsum fixed-predictor reconstruction == the coefficient recurrence
 # ---------------------------------------------------------------------------

@@ -158,6 +158,33 @@ def test_knn_loo_matches_numpy(spark):
         assert got[lab]["n_correct"] == correct.get(lab, 0)
 
 
+def test_knn_loo_zero_norm_vector_does_not_empty_report(spark, tmp_path):
+    """One zero-norm vector has no cosine to anything. It must not turn
+    every query's row max into NaN (an empty report); as a query it has
+    no neighbor and is skipped."""
+    import hashlib
+
+    from etl_jlp_spark.operators.embeddings import KNN_EVAL_SAMPLE_HEX
+
+    def sampled(i):
+        return hashlib.md5(str(i).encode()).hexdigest()[0] < KNN_EVAL_SAMPLE_HEX
+
+    q_ids = [i for i in range(100) if sampled(i)][:5]
+    c_ids = [i for i in range(100) if not sampled(i)][:6]
+    zero_id, q_ids = q_ids[0], q_ids[1:]
+    rows = [(zero_id, [0.0] * 4, 0)]
+    for k, i in enumerate(q_ids + c_ids):
+        lab = k % 2
+        rows.append((i, [1.0 - lab, float(lab), 0.01 * k, 0.0], lab))
+    sf = str(tmp_path / "sf")
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int").coalesce(
+        1
+    ).write.parquet(f"{sf}/embeddings.parquet")
+    got = {r["label"]: (r["n"], r["accuracy"]) for r in QS["knn_loo_accuracy"](spark, sf).collect()}
+    want = {lab: sum(1 for k in range(len(q_ids)) if k % 2 == lab) for lab in (0, 1)}
+    assert got == {lab: (n, 1.0) for lab, n in want.items()}
+
+
 def test_calendar_dim_iso_conventions(spark):
     from datetime import date
 

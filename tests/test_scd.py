@@ -107,30 +107,3 @@ def test_enrich_asof_self_consistency(spark):
     assert out.count() == events.count()  # at-most-one interval matched
     assert out.filter(F.col("attr_asof") != F.col("event_type")).count() == 0
     assert out.filter(F.col("attr_asof").isNull()).count() == 0
-
-
-def test_streaming_scd2_enrich_matches_batch(spark, tmp_path):
-    from etl_jlp_spark.operators.scd import enrich_asof, scd2_build
-    from etl_jlp_spark.streaming.pipeline import streaming_scd2_enrich
-    from tests.conftest import SF_SMALL
-    from etl_jlp_spark.catalog import load_table
-    from pyspark.sql import functions as F
-
-    dim = scd2_build(spark, SF_SMALL)
-    events = load_table(spark, SF_SMALL, "events")
-    src, dest, ckpt = (str(tmp_path / d) for d in ("src", "dest", "ckpt"))
-    events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(src)
-    events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-
-    q = streaming_scd2_enrich(spark, src, dim, dest, ckpt)
-    q.awaitTermination(120)
-    got = spark.read.parquet(dest).drop("batch_id")
-    batch = enrich_asof(events, dim)
-    assert got.count() == batch.count()
-    a = {tuple(r) for r in got.select("event_id", "attr_asof").collect()}
-    b = {tuple(r) for r in batch.select("event_id", "attr_asof").collect()}
-    assert a == b
-    # restart on the same checkpoint: no duplicates (exactly-once)
-    q2 = streaming_scd2_enrich(spark, src, dim, dest, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(dest).count() == batch.count()

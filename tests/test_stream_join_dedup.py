@@ -37,7 +37,7 @@ def test_stream_stream_click_attribution_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {
         (r["view_id"], r["click_id"]) for r in spark.sql("select * from attrib").collect()
     }
@@ -74,7 +74,7 @@ def test_streaming_dedup_bounds_to_distinct_keys(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = spark.sql("select count(*) c, count(distinct event_id) d from dedup_stream").head()
     # every key survives exactly once and nothing is lost
     assert got["c"] == got["d"] == ev.count()
@@ -105,7 +105,7 @@ def test_streaming_cc_maintain_converges_to_full_rebuild(spark, tmp_path):
     ckpt = str(tmp_path / "cc_ckpt")
 
     q = streaming_cc_maintain(spark, src, docs.schema, SF_SMALL, state, ckpt)
-    q.awaitTermination(240)
+    assert q.awaitTermination(240)
     got = {(r["node"], r["component"]) for r in cc_state_labels(spark, state).collect()}
     want = {
         (r["node"], r["component"])
@@ -113,5 +113,5 @@ def test_streaming_cc_maintain_converges_to_full_rebuild(spark, tmp_path):
     }
     assert got == want and got
     q2 = streaming_cc_maintain(spark, src, docs.schema, SF_SMALL, state, ckpt)
-    q2.awaitTermination(240)
+    assert q2.awaitTermination(240)
     assert {(r["node"], r["component"]) for r in cc_state_labels(spark, state).collect()} == want

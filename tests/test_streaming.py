@@ -1,14 +1,59 @@
 """Structured Streaming pipeline tests: file-source incremental load
-with audit stamping, windowed event-time aggregation, and session
-windows — each checked against its batch twin."""
+with audit stamping, windowed event-time aggregation, session windows,
+and every stateless streaming twin (a batch operator run per micro-batch
+by ``sink_batches``) — each checked against its batch twin."""
+
+import os
+from collections import Counter
+from dataclasses import dataclass
+from functools import cached_property, partial, reduce
+from typing import Callable
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+import __spark_entry__ as ent
 from tests.conftest import SF_SMALL
+from tests.test_phash import H, W, _blocks, _media_df, _noisy_ring, _ring
 from etl_jlp_spark.catalog import load_table
+from etl_jlp_spark.multimodal.binary import MEDIA_SCHEMA, encode_bmp, encode_png
+from etl_jlp_spark.multimodal.containers import (
+    encode_flac_streaminfo,
+    encode_mp4_skeleton,
+    media_metadata_report,
+)
+from etl_jlp_spark.multimodal.id3 import encode_id3
+from etl_jlp_spark.multimodal.phash import image_phash, phash_pairs_vs_index
+from etl_jlp_spark.operators.ir import (
+    BM25_QUERY_TERMS,
+    BM25_TOP_K,
+    bm25_search_queries,
+    score_docs_with_lm,
+    train_unigram_lm,
+)
+from etl_jlp_spark.operators.kmv import kmv_sketch
+from etl_jlp_spark.operators.sampling import apply_mix_filter, doc_token_counts, mix_rates
+from etl_jlp_spark.operators.scd import enrich_asof, scd2_build
+from etl_jlp_spark.operators.similarity import DECON_BENCH_HEX, bench_shingle_set, decon_overlap
+from etl_jlp_spark.operators.sketches import cms_counters, hll_registers
+from etl_jlp_spark.operators.spans import gram_directory, span_report_vs_directory
+from etl_jlp_spark.plans.nonparam import (
+    W1_REF_DAYS,
+    ad_against_reference,
+    cents_counts,
+    w1_against_reference,
+)
+from etl_jlp_spark.plans.regression import did_cells
+from etl_jlp_spark.plans.timeseries import baseline_stats, daily_counts, score_daily_anomaly
+from etl_jlp_spark.quality.drift import bucket_counts, psi_against_reference
 from etl_jlp_spark.streaming.pipeline import (
+    cms_view,
+    did_view,
+    hll_view,
     incremental_to_bronze,
+    kmv_view,
+    sink_batches,
     stream_events,
     streaming_sessionize,
     windowed_event_counts,
@@ -17,6 +62,8 @@ from etl_jlp_spark.streaming.pipeline import (
 # Wall-clock-bound (streaming triggers / state timeouts): excluded from the
 # default run so the driver test window completes (r11); run via -m slow.
 pytestmark = pytest.mark.slow
+
+QS = ent.queries()
 
 
 @pytest.fixture()
@@ -34,14 +81,14 @@ def test_incremental_to_bronze_exactly_once(spark, events_dir, tmp_path):
     dest = str(tmp_path / "bronze")
     ckpt = str(tmp_path / "ckpt")
     q = incremental_to_bronze(spark, events_dir, dest, ckpt)
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     out = spark.read.parquet(dest)
     n_src = spark.read.parquet(events_dir).count()
     assert out.count() == n_src
     assert out.filter(F.col("source_name") != "clickhouse-streaming-data").count() == 0
     # restart with same checkpoint: no reprocessing (exactly-once)
     q2 = incremental_to_bronze(spark, events_dir, dest, ckpt)
-    q2.awaitTermination(120)
+    assert q2.awaitTermination(120)
     assert spark.read.parquet(dest).count() == n_src
 
 
@@ -55,7 +102,7 @@ def test_windowed_counts_match_batch(spark, events_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
         for r in spark.sql("select * from win_counts").collect()
@@ -79,7 +126,7 @@ def test_streaming_sessionize_bounded_sessions(spark, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     rows = spark.sql("select * from sessions").collect()
     assert rows
     # sessions are per-user and non-overlapping in time
@@ -90,84 +137,6 @@ def test_streaming_sessionize_bounded_sessions(spark, events_dir):
         spans.sort()
         for (s1, e1), (s2, _e2) in zip(spans, spans[1:]):
             assert e1 <= s2, "overlapping sessions for one user"
-
-
-@pytest.fixture()
-def docs_dir(spark, tmp_path):
-    """sf0.001 documents re-materialized as two corpus shards."""
-    src = str(tmp_path / "docs_src")
-    docs = load_table(spark, SF_SMALL, "documents")
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(src)
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(src)
-    return src
-
-
-def test_streaming_decontaminate_matches_batch(spark, docs_dir, tmp_path):
-    """Per-doc overlap from the stream (static broadcast bench set,
-    foreachBatch) must equal the batch decontaminate_docs rows."""
-    from etl_jlp_spark.operators.similarity import (
-        DECON_BENCH_HEX,
-        bench_shingle_set,
-        decontaminate_docs,
-    )
-    from etl_jlp_spark.streaming.pipeline import streaming_decontaminate
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    bench = bench_shingle_set(docs)
-    dest = str(tmp_path / "decon_out")
-    ckpt = str(tmp_path / "decon_ckpt")
-    # stream only the corpus side (production: eval set never streams)
-    corpus_dir = str(tmp_path / "corpus_src")
-    corpus = docs.filter(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) >= DECON_BENCH_HEX
-    )
-    corpus.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode("overwrite").parquet(corpus_dir)
-    corpus.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode("append").parquet(corpus_dir)
-
-    q = streaming_decontaminate(spark, corpus_dir, docs.schema, bench, dest, ckpt)
-    q.awaitTermination(120)
-    read_out = lambda: sorted(
-        map(tuple, spark.read.parquet(dest).drop("batch_id").collect())
-    )
-    got = read_out()
-    want = sorted(map(tuple, decontaminate_docs(spark, SF_SMALL).collect()))
-    assert got == want
-    # restart with the same checkpoint: exactly-once, no duplicate rows
-    q2 = streaming_decontaminate(spark, corpus_dir, docs.schema, bench, dest, ckpt)
-    q2.awaitTermination(120)
-    assert read_out() == want
-
-
-def test_streaming_balance_mix_matches_batch(spark, docs_dir):
-    """The stateless stream-static keep-filter must keep EXACTLY the
-    docs the batch operator keeps (same rate table)."""
-    from etl_jlp_spark.operators.sampling import (
-        apply_mix_filter,
-        doc_token_counts,
-        mix_rates,
-    )
-    from etl_jlp_spark.streaming.pipeline import stream_documents, streaming_balance_mix
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    sized = doc_token_counts(docs)
-    rates = mix_rates(sized)
-    stream = stream_documents(spark, docs_dir, docs.schema)
-    kept_stream = streaming_balance_mix(stream, rates)
-    q = (
-        kept_stream.writeStream.format("memory")
-        .queryName("mix_kept")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        map(tuple, spark.sql("select doc_id, source, n_tokens from mix_kept").collect())
-    )
-    want = sorted(
-        map(tuple, apply_mix_filter(sized, rates).select("doc_id", "source", "n_tokens").collect())
-    )
-    assert got == want and got
 
 
 def test_streaming_quality_monitor_matches_batch(spark, events_dir):
@@ -181,7 +150,7 @@ def test_streaming_quality_monitor_matches_batch(spark, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     got = {
         r["window_start"]: (
             r["n_events"],
@@ -214,31 +183,6 @@ def test_streaming_quality_monitor_matches_batch(spark, events_dir):
     assert got == want and len(got) > 1
 
 
-def test_streaming_lm_score_matches_batch(spark, docs_dir, tmp_path):
-    """Per-doc LM scores from the stream (static broadcast LM,
-    foreachBatch) must equal the batch ngram_lm_score rows, and a
-    checkpoint restart must not duplicate them."""
-    from etl_jlp_spark.operators.ir import ngram_lm_score, train_unigram_lm
-    from etl_jlp_spark.streaming.pipeline import streaming_lm_score
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    lm, lm_stats = train_unigram_lm(docs)
-    dest = str(tmp_path / "lm_out")
-    ckpt = str(tmp_path / "lm_ckpt")
-
-    q = streaming_lm_score(spark, docs_dir, docs.schema, lm, lm_stats, dest, ckpt)
-    q.awaitTermination(120)
-    read_out = lambda: sorted(
-        map(tuple, spark.read.parquet(dest).drop("batch_id").collect())
-    )
-    got = read_out()
-    want = sorted(map(tuple, ngram_lm_score(spark, SF_SMALL).collect()))
-    assert got == want
-    q2 = streaming_lm_score(spark, docs_dir, docs.schema, lm, lm_stats, dest, ckpt)
-    q2.awaitTermination(120)
-    assert read_out() == want
-
-
 def test_write_batch_idempotent_replay_no_duplicates(spark, tmp_path):
     """The crash-replay scenario the checkpoint cannot cover: the batch
     parquet write succeeded but the commit did not, so foreachBatch
@@ -254,244 +198,6 @@ def test_write_batch_idempotent_replay_no_duplicates(spark, tmp_path):
     out = spark.read.parquet(dest)
     assert out.count() == 20  # 10 per DISTINCT batch, replay absorbed
     assert out.select("batch_id").distinct().count() == 2
-
-
-def test_streaming_bm25_matches_prebuilt_probe(spark, tmp_path):
-    """A streamed query whose text tokenizes to exactly the batch
-    probe's term list must return the batch probe's top-K (same docs,
-    same scores, same order), and a checkpoint restart must not
-    duplicate results. A second query in the same batch exercises the
-    multi-query rank window."""
-    from etl_jlp_spark.operators.ir import BM25_QUERY_TERMS, bm25_search_prebuilt
-    from etl_jlp_spark.streaming.pipeline import streaming_bm25_search
-
-    qdf = spark.createDataFrame(
-        [(1, " ".join(BM25_QUERY_TERMS)), (2, "vector vector")],
-        "query_id long, query_text string",
-    )
-    src = str(tmp_path / "bm25_q_src")
-    qdf.coalesce(1).write.parquet(src)
-    dest = str(tmp_path / "bm25_out")
-    ckpt = str(tmp_path / "bm25_ckpt")
-
-    q = streaming_bm25_search(spark, src, qdf.schema, SF_SMALL, dest, ckpt)
-    q.awaitTermination(120)
-
-    out = spark.read.parquet(dest).drop("batch_id")
-    got1 = [
-        (r["doc_id"], r["bm25"])
-        for r in out.filter(F.col("query_id") == 1).orderBy("rank").collect()
-    ]
-    want = [
-        (r["doc_id"], r["bm25"]) for r in bm25_search_prebuilt(spark, SF_SMALL).collect()
-    ]
-    assert got1 == want
-    # the single-term query returns results too, capped at top-K
-    n2 = out.filter(F.col("query_id") == 2).count()
-    assert 0 < n2 <= len(want)
-
-    q2 = streaming_bm25_search(spark, src, qdf.schema, SF_SMALL, dest, ckpt)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(dest).drop("batch_id").count() == out.count()
-
-
-def test_streaming_psi_monitor_matches_batch(spark, tmp_path):
-    """Per-batch PSI vs a fixed reference must equal the batch-side
-    computation on the same rows; a same-distribution batch scores ~0.
-    Two separate availableNow runs on one checkpoint make the batch
-    contents deterministic (run 2 sees only the file added after run 1)."""
-    from etl_jlp_spark.quality.drift import bucket_counts, psi_against_reference
-    from etl_jlp_spark.streaming.pipeline import streaming_psi_monitor
-    from tests.conftest import SF_SMALL
-
-    ev = load_table(spark, SF_SMALL, "events")
-    ref = bucket_counts(ev).persist()
-    src = str(tmp_path / "src")
-    dest, ckpt = str(tmp_path / "psi"), str(tmp_path / "ckpt")
-    halves = [ev.filter(F.col("event_id") % 2 == i) for i in (0, 1)]
-    halves[0].coalesce(1).write.mode("overwrite").parquet(src)
-    streaming_psi_monitor(spark, src, ref, dest, ckpt).awaitTermination(120)
-    halves[1].coalesce(1).write.mode("append").parquet(src)
-    streaming_psi_monitor(spark, src, ref, dest, ckpt).awaitTermination(120)
-
-    got = spark.read.parquet(dest)
-    n_types = ev.select("event_type").distinct().count()
-    assert got.count() == 2 * n_types
-    # each half is a same-distribution sample of the reference stream
-    assert got.agg(F.max("psi")).collect()[0][0] < 0.1
-    for bid, half in enumerate(halves):
-        want = {
-            (r["event_type"], r["psi"], r["n_cur"])
-            for r in psi_against_reference(bucket_counts(half), ref).collect()
-        }
-        have = {
-            (r["event_type"], r["psi"], r["n_cur"])
-            for r in got.filter(F.col("batch_id") == bid).drop("batch_id").collect()
-        }
-        assert want == have
-    ref.unpersist()
-
-
-def test_streaming_anomaly_monitor_matches_batch(spark, tmp_path):
-    """Per-batch anomaly scores against a fixed baseline must equal the
-    batch-side computation on the same rows, across two availableNow
-    runs on one checkpoint (deterministic batch contents)."""
-    from etl_jlp_spark.plans.timeseries import (
-        baseline_stats,
-        daily_counts,
-        score_daily_anomaly,
-    )
-    from etl_jlp_spark.streaming.pipeline import streaming_anomaly_monitor
-    from tests.conftest import SF_SMALL
-
-    ev = load_table(spark, SF_SMALL, "events")
-    baseline = baseline_stats(daily_counts(ev)).persist()
-    src = str(tmp_path / "src")
-    dest, ckpt = str(tmp_path / "anom"), str(tmp_path / "ckpt")
-    halves = [ev.filter(F.col("event_id") % 2 == i) for i in (0, 1)]
-    halves[0].coalesce(1).write.mode("overwrite").parquet(src)
-    streaming_anomaly_monitor(spark, src, baseline, dest, ckpt).awaitTermination(120)
-    halves[1].coalesce(1).write.mode("append").parquet(src)
-    streaming_anomaly_monitor(spark, src, baseline, dest, ckpt).awaitTermination(120)
-
-    got = spark.read.parquet(dest)
-    assert got.count() > 0
-    for bid, half in enumerate(halves):
-        want = {
-            (r["day"], r["event_type"], r["n_events"], r["zscore"], r["is_anomaly"])
-            for r in score_daily_anomaly(half, baseline).collect()
-        }
-        have = {
-            (r["day"], r["event_type"], r["n_events"], r["zscore"], r["is_anomaly"])
-            for r in got.filter(F.col("batch_id") == bid).collect()
-        }
-        assert want == have
-    # half-volume days against a full-volume baseline: every day is far
-    # below its type's mean, so the monitor must be alarming
-    assert got.filter(F.col("is_anomaly")).count() > 0
-    baseline.unpersist()
-
-
-def test_streaming_span_check_matches_batch(spark, docs_dir, tmp_path):
-    """Arriving shards checked against the static gram directory must
-    reproduce the batch dup_span_report rows exactly (the (nd,
-    only_doc) self-exclusion), and survive a checkpoint replay."""
-    from etl_jlp_spark.operators.spans import dup_span_report, gram_directory
-    from etl_jlp_spark.streaming.pipeline import streaming_span_check
-
-    docs = load_table(spark, SF_SMALL, "documents")
-    directory = gram_directory(docs)
-    dest = str(tmp_path / "span_out")
-    ckpt = str(tmp_path / "span_ckpt")
-    q = streaming_span_check(spark, docs_dir, docs.schema, directory, dest, ckpt)
-    q.awaitTermination(120)
-    read_out = lambda: sorted(
-        map(tuple, spark.read.parquet(dest).drop("batch_id").collect())
-    )
-    want = sorted(map(tuple, dup_span_report(spark, SF_SMALL).collect()))
-    assert read_out() == want
-    q2 = streaming_span_check(spark, docs_dir, docs.schema, directory, dest, ckpt)
-    q2.awaitTermination(120)
-    assert read_out() == want
-
-
-def test_streaming_cms_merges_to_batch_sketch(spark, events_dir, tmp_path):
-    """Per-batch counter deltas summed across batches must equal the
-    batch-built sketch EXACTLY (counter additivity), so estimates from
-    the streaming view match the batch operator's; replay must not
-    double-count."""
-    from etl_jlp_spark.operators.sketches import cms_counters
-    from etl_jlp_spark.streaming.pipeline import cms_view, streaming_cms_monitor
-
-    dest = str(tmp_path / "cms_out")
-    ckpt = str(tmp_path / "cms_ckpt")
-    q = streaming_cms_monitor(spark, events_dir, dest, ckpt)
-    q.awaitTermination(120)
-    want = {
-        (r["r"], r["bucket"]): r["c"]
-        for r in cms_counters(load_table(spark, SF_SMALL, "events")).collect()
-    }
-    got = {(r["r"], r["bucket"]): r["c"] for r in cms_view(spark, dest).collect()}
-    assert got == want
-    q2 = streaming_cms_monitor(spark, events_dir, dest, ckpt)  # replay
-    q2.awaitTermination(120)
-    assert {(r["r"], r["bucket"]): r["c"] for r in cms_view(spark, dest).collect()} == want
-
-
-def test_streaming_hll_merges_to_batch_registers(spark, events_dir, tmp_path):
-    """Per-batch HLL registers max-merged across batches must equal the
-    batch-built estimate EXACTLY (max-merge property), and replay must
-    not change the registers."""
-    import pyspark.sql.functions as F
-
-    from etl_jlp_spark.operators.sketches import hll_estimate, hll_registers
-    from etl_jlp_spark.streaming.pipeline import hll_view, streaming_hll_monitor
-
-    dest = str(tmp_path / "hll_out")
-    ckpt = str(tmp_path / "hll_ckpt")
-    q = streaming_hll_monitor(spark, events_dir, dest, ckpt)
-    q.awaitTermination(120)
-    days = load_table(spark, SF_SMALL, "events").select(
-        F.col("ts").cast("date").alias("day"), "event_id"
-    )
-    want = {
-        r["day"]: r["est_distinct"]
-        for r in hll_estimate(hll_registers(days, "event_id", ["day"]), ["day"]).collect()
-    }
-    got = {r["day"]: r["est_distinct"] for r in hll_view(spark, dest).collect()}
-    assert got == want
-    q2 = streaming_hll_monitor(spark, events_dir, dest, ckpt)  # replay
-    q2.awaitTermination(120)
-    assert {r["day"]: r["est_distinct"] for r in hll_view(spark, dest).collect()} == want
-
-
-def test_streaming_did_merges_to_batch_readout(spark, events_dir, tmp_path):
-    """Per-batch DiD cell sums merged across batches must reproduce the
-    batch did_lift_report EXACTLY (additivity of (n, Σv_e4)); replay
-    must not double-count."""
-    from etl_jlp_spark.plans.regression import did_lift_report
-    from etl_jlp_spark.streaming.pipeline import did_view, streaming_did_monitor
-
-    dest = str(tmp_path / "did_out")
-    ckpt = str(tmp_path / "did_ckpt")
-    q = streaming_did_monitor(spark, events_dir, dest, ckpt)
-    q.awaitTermination(120)
-    want = sorted(map(tuple, did_lift_report(spark, SF_SMALL).collect()))
-    read_out = lambda: sorted(map(tuple, did_view(spark, dest).collect()))
-    assert read_out() == want
-    q2 = streaming_did_monitor(spark, events_dir, dest, ckpt)  # replay
-    q2.awaitTermination(120)
-    assert read_out() == want
-
-
-def test_streaming_kmv_merges_to_batch_sketch(spark, events_dir, tmp_path):
-    """Per-batch KMV sketches union-merged across batches must equal
-    the batch-built sketch estimate EXACTLY (KMV merge property), and
-    replay must not change the state."""
-    from pyspark.sql import Window
-    import pyspark.sql.functions as F
-
-    from etl_jlp_spark.operators.kmv import KMV_K, KMV_M, kmv_sketch
-    from etl_jlp_spark.streaming.pipeline import kmv_view, streaming_kmv_monitor
-
-    dest = str(tmp_path / "kmv_out")
-    ckpt = str(tmp_path / "kmv_ckpt")
-    q = streaming_kmv_monitor(spark, events_dir, dest, ckpt)
-    q.awaitTermination(120)
-    full = kmv_sketch(load_table(spark, SF_SMALL, "events"), "event_type", "user_id")
-    kth = {r["g"]: r["hv"] for r in full.collect() if r["rn"] == KMV_K}
-    sizes = {}
-    for r in full.collect():
-        sizes[r["g"]] = max(sizes.get(r["g"], 0), r["rn"])
-    want = {
-        g: int(round((KMV_K - 1) * KMV_M / kth[g])) if g in kth else sizes[g]
-        for g in sizes
-    }
-    got = {r["event_type"]: r["est_distinct"] for r in kmv_view(spark, dest).collect()}
-    assert got == want
-    q2 = streaming_kmv_monitor(spark, events_dir, dest, ckpt)  # replay
-    q2.awaitTermination(120)
-    assert {r["event_type"]: r["est_distinct"] for r in kmv_view(spark, dest).collect()} == want
 
 
 def test_streaming_rolling_distinct_matches_batch(spark, tmp_path):
@@ -536,12 +242,10 @@ def test_streaming_rolling_distinct_matches_batch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
 
     got_df = spark.read.parquet(dest)
-    batch = __import__("__spark_entry__").queries()["rolling_distinct_users_exact"](
-        spark, SF_SMALL
-    )
+    batch = QS["rolling_distinct_users_exact"](spark, SF_SMALL)
     days = batch.select("day")
     got = {
         (r["day"], r["rolling_users"])
@@ -549,108 +253,6 @@ def test_streaming_rolling_distinct_matches_batch(spark, tmp_path):
     }
     want = {(r["day"], r["rolling_users"]) for r in batch.collect()}
     assert got == want
-
-
-def test_streaming_w1_monitor_matches_batch(spark, tmp_path):
-    """Per-batch W1 vs a fixed reference must equal the shared helper's
-    batch-side numbers on the same rows; and when the reference is the
-    first-15-days window and the stream carries the rest, the monitor
-    reproduces wasserstein_value_drift's registered output exactly."""
-    from etl_jlp_spark.plans.nonparam import (
-        W1_REF_DAYS,
-        cents_counts,
-        w1_against_reference,
-        wasserstein_value_drift,
-    )
-    from etl_jlp_spark.streaming.pipeline import streaming_w1_monitor
-    from tests.conftest import SF_SMALL
-
-    ev = load_table(spark, SF_SMALL, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).collect()[0][0]
-    ref_rows = ev.filter(F.to_date("ts") < F.date_add(F.lit(d0), W1_REF_DAYS))
-    cur_rows = ev.filter(F.to_date("ts") >= F.date_add(F.lit(d0), W1_REF_DAYS))
-    ref = cents_counts(ref_rows).persist()
-
-    src = str(tmp_path / "src")
-    dest, ckpt = str(tmp_path / "w1"), str(tmp_path / "ckpt")
-    cur_rows.coalesce(1).write.mode("overwrite").parquet(src)
-    streaming_w1_monitor(spark, src, ref, dest, ckpt).awaitTermination(120)
-
-    got = {
-        (r["event_type"], r["n_ref"], r["n_cur"], r["w1_dollars"])
-        for r in spark.read.parquet(dest).drop("batch_id").collect()
-    }
-    want = {
-        (r["event_type"], r["n_ref"], r["n_cur"], r["w1_dollars"])
-        for r in wasserstein_value_drift(spark, SF_SMALL).collect()
-    }
-    assert got == want  # streaming monitor == registered batch op
-
-    # a second batch (same-distribution sample: the reference rows
-    # themselves) scores ~0 and lands idempotently under its batch_id
-    ref_rows.coalesce(1).write.mode("append").parquet(src)
-    streaming_w1_monitor(spark, src, ref, dest, ckpt).awaitTermination(120)
-    out2 = spark.read.parquet(dest).filter(F.col("batch_id") == 1)
-    assert out2.count() == ref_rows.select("event_type").distinct().count()
-    assert out2.agg(F.max("w1_dollars")).collect()[0][0] == 0.0
-    helper = {
-        (r["event_type"], r["w1_dollars"])
-        for r in w1_against_reference(cents_counts(ref_rows), ref).collect()
-    }
-    have = {(r["event_type"], r["w1_dollars"]) for r in out2.collect()}
-    assert helper == have
-    ref.unpersist()
-
-
-def test_streaming_ad_monitor_matches_batch(spark, tmp_path):
-    """Per-batch Anderson–Darling vs a fixed reference must reproduce
-    the registered anderson_darling_drift exactly when the reference is
-    the first-15-days window and the stream carries the rest (the
-    streaming_w1_monitor contract, for the tail-weighted member); a
-    same-distribution second batch scores exactly 0."""
-    from etl_jlp_spark.plans.nonparam import (
-        W1_REF_DAYS,
-        ad_against_reference,
-        anderson_darling_drift,
-        cents_counts,
-    )
-    from etl_jlp_spark.streaming.pipeline import streaming_ad_monitor
-    from tests.conftest import SF_SMALL
-
-    ev = load_table(spark, SF_SMALL, "events")
-    d0 = ev.agg(F.min(F.to_date("ts"))).collect()[0][0]
-    ref_rows = ev.filter(F.to_date("ts") < F.date_add(F.lit(d0), W1_REF_DAYS))
-    cur_rows = ev.filter(F.to_date("ts") >= F.date_add(F.lit(d0), W1_REF_DAYS))
-    ref = cents_counts(ref_rows).persist()
-
-    src = str(tmp_path / "src")
-    dest, ckpt = str(tmp_path / "ad"), str(tmp_path / "ckpt")
-    cur_rows.coalesce(1).write.mode("overwrite").parquet(src)
-    streaming_ad_monitor(spark, src, ref, dest, ckpt).awaitTermination(120)
-
-    got = {
-        (r["event_type"], r["n_ref"], r["n_cur"], r["ad_stat"])
-        for r in spark.read.parquet(dest).drop("batch_id").collect()
-    }
-    want = {
-        (r["event_type"], r["n_ref"], r["n_cur"], r["ad_stat"])
-        for r in anderson_darling_drift(spark, SF_SMALL).collect()
-    }
-    assert got == want  # streaming monitor == registered batch op
-
-    # same-distribution second batch: every CDF gap is identically 0,
-    # so A² = 0 exactly (integer algebra, not approximately)
-    ref_rows.coalesce(1).write.mode("append").parquet(src)
-    streaming_ad_monitor(spark, src, ref, dest, ckpt).awaitTermination(120)
-    out2 = spark.read.parquet(dest).filter(F.col("batch_id") == 1)
-    helper = {
-        (r["event_type"], r["ad_stat"])
-        for r in ad_against_reference(cents_counts(ref_rows), ref).collect()
-    }
-    have = {(r["event_type"], r["ad_stat"]) for r in out2.collect()}
-    assert helper == have and have  # non-empty, helper-consistent
-    assert out2.agg(F.max("ad_stat")).collect()[0][0] == 0.0
-    ref.unpersist()
 
 
 def test_streaming_sprt_monitor_matches_batch(spark, tmp_path):
@@ -689,9 +291,13 @@ def test_streaming_sprt_monitor_matches_batch(spark, tmp_path):
         str(tmp_path / "ckpt"),
     )
     half1.coalesce(1).write.mode("overwrite").parquet(src)
-    streaming_sprt_monitor(spark, src, p0_e6, p1_e6, dest, state, ckpt).awaitTermination(120)
+    assert streaming_sprt_monitor(
+        spark, src, p0_e6, p1_e6, dest, state, ckpt
+    ).awaitTermination(120)
     half2.coalesce(1).write.mode("append").parquet(src)
-    streaming_sprt_monitor(spark, src, p0_e6, p1_e6, dest, state, ckpt).awaitTermination(120)
+    assert streaming_sprt_monitor(
+        spark, src, p0_e6, p1_e6, dest, state, ckpt
+    ).awaitTermination(120)
 
     out = spark.read.parquet(dest)
     assert {r["batch_id"] for r in out.select("batch_id").distinct().collect()} == {0, 1}
@@ -715,7 +321,329 @@ def test_streaming_sprt_monitor_matches_batch(spark, tmp_path):
 
     # exactly-once: a third run with no new files changes nothing
     before = sorted(map(tuple, out.collect()))
-    streaming_sprt_monitor(spark, src, p0_e6, p1_e6, dest, state, ckpt).awaitTermination(120)
+    assert streaming_sprt_monitor(
+        spark, src, p0_e6, p1_e6, dest, state, ckpt
+    ).awaitTermination(120)
     after = sorted(map(tuple, spark.read.parquet(dest).collect()))
     assert after == before
     assert sorted(os.listdir(state)) == ["batch_id=0", "batch_id=1"]
+
+
+
+# ---------------------------------------------------------------------------
+# Streaming twins. A stateless twin is no engine function: it is
+# sink_batches(stream_events(spark, src, schema), op, dest, ckpt) with
+# ``op`` the batch operator closed over its static side input. Each row
+# lands its input files (one inner list per availableNow run on one
+# checkpoint), and the sink as served must give the batch twin's rows.
+# ---------------------------------------------------------------------------
+
+
+def _halves(df, key):
+    return [df.filter(F.col(key) % 2 == i) for i in (0, 1)]
+
+
+def _media_rows(n=12):
+    rows = []
+    for i in range(n):
+        kind = ["mp3", "flac", "mp4"][i % 3]
+        if kind == "mp3":
+            payload = encode_id3(title=f"T{i}")
+        elif kind == "flac":
+            payload = encode_flac_streaminfo(8000 + i, 1, 16, 100 + i)
+        else:
+            payload = encode_mp4_skeleton(1.0 + i, 1000, 1 + i % 3)
+        rows.append((i, kind, bytearray(payload), ("s", len(payload), 0, 0)))
+    return rows
+
+
+class Inputs:
+    """sf0.001 inputs and the twins' static side inputs, built once."""
+
+    def __init__(self, spark):
+        self.spark = spark
+        self.ev = load_table(spark, SF_SMALL, "events")
+        self.docs = load_table(spark, SF_SMALL, "documents")
+        self.ev_halves = _halves(self.ev, "event_id")
+        self.doc_halves = _halves(self.docs, "doc_id")
+
+    @cached_property
+    def decon_corpus(self):
+        # only the corpus side streams; the eval set never does
+        md5 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+        return _halves(self.docs.filter(md5 >= DECON_BENCH_HEX), "doc_id")
+
+    @cached_property
+    def lm(self):
+        return train_unigram_lm(self.docs)
+
+    @cached_property
+    def mix_rates(self):
+        return mix_rates(doc_token_counts(self.docs))
+
+    @cached_property
+    def scd_dim(self):
+        return scd2_build(self.spark, SF_SMALL)
+
+    @cached_property
+    def psi_ref(self):
+        return bucket_counts(self.ev)
+
+    @cached_property
+    def anomaly_baseline(self):
+        return baseline_stats(daily_counts(self.ev))
+
+    @cached_property
+    def w1_split(self):
+        """(the first W1_REF_DAYS days, the rest) — the registered drift
+        queries' reference/current split."""
+        d0 = self.ev.agg(F.min(F.to_date("ts"))).first()[0]
+        is_ref = F.to_date("ts") < F.date_add(F.lit(d0), W1_REF_DAYS)
+        return self.ev.filter(is_ref), self.ev.filter(~is_ref)
+
+    @cached_property
+    def w1_ref(self):
+        return cents_counts(self.w1_split[0])
+
+    @cached_property
+    def search_queries(self):
+        # query 1 tokenizes to the batch probe's term list; query 2
+        # shares its batch, exercising the multi-query rank window
+        return self.spark.createDataFrame(
+            [(1, " ".join(BM25_QUERY_TERMS)), (2, "vector vector")],
+            "query_id long, query_text string",
+        )
+
+    @cached_property
+    def phash_index(self):
+        index = [("bmp", encode_bmp(W, H, _ring)), ("bmp", encode_bmp(W, H, _blocks))]
+        return image_phash(_media_df(self.spark, index))
+
+    @cached_property
+    def phash_arriving(self):
+        """A noisy near-dup of index image 0 and a PNG re-encode of 1."""
+        payloads = [("bmp", encode_bmp(W, H, _noisy_ring)), ("png", encode_png(W, H, _blocks))]
+        return self.spark.createDataFrame(
+            [
+                (100 + i, kind, bytearray(p), (f"s{i}", len(p), W, H))
+                for i, (kind, p) in enumerate(payloads)
+            ],
+            MEDIA_SCHEMA,
+        )
+
+    @cached_property
+    def media(self):
+        return self.spark.createDataFrame(_media_rows(), MEDIA_SCHEMA)
+
+
+def _psi(batch, ref):
+    return psi_against_reference(bucket_counts(batch), ref).select("event_type", "psi", "n_cur")
+
+
+def _anomaly(batch, baseline):
+    cols = ["day", "event_type", "n_events", "zscore", "is_anomaly"]
+    return score_daily_anomaly(batch, baseline).select(*cols)
+
+
+def _w1(batch, ref):
+    return w1_against_reference(cents_counts(batch), ref)
+
+
+def _ad(batch, ref):
+    return ad_against_reference(cents_counts(batch), ref)
+
+
+def _mix(docs, rates):
+    return apply_mix_filter(doc_token_counts(docs), rates).select("doc_id", "source", "n_tokens")
+
+
+def _day_registers(batch):
+    return hll_registers(
+        batch.select(F.col("ts").cast("date").alias("day"), "event_id"), "event_id", ["day"]
+    )
+
+
+def _phash_pairs(media, index_hashed):
+    pairs = phash_pairs_vs_index(image_phash(media), index_hashed)
+    return pairs.select("id_a", "id_b", "hamming")
+
+
+def _media_report(media):
+    return media_metadata_report(media).select("media_id", "summary", "has_meta")
+
+
+def _per_batch(op, batches):
+    """A per-batch monitor's batch twin: ``op`` on each run's rows,
+    tagged with the batch id the sink writes them under."""
+    out = [op(rows).withColumn("batch_id", F.lit(i)) for i, rows in enumerate(batches)]
+    return reduce(lambda a, b: a.unionByName(b), out)
+
+
+def _batch_max(c, dest, col, batch_id):
+    rows = c.spark.read.parquet(dest).filter(F.col("batch_id") == batch_id)
+    return rows.agg(F.max(col)).first()[0]
+
+
+def _served(c, dest):
+    return c.spark.read.parquet(dest)
+
+
+@dataclass(frozen=True)
+class Twin:
+    runs: Callable  # Inputs -> [[frame landed as one file, ...] per run]
+    op: Callable  # (Inputs, batch) -> the batch operator over its side input
+    want: Callable  # Inputs -> the batch twin's rows
+    read: Callable = _served  # (Inputs, dest) -> the sink as served
+    holds: Callable = lambda c, dest: True  # property beyond equality
+
+
+TWINS = {
+    "decontaminate": Twin(
+        runs=lambda c: [c.decon_corpus],
+        op=lambda c, b: decon_overlap(b, bench_shingle_set(c.docs)),
+        want=lambda c: QS["decontaminate_docs"](c.spark, SF_SMALL),
+    ),
+    "lm_score": Twin(
+        runs=lambda c: [c.doc_halves],
+        op=lambda c, b: score_docs_with_lm(b, *c.lm),
+        want=lambda c: QS["ngram_lm_score"](c.spark, SF_SMALL),
+    ),
+    "span_check": Twin(
+        runs=lambda c: [c.doc_halves],
+        op=lambda c, b: span_report_vs_directory(b, gram_directory(c.docs)),
+        want=lambda c: QS["dup_span_report"](c.spark, SF_SMALL),
+    ),
+    "balance_mix": Twin(
+        runs=lambda c: [c.doc_halves],
+        op=lambda c, b: _mix(b, c.mix_rates),
+        want=lambda c: _mix(c.docs, c.mix_rates),
+        holds=lambda c, dest: _served(c, dest).count() > 0,
+    ),
+    "scd2_enrich": Twin(
+        runs=lambda c: [c.ev_halves],
+        op=lambda c, b: enrich_asof(b, c.scd_dim),
+        want=lambda c: enrich_asof(c.ev, c.scd_dim).select("event_id", "attr_asof"),
+    ),
+    # two runs on one checkpoint make each batch's rows deterministic
+    "psi_monitor": Twin(
+        runs=lambda c: [[h] for h in c.ev_halves],
+        op=lambda c, b: _psi(b, c.psi_ref),
+        want=lambda c: _per_batch(lambda b: _psi(b, c.psi_ref), c.ev_halves),
+        # each half is a same-distribution sample of the reference
+        holds=lambda c, dest: max(_batch_max(c, dest, "psi", i) for i in (0, 1)) < 0.1,
+    ),
+    "anomaly_monitor": Twin(
+        runs=lambda c: [[h] for h in c.ev_halves],
+        op=lambda c, b: _anomaly(b, c.anomaly_baseline),
+        want=lambda c: _per_batch(lambda b: _anomaly(b, c.anomaly_baseline), c.ev_halves),
+        # half-volume days against a full-volume baseline must alarm
+        holds=lambda c, dest: _served(c, dest).filter(F.col("is_anomaly")).count() > 0,
+    ),
+    # batch 0 is the registered query (the rest against the reference
+    # window); batch 1 is the reference rows themselves and scores 0
+    "w1_monitor": Twin(
+        runs=lambda c: [[c.w1_split[1]], [c.w1_split[0]]],
+        op=lambda c, b: _w1(b, c.w1_ref),
+        want=lambda c: QS["wasserstein_value_drift"](c.spark, SF_SMALL)
+        .withColumn("batch_id", F.lit(0))
+        .unionByName(_w1(c.w1_split[0], c.w1_ref).withColumn("batch_id", F.lit(1))),
+        holds=lambda c, dest: _batch_max(c, dest, "w1_dollars", 1) == 0.0,
+    ),
+    "ad_monitor": Twin(
+        runs=lambda c: [[c.w1_split[1]], [c.w1_split[0]]],
+        op=lambda c, b: _ad(b, c.w1_ref),
+        want=lambda c: QS["anderson_darling_drift"](c.spark, SF_SMALL)
+        .withColumn("batch_id", F.lit(0))
+        .unionByName(_ad(c.w1_split[0], c.w1_ref).withColumn("batch_id", F.lit(1))),
+        # every CDF gap is identically 0: A² = 0 exactly (integer algebra)
+        holds=lambda c, dest: _batch_max(c, dest, "ad_stat", 1) == 0.0,
+    ),
+    # mergeable per-batch state: the view merged over the two runs'
+    # batch partitions equals the batch build
+    "cms_monitor": Twin(
+        runs=lambda c: [[h] for h in c.ev_halves],
+        op=lambda c, b: cms_counters(b),
+        want=lambda c: cms_counters(c.ev),
+        read=lambda c, dest: cms_view(c.spark, dest),
+    ),
+    "hll_monitor": Twin(
+        runs=lambda c: [[h] for h in c.ev_halves],
+        op=lambda c, b: _day_registers(b),
+        want=lambda c: QS["hll_distinct_daily"](c.spark, SF_SMALL).select("day", "est_distinct"),
+        read=lambda c, dest: hll_view(c.spark, dest),
+    ),
+    "kmv_monitor": Twin(
+        runs=lambda c: [[h] for h in c.ev_halves],
+        op=lambda c, b: kmv_sketch(b, "event_type", "user_id").select("g", "hv"),
+        want=lambda c: QS["kmv_distinct_by_type"](c.spark, SF_SMALL).select(
+            "event_type", "est_distinct"
+        ),
+        read=lambda c, dest: kmv_view(c.spark, dest),
+    ),
+    "did_monitor": Twin(
+        runs=lambda c: [[h] for h in c.ev_halves],
+        op=lambda c, b: did_cells(b),
+        want=lambda c: QS["did_lift_report"](c.spark, SF_SMALL),
+        read=lambda c, dest: did_view(c.spark, dest),
+    ),
+    # query 1 returns the registered probe's top-K in its order; the
+    # single-term query 2 returns results too, capped at top-K
+    "bm25_search": Twin(
+        runs=lambda c: [[c.search_queries]],
+        op=lambda c, b: bm25_search_queries(b, SF_SMALL),
+        want=lambda c: QS["bm25_search_prebuilt"](c.spark, SF_SMALL).select(
+            F.lit(1).cast("long").alias("query_id"),
+            "doc_id",
+            "bm25",
+            F.row_number().over(Window.orderBy(F.desc("bm25"), "doc_id")).alias("rank"),
+        ),
+        read=lambda c, dest: _served(c, dest).filter(F.col("query_id") == 1),
+        holds=lambda c, dest: 0
+        < _served(c, dest).filter(F.col("query_id") == 2).count()
+        <= BM25_TOP_K,
+    ),
+    "phash_dedup": Twin(
+        runs=lambda c: [[c.phash_arriving.filter(F.col("media_id") == i) for i in (100, 101)]],
+        op=lambda c, b: _phash_pairs(b, c.phash_index),
+        want=lambda c: _phash_pairs(c.phash_arriving, c.phash_index),
+        holds=lambda c, dest: {(r["id_a"], r["id_b"]) for r in _served(c, dest).collect()}
+        == {(100, 0), (101, 1)},
+    ),
+    "media_metadata": Twin(
+        runs=lambda c: [[c.media]],
+        op=lambda c, b: _media_report(b),
+        want=lambda c: _media_report(c.media),
+        holds=lambda c, dest: _served(c, dest).count() == 12,
+    ),
+}
+
+
+@pytest.fixture(scope="module")
+def inputs(spark):
+    return Inputs(spark)
+
+
+@pytest.mark.parametrize("name", sorted(TWINS))
+def test_streaming_twin_matches_batch(spark, inputs, tmp_path, name):
+    twin = TWINS[name]
+    src, dest, ckpt = (str(tmp_path / d) for d in ("src", "dest", "ckpt"))
+    runs = twin.runs(inputs)
+    want = twin.want(inputs)
+
+    def run_stream():
+        stream = stream_events(spark, src, runs[0][0].schema)
+        assert sink_batches(stream, partial(twin.op, inputs), dest, ckpt).awaitTermination(120)
+
+    def served():
+        rows = twin.read(inputs, dest).select(*want.columns).collect()
+        return Counter(map(tuple, rows)), sorted(os.listdir(dest))
+
+    for files in runs:
+        for df in files:
+            df.coalesce(1).write.mode("append").parquet(src)
+        run_stream()
+    got = served()
+    assert got[0] == Counter(map(tuple, want.collect()))
+    assert twin.holds(inputs, dest)
+    run_stream()  # a replay on the same checkpoint changes nothing
+    assert served() == got

@@ -48,7 +48,7 @@ def test_foreach_batch_cdc_apply(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
     result = spark.read.parquet(snap)
     ids = {r["event_id"] for r in result.select("event_id").collect()}

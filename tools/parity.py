@@ -115,9 +115,37 @@ def table_hash(cols: list[str], rows: list[tuple]) -> tuple[int, str]:
     return len(rows), digest
 
 
-def main() -> int:
+def oracle_connection(sf_dir: str):
+    """DuckDB connection with one view per table of ``sf_dir``, held to a
+    memory budget of 30% of physical memory on one thread and spilling
+    to its process's own directory under /tmp, which DuckDB creates on
+    first spill and removes on close. DuckDB's default (80% of RAM) next
+    to the Spark JVM (8 GiB heap, ~9.5 GiB resident in a test run)
+    overcommits a 15 GiB host, and the kernel then kills the JVM; with
+    the budget, an oracle that needs more fails alone with DuckDB's
+    out-of-memory error. An oracle's working memory grows with DuckDB's
+    thread count: at sf0.001 golden_record_merge needs more than 7 GiB
+    on 4 threads, more than 4.3 GiB on 2 and fits in 4.3 GiB on 1."""
+    import os
+
     import duckdb
 
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect(
+        config={
+            "memory_limit": f"{phys * 3 // 10 // (1 << 20)}MB",
+            "threads": 1,
+            "temp_directory": f"/tmp/duckdb_oracle_{os.getpid()}",
+        }
+    )
+    for t in (
+        "region nation customer supplier part orders lineitem events documents embeddings"
+    ).split():
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def main() -> int:
     import __spark_entry__ as ent
     from etl_jlp_spark.session import get_spark
 
@@ -134,11 +162,7 @@ def main() -> int:
     only = set(args[1:])
 
     spark = get_spark("parity")
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con = oracle_connection(sf_dir)
 
     qs, oracles = ent.queries(), ent.oracle_sql()
     failures = 0
