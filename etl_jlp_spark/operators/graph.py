@@ -25,7 +25,11 @@ module is part of the beyond-reference training-data surface.
 Oracles: the shared ``_MINHASH_PAIRS_CTES`` pair pipeline (so the graph
 and the dedup operators can never disagree about what an edge is), then
 PageRank unrolled to its fixed iteration count in chained CTEs and the
-triangle census as one 3-way self-join.
+triangle census as one 3-way self-join. The pipeline's final ``pairs``
+CTE is MATERIALIZED, so it runs once per oracle however many unrolled
+rounds reference ``edges``/``nodes``/``deg``/``und``; DuckDB still
+inlines every other CTE at each reference, so a round chain that
+references its previous round more than once re-runs those rounds.
 """
 
 from __future__ import annotations
@@ -401,9 +405,9 @@ def _khop_iter_ctes() -> str:
     Each round references the previous CTE exactly ONCE: the
     keep-your-distance case rides along as zero-weight self-loops in
     ``eplus`` instead of a second d_{i-1} reference in a UNION — DuckDB
-    inlines CTEs per reference, so a two-reference round would expand
-    the upstream minhash pipeline 2^K times (measured: the UNION form
-    never finished at sf0.001; this form runs in seconds)."""
+    inlines CTEs per reference, so a two-reference round would
+    re-evaluate the earlier rounds 2^K times. The upstream ``pairs`` is
+    MATERIALIZED and runs once either way."""
     out = """
 , eplus AS (
   SELECT a, b, 1 AS w FROM edges
@@ -872,8 +876,9 @@ def _kcore_ctes() -> str:
 
     Every CTE is MATERIALIZED: e{{i}} is referenced by k{{i+1}},
     e{{i+1}} AND the final stats row — inlined, the chain re-evaluates
-    the whole MinHash pair pipeline ~3^R times (measured: minutes at
-    sf0.001), materialized it is R linear passes."""
+    its earlier peel rounds ~3^R times, materialized it is R linear
+    passes. The upstream ``pairs`` is MATERIALIZED and runs once either
+    way."""
     out = """
 , e0 AS MATERIALIZED (SELECT a, b FROM edges)"""
     for i in range(1, KCORE_ROUNDS + 1):

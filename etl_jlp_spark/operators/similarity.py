@@ -149,6 +149,14 @@ def _minhash_bands(shingles: DataFrame) -> DataFrame:
 # sigs → bands → candidate pairs → exact-Jaccard verification. Shared by
 # the dedup oracle and the split-leakage oracle so the two can never
 # drift.
+#
+# ``pairs`` is MATERIALIZED: DuckDB inlines a CTE at every reference, and
+# the graph oracles (operators/graph.py) reference ``pairs`` through
+# ``edges``, ``nodes``, ``deg`` and ``und`` in every unrolled round, so
+# inlined, one plan re-runs this whole pipeline many times over. At
+# sf0.001 on one thread in a 4.4 GiB budget, graph_pagerank ran out of
+# memory after 79-125 s (3.2-3.3 GB peak RSS) and graph_modularity after
+# 55-66 s (2.9 GB); materialized, each takes ~2 s and ~225 MB.
 _MINHASH_PAIRS_CTES = f"""
 WITH {_SHINGLES_CTE},
 hashed AS (
@@ -178,7 +186,7 @@ hashed AS (
   JOIN shingles x ON x.doc_id = c.doc_a
   JOIN shingles y ON y.doc_id = c.doc_b AND y.sh = x.sh
   GROUP BY c.doc_a, c.doc_b
-), pairs AS (
+), pairs AS MATERIALIZED (
   SELECT i.doc_a, i.doc_b,
          round(i.i * 1.0 / (sa.n_sh + sb.n_sh - i.i), 4) AS jaccard
   FROM inter i JOIN sizes sa ON i.doc_a = sa.doc_id JOIN sizes sb ON i.doc_b = sb.doc_id
