@@ -19,22 +19,80 @@ the min reachable id — same fixpoint, declarative form.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_jlp_spark import stores
 from etl_jlp_spark.catalog import load_table, read_parquet
-from etl_jlp_spark.operators.similarity import MH_BATCH_HEX, dedup_minhash_lsh
+from etl_jlp_spark.operators.similarity import (
+    _MINHASH_PAIRS_CTES,
+    MH_BATCH_HEX,
+    dedup_minhash_lsh,
+)
 from etl_jlp_spark.registry import query
 
 MAX_ROUNDS = 64  # hard safety cap only; the loop exits on convergence
 
 # Edge lists at or below this size skip the iterative job entirely:
-# union-find on the driver is microseconds, while every distributed
-# round costs a join + checkpoint + count action (~1 s of fixed
-# scheduling latency each). The count that gates this is paid anyway
-# to size the iteration's shuffle width.
-DRIVER_CC_MAX_EDGES = 100_000
+# solving on the driver is microseconds, while every distributed round
+# costs a join + checkpoint + count action (~1 s of fixed scheduling
+# latency each). One threshold for every graph operator that goes
+# through ``solve_edges``; read at call time.
+DRIVER_MAX_EDGES = 100_000
+
+
+def _sym_edges(pairs: DataFrame) -> DataFrame:
+    """Symmetrized distinct (src, dst) edge relation from a (doc_a,
+    doc_b) pair list — the single Spark-side edge canonicalization every
+    graph operator shares (mirror of the oracle-side ``edges`` CTE)."""
+    return (
+        pairs.unionAll(
+            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
+        )
+        .distinct()
+        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    )
+
+
+def solve_edges(
+    edges: DataFrame,
+    driver: Callable[[list], DataFrame],
+    distributed: Callable[[DataFrame], DataFrame],
+    max_edges: int | None = None,
+    key: str = "src",
+) -> DataFrame:
+    """The scale-adaptive skeleton of every iterative graph operator:
+    persist ``edges`` and count them once; at or below ``max_edges``
+    (default ``DRIVER_MAX_EDGES``) return ``driver(collected rows)``,
+    otherwise ``distributed(edges repartitioned on key)``. The count is
+    paid anyway: it sizes the loop's shuffle width at ~100k edges per
+    partition — near-dup edge lists are ≪ the corpus (thousands at
+    sf0.1, still only millions at 100 TB), so fixed 32-wide shuffles
+    would waste a full task wave per round on scheduler overhead.
+
+    The cache is released in a ``finally``, so both callbacks must
+    return a relation that no longer reads it — driver rows through
+    ``createDataFrame``, or a loop whose state ends in an eager
+    ``localCheckpoint``. A lingering CacheManager entry for the edge
+    subtree would hijack every later plan containing the same subtree
+    (graph_link_prediction measured 2× slower across a bench sweep with
+    one left behind). Unpersisting the persisted handle, not the
+    repartitioned plan, is what releases it: ``Dataset.unpersist``
+    matches the exact logical plan."""
+    if max_edges is None:
+        max_edges = DRIVER_MAX_EDGES
+    edges = edges.persist()
+    try:
+        n_edges = edges.count()
+        if n_edges <= max_edges:
+            return driver(edges.collect())
+        sc = edges.sparkSession.sparkContext
+        n_part = max(1, min(sc.defaultParallelism, n_edges // 100_000 + 1))
+        return distributed(edges.repartition(n_part, key))
+    finally:
+        edges.unpersist()
 
 
 def _driver_union_find(rows: list) -> list[tuple[int, int]]:
@@ -58,37 +116,14 @@ def _driver_union_find(rows: list) -> list[tuple[int, int]]:
     return sorted((n, find(n)) for n in parent)
 
 
-def connected_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
-    """(node, component) for every node in `pairs`; component = min
-    node id in the connected component.
-
-    Scale-adaptive: the measured edge count picks the strategy — tiny
-    edge lists (the common case: verified near-dup pairs ≪ corpus)
-    resolve with driver-side union-find in one collect; big ones run
-    the distributed min-label propagation loop."""
-    edges = (
-        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .unionAll(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .distinct()
-        .persist()
-    )
-    # Size the iteration's shuffle width from the MEASURED edge count:
-    # near-dup edge lists are ≪ the corpus (thousands at sf0.1, still
-    # only millions at 100 TB), so fixed 32-wide shuffles waste a full
-    # task wave per round on scheduler overhead. ~100k edges/partition.
-    n_edges = edges.count()
-    if n_edges <= DRIVER_CC_MAX_EDGES:
-        comps = _driver_union_find([(r["src"], r["dst"]) for r in edges.collect()])
-        return edges.sparkSession.createDataFrame(
-            comps, "node long, component long"
-        )
-    n_part = max(1, min(edges.sparkSession.sparkContext.defaultParallelism, n_edges // 100_000 + 1))
-    edges = edges.repartition(n_part, "dst").persist()
+def _min_label_loop(edges: DataFrame) -> DataFrame:
+    """Distributed min-label propagation over dst-partitioned edges.
+    The edges are symmetric, so the dst side holds every node, and its
+    distinct reuses the edges' dst partitioning for the label seed."""
     labels = (
-        edges.select(F.col("src").alias("node"))
+        edges.select(F.col("dst").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .repartition(n_part, "node")
         .localCheckpoint(eager=True)
     )
     changed = 1
@@ -125,55 +160,32 @@ def connected_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -
     return labels.select("node", F.col("label").alias("component"))
 
 
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """(node, component) for every node in a (doc_a, doc_b) pair list;
+    component = min node id in the connected component.
+
+    Scale-adaptive through ``solve_edges``: tiny edge lists (the common
+    case: verified near-dup pairs ≪ corpus) resolve with driver-side
+    union-find in one collect; big ones run the distributed min-label
+    propagation loop."""
+    spark = pairs.sparkSession
+    return solve_edges(
+        _sym_edges(pairs),
+        lambda rows: spark.createDataFrame(_driver_union_find(rows), "node long, component long"),
+        _min_label_loop,
+        key="dst",
+    )
+
+
 # Recursive-CTE transitive closure over the verified minhash-LSH pair
-# graph — shared by the components oracle and the cluster-representative
-# oracle below.
-_CC_CTES = f"""
-WITH RECURSIVE
-toks AS (
-  SELECT doc_id, tok, row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS pos
-  FROM (
-    SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+')) AS tok,
-           generate_subscripts(regexp_split_to_array(trim(lower(text)), '\\s+'), 1) AS pos
-    FROM documents
-  )
-), shingles AS (
-  SELECT DISTINCT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS sh
-  FROM toks a
-  JOIN toks b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  JOIN toks c ON a.doc_id = c.doc_id AND c.pos = a.pos + 2
-), hashed AS (
-  SELECT s.doc_id, h.h, min(md5(CAST(h.h AS VARCHAR) || ':' || s.sh)) AS sig
-  FROM shingles s CROSS JOIN (SELECT unnest(range(8)) AS h) h
-  GROUP BY s.doc_id, h.h
-), sigs AS (
-  SELECT doc_id,
-         min(CASE WHEN h = 0 THEN sig END) AS s0, min(CASE WHEN h = 1 THEN sig END) AS s1,
-         min(CASE WHEN h = 2 THEN sig END) AS s2, min(CASE WHEN h = 3 THEN sig END) AS s3,
-         min(CASE WHEN h = 4 THEN sig END) AS s4, min(CASE WHEN h = 5 THEN sig END) AS s5,
-         min(CASE WHEN h = 6 THEN sig END) AS s6, min(CASE WHEN h = 7 THEN sig END) AS s7
-  FROM hashed GROUP BY doc_id
-), bands AS (
-  SELECT doc_id, 0 AS band, md5(s0 || s1) AS key FROM sigs UNION ALL
-  SELECT doc_id, 1, md5(s2 || s3) FROM sigs UNION ALL
-  SELECT doc_id, 2, md5(s4 || s5) FROM sigs UNION ALL
-  SELECT doc_id, 3, md5(s6 || s7) FROM sigs
-), cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a JOIN bands b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-), sizes AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM shingles GROUP BY doc_id
-), inter AS (
-  SELECT c.doc_a, c.doc_b, CAST(count(*) AS BIGINT) AS i
-  FROM cand c
-  JOIN shingles x ON x.doc_id = c.doc_a
-  JOIN shingles y ON y.doc_id = c.doc_b AND y.sh = x.sh
-  GROUP BY c.doc_a, c.doc_b
-), pairs AS (
-  SELECT i.doc_a, i.doc_b
-  FROM inter i JOIN sizes sa ON i.doc_a = sa.doc_id JOIN sizes sb ON i.doc_b = sb.doc_id
-  WHERE round(i.i * 1.0 / (sa.n_sh + sb.n_sh - i.i), 4) >= 0.5
-), edges AS (
+# graph — the shared pair pipeline (so CC and the dedup operators can
+# never disagree about what an edge is, and ``pairs`` stays MATERIALIZED)
+# opened as a recursive WITH, then the symmetrized edges and their
+# reachability closure. Shared by every cluster oracle below.
+_CC_CTES = (
+    _MINHASH_PAIRS_CTES.replace("WITH", "WITH RECURSIVE", 1)
+    + """
+, edges AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs UNION SELECT doc_b, doc_a FROM pairs
 ), reach(a, b) AS (
   SELECT a, b FROM edges
@@ -181,6 +193,7 @@ toks AS (
   SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
 )
 """
+)
 
 
 @query(

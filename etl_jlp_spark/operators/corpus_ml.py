@@ -18,9 +18,8 @@ oracle already relies on.
 Scale shapes:
 - textrank_keywords: edge list is adjacency-pair-bounded (∝ corpus
   positions, grouped to the vocabulary² ceiling that co-occurrence
-  actually realizes — in practice ≪ vocab²); 5 fixed power-iteration
-  rounds over the edge list with localCheckpoint lineage truncation,
-  with the same tiny-graph driver shortcut as operators/graph.py.
+  actually realizes — in practice ≪ vocab²); 5 fixed rounds of
+  operators/graph.py's weighted PageRank, driver-side on a tiny graph.
 - js_divergence_sources: one corpus scan → vocab-sized (source, term)
   counts; the pair join is term-equi over that bounded relation; the
   missing-vocabulary mass enters algebraically ((1−P_shared)·ln2 per
@@ -49,7 +48,6 @@ TR_ITERS = 5  # fixed so the oracle can unroll it (graph.py convention)
 TR_MIN_LEN = 3  # drop 1-2 letter tokens from the keyword graph
 TR_TOP_K = 25
 TR_ROUND = 6
-DRIVER_TR_MAX_EDGES = 100_000  # same rationale as graph.DRIVER_PR_MAX_EDGES
 
 JS_ROUND = 6
 QN_GRID = 200  # pooled-quantile resolution (1/200 of the pooled CDF)
@@ -103,25 +101,6 @@ def _textrank_iter_ctes() -> str:
     return out
 
 
-def _driver_textrank(edges: list) -> list[tuple[str, float]]:
-    """Weighted power iteration over collected (a, b, w) rows — the
-    tiny-graph shortcut, same arithmetic as the loop and the oracle."""
-    nbrs: dict[str, list[tuple[str, int]]] = {}
-    wdeg: dict[str, float] = {}
-    for a, b, w in edges:
-        nbrs.setdefault(a, []).append((b, w))
-        wdeg[a] = wdeg.get(a, 0.0) + w
-    n = float(len(nbrs))
-    ranks = {v: 1.0 / n for v in nbrs}
-    for _ in range(TR_ITERS):
-        contrib: dict[str, float] = {v: 0.0 for v in nbrs}
-        for src, outs in nbrs.items():
-            for dst, w in outs:
-                contrib[dst] += ranks[src] * w / wdeg[src]
-        ranks = {v: (1 - TR_DAMPING) / n + TR_DAMPING * contrib[v] for v in nbrs}
-    return list(ranks.items())
-
-
 @query(
     "textrank_keywords",
     oracle=_TR_CTES
@@ -143,12 +122,13 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     extractor (Mihalcea & Tarau 2004), here as a corpus-level query.
 
     Plan: one tokenized scan → adjacency pairs via zip_with (no
-    self-join), grouped to the realized co-occurrence vocabulary;
-    ≤{cap:,} measured edges solve driver-side (5 distributed rounds
-    are pure scheduler latency on a tiny graph), else the classic
-    join-agg loop with localCheckpoint lineage truncation. Selection
-    orders by round(rank, 9) so both engines pick the identical top
-    set despite ~1e-15 float-sum noise."""
+    self-join), grouped to the realized co-occurrence vocabulary, then
+    graph.py's weighted PageRank (driver-side on a tiny graph, else
+    the join-agg loop with localCheckpoint lineage truncation).
+    Selection orders by round(rank, 9) so both engines pick the
+    identical top set despite ~1e-15 float-sum noise."""
+    from etl_jlp_spark.operators.graph import _pagerank
+
     tokd = _tok_arrays(spark, sf_dir)
     big = (
         tokd.filter(F.col("n_toks") >= 2)
@@ -170,48 +150,13 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.length("b") >= TR_MIN_LEN)
         )
         .groupBy(
-            F.least("a", "b").alias("a"),
-            F.greatest("a", "b").alias("b"),
+            F.least("a", "b").alias("src"),
+            F.greatest("a", "b").alias("dst"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
     )
-    edges = cano.unionAll(
-        cano.select(F.col("b").alias("a"), F.col("a").alias("b"), "w")
-    ).persist()
-    n_edges = edges.count()
-    if n_edges <= DRIVER_TR_MAX_EDGES:
-        out = _driver_textrank([(r["a"], r["b"], r["w"]) for r in edges.collect()])
-        edges.unpersist()
-        ranked = spark.createDataFrame(out, "term string, rank double")
-    else:
-        deg = edges.groupBy(F.col("a").alias("node")).agg(
-            F.sum("w").cast("double").alias("wdeg")
-        )
-        n_nodes = deg.count()
-        ranks = deg.select(
-            "node", "wdeg", F.lit(1.0 / n_nodes).alias("rank")
-        ).localCheckpoint(eager=True)
-        for _ in range(TR_ITERS):
-            contrib = (
-                edges.join(ranks, edges.a == ranks.node)
-                .groupBy("b")
-                .agg(F.sum(F.col("rank") * F.col("w") / F.col("wdeg")).alias("c"))
-            )
-            ranks = (
-                ranks.drop("rank")
-                .join(contrib, ranks.node == contrib.b, "left")
-                .select(
-                    "node",
-                    "wdeg",
-                    (
-                        F.lit((1 - TR_DAMPING) / n_nodes)
-                        + TR_DAMPING * F.coalesce(F.col("c"), F.lit(0.0))
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        edges.unpersist()
-        ranked = ranks.select(F.col("node").alias("term"), "rank")
+    edges = cano.unionAll(cano.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
+    ranked = _pagerank(edges, TR_DAMPING, TR_ITERS).withColumnRenamed("node", "term")
     top = ranked.orderBy(F.round("rank", 9).desc(), "term").limit(TR_TOP_K)
     return top.select(
         "term",
@@ -223,9 +168,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-textrank_keywords.__doc__ = (textrank_keywords.__doc__ or "").format(
-    k=TR_TOP_K, cap=DRIVER_TR_MAX_EDGES
-)
+textrank_keywords.__doc__ = (textrank_keywords.__doc__ or "").format(k=TR_TOP_K)
 
 
 # ---------------------------------------------------------------------------

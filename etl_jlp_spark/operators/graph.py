@@ -9,27 +9,29 @@ the duplicate clusters are (near-dup clusters from one template are
 near-cliques; chains of pairwise-similar-but-drifting revisions are
 triangle-free — the two need different curation responses).
 
-Both operators share the scale posture of connected components
-(operators/components.py): the edge list is match-bounded (≪ corpus at
-any scale — millions of edges at 100 TB, not trillions), so iteration
-cost is ∝ duplication, not corpus size. PageRank is the canonical
+The edge list is match-bounded (≪ corpus at any scale — millions of
+edges at 100 TB, not trillions), so iteration cost is ∝ duplication,
+not corpus size. Every iterative operator here (PageRank, LPA, k-hop,
+k-core) runs through ``components.solve_edges``, the one scale-adaptive
+solver connected components and TextRank use too: a tiny measured edge
+list solves in microseconds on the driver; a big one runs the canonical
 iterative-Spark shape — join + aggregate per round with
-``localCheckpoint`` lineage truncation — with the same scale-adaptive
-driver shortcut as CC: a tiny measured edge list solves in microseconds
-on the driver instead of paying ~1 s/round of scheduler latency.
+``localCheckpoint`` lineage truncation.
 
 Reference: the reference has no graph layer at all (its dedup story
 stops at pandas drop_duplicates, dwh_lab/dwh/general_lib.py); this
 module is part of the beyond-reference training-data surface.
 
-Oracles: the shared ``_MINHASH_PAIRS_CTES`` pair pipeline (so the graph
-and the dedup operators can never disagree about what an edge is), then
-PageRank unrolled to its fixed iteration count in chained CTEs and the
-triangle census as one 3-way self-join. The pipeline's final ``pairs``
+Oracles: the shared ``_MINHASH_PAIRS_CTES`` pair pipeline (so the graph,
+CC and dedup operators can never disagree about what an edge is), then
+each iterative algorithm unrolled to its fixed round count in chained
+CTEs (PageRank, LPA, k-hop, k-core) or one closed-form query (the
+triangle census as one 3-way self-join). The pipeline's final ``pairs``
 CTE is MATERIALIZED, so it runs once per oracle however many unrolled
 rounds reference ``edges``/``nodes``/``deg``/``und``; DuckDB still
 inlines every other CTE at each reference, so a round chain that
-references its previous round more than once re-runs those rounds.
+references its previous round more than once re-runs those rounds
+(k-core therefore materializes its own chain).
 """
 
 from __future__ import annotations
@@ -37,16 +39,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_jlp_spark.operators.components import _sym_edges, solve_edges
 from etl_jlp_spark.operators.similarity import _MINHASH_PAIRS_CTES, dedup_minhash_lsh
 from etl_jlp_spark.registry import query
 
 PR_DAMPING = 0.85
 PR_ITERS = 5  # fixed (not to-convergence) so the oracle can unroll it
 PR_ROUND = 6
-# Same rationale as components.DRIVER_CC_MAX_EDGES: below this, 5
-# distributed rounds are pure scheduler latency; the count that gates
-# the switch also sizes the distributed path's shuffle width.
-DRIVER_PR_MAX_EDGES = 100_000
 
 _GRAPH_CTES = (
     _MINHASH_PAIRS_CTES
@@ -61,20 +60,6 @@ _GRAPH_CTES = (
   SELECT a AS node, CAST(count(*) AS DOUBLE) AS deg FROM edges GROUP BY a
 )"""
 )
-
-
-def _sym_edges(pairs):
-    """Symmetrized distinct (src, dst) edge relation from an a<b pair
-    list — the single Spark-side edge canonicalization every graph
-    operator shares (mirror of the oracle-side ``edges`` CTE in
-    ``_GRAPH_CTES``)."""
-    return (
-        pairs.unionAll(
-            pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        .distinct()
-        .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    )
 
 
 def _degrees(edges):
@@ -106,22 +91,67 @@ def _pagerank_iter_ctes() -> str:
     return out
 
 
-def _driver_pagerank(rows: list) -> list[tuple[int, float]]:
-    """Power iteration over collected (src, dst) rows — the tiny-graph
-    shortcut. Same arithmetic as the distributed loop and the oracle."""
-    nbrs: dict[int, list[int]] = {}
-    for s, d in rows:
-        nbrs.setdefault(s, []).append(d)
+def _driver_pagerank(rows: list, damping: float, iters: int) -> list[tuple]:
+    """Weighted power iteration over collected (src, dst, w) rows — the
+    tiny-graph shortcut. Same arithmetic as the distributed loop and
+    both oracles: rank·w/wdeg edge contributions, (1−d)/n teleport."""
+    nbrs: dict = {}
+    wdeg: dict = {}
+    for s, d, w in rows:
+        nbrs.setdefault(s, []).append((d, w))
+        wdeg[s] = wdeg.get(s, 0.0) + w
     n = float(len(nbrs))
     ranks = {v: 1.0 / n for v in nbrs}
-    for _ in range(PR_ITERS):
-        contrib: dict[int, float] = {v: 0.0 for v in nbrs}
+    for _ in range(iters):
+        contrib = {v: 0.0 for v in nbrs}
         for src, outs in nbrs.items():
-            share = ranks[src] / len(outs)
-            for dst in outs:
-                contrib[dst] += share
-        ranks = {v: (1 - PR_DAMPING) / n + PR_DAMPING * contrib[v] for v in nbrs}
-    return sorted((v, round(r, PR_ROUND)) for v, r in ranks.items())
+            for dst, w in outs:
+                contrib[dst] += ranks[src] * w / wdeg[src]
+        ranks = {v: (1 - damping) / n + damping * contrib[v] for v in nbrs}
+    return sorted(ranks.items())
+
+
+def _pagerank(edges: DataFrame, damping: float, iters: int) -> DataFrame:
+    """(node, rank) after ``iters`` weighted power-iteration rounds over
+    a symmetric (src, dst, w) edge relation — the one PageRank behind
+    graph_pagerank (w = 1) and textrank_keywords (w = co-occurrence
+    count). Ranks come back unrounded; callers round in Spark on both
+    paths."""
+    spark = edges.sparkSession
+    node_type = edges.schema["src"].dataType.simpleString()
+
+    def driver(rows):
+        out = _driver_pagerank(rows, damping, iters)
+        return spark.createDataFrame(out, f"node {node_type}, rank double")
+
+    def distributed(edges):
+        deg = edges.groupBy("src").agg(F.sum("w").cast("double").alias("deg"))
+        n_nodes = deg.count()
+        ranks = deg.select(
+            F.col("src").alias("node"), "deg", F.lit(1.0 / n_nodes).alias("rank")
+        ).localCheckpoint(eager=True)
+        for _ in range(iters):
+            contrib = (
+                edges.join(ranks, edges.src == ranks.node)
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") * F.col("w") / F.col("deg")).alias("c"))
+            )
+            ranks = (
+                ranks.drop("rank")
+                .join(contrib, ranks.node == contrib.dst, "left")
+                .select(
+                    "node",
+                    "deg",
+                    (
+                        F.lit((1 - damping) / n_nodes)
+                        + F.lit(damping) * F.coalesce("c", F.lit(0.0))
+                    ).alias("rank"),
+                )
+                .localCheckpoint(eager=True)
+            )
+        return ranks.select("node", "rank")
+
+    return solve_edges(edges, driver, distributed)
 
 
 @query(
@@ -141,49 +171,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     has degree ≥ 1), so the teleport term is the only mass correction.
 
     Scale: iteration operand is the match-bounded edge list, never the
-    corpus. Tiny graphs (≤ {DRIVER_PR_MAX_EDGES:,} measured edges — the
-    count is paid anyway to size the shuffle) solve driver-side;
-    otherwise the classic join-agg loop runs with ``localCheckpoint``
-    truncating lineage per round (the iterative-Spark pitfall CC
-    already documents)."""
+    corpus; ``_pagerank`` (w = 1) solves tiny graphs driver-side and
+    otherwise runs the join-agg loop with ``localCheckpoint``
+    truncating lineage per round."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    cached = _sym_edges(pairs).persist()
-    n_edges = cached.count()
-    if n_edges <= DRIVER_PR_MAX_EDGES:
-        out = _driver_pagerank([(r["src"], r["dst"]) for r in cached.collect()])
-        cached.unpersist()
-        return spark.createDataFrame(out, "node long, pagerank double")
-    sc = cached.sparkSession.sparkContext
-    n_part = max(1, min(sc.defaultParallelism, n_edges // 100_000 + 1))
-    # keep the persisted handle: unpersisting the REPARTITIONED plan is
-    # a no-op (Dataset.unpersist matches the exact logical plan), which
-    # leaked the cached edge blocks for the session lifetime
-    edges = cached.repartition(n_part, "src")
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("double").alias("deg"))
-    n_nodes = deg.count()
-    ranks = deg.select(
-        F.col("src").alias("node"), "deg", F.lit(1.0 / n_nodes).alias("rank")
-    ).localCheckpoint(eager=True)
-    for _ in range(PR_ITERS):
-        contrib = (
-            edges.join(ranks, edges.src == ranks.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") / F.col("deg")).alias("c"))
-        )
-        ranks = (
-            ranks.drop("rank")
-            .join(contrib, ranks.node == contrib.dst, "left")
-            .select(
-                "node",
-                "deg",
-                (
-                    F.lit((1 - PR_DAMPING) / n_nodes)
-                    + F.lit(PR_DAMPING) * F.coalesce("c", F.lit(0.0))
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    cached.unpersist()
+    ranks = _pagerank(_sym_edges(pairs).withColumn("w", F.lit(1)), PR_DAMPING, PR_ITERS)
     return ranks.select(
         F.col("node").cast("long").alias("node"),
         F.round("rank", PR_ROUND).alias("pagerank"),
@@ -260,7 +252,6 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 LPA_ITERS = 4  # fixed so the oracle can unroll it
-DRIVER_LPA_MAX_EDGES = 100_000
 
 
 def _lpa_iter_ctes() -> str:
@@ -319,9 +310,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: per round ONE edges⋈labels join + a (node, label) count +
     a per-node top-1 window — all keyed on the match-bounded edge
-    list, with ``localCheckpoint`` truncating lineage between rounds.
-    Graphs ≤ {DRIVER_LPA_MAX_EDGES:,} measured edges short-circuit to
-    the driver (the count is paid anyway to size the shuffle). The
+    list, with ``localCheckpoint`` truncating lineage between rounds;
+    tiny graphs short-circuit to the driver (``solve_edges``). The
     oracle unrolls the same {LPA_ITERS} rounds as chained CTEs."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     return _lpa_from_pairs(spark, pairs)
@@ -336,24 +326,17 @@ def _lpa_from_pairs(spark: SparkSession, pairs) -> DataFrame:
     localCheckpoint — so plan-fragment reuse can never bridge the two)."""
     from pyspark.sql import Window
 
-    # try/finally: a failure mid-loop must still release the cache — a
-    # lingering CacheManager entry for the edge subtree hijacks every
-    # later dedup_minhash_lsh consumer in the session (round-10 lesson).
-    cached = _sym_edges(pairs).persist()
-    try:
-        n_edges = cached.count()
-        if n_edges <= DRIVER_LPA_MAX_EDGES:
-            labs = _driver_lpa([(r["src"], r["dst"]) for r in cached.collect()])
-            sizes: dict[int, int] = {}
-            for _, lab in labs:
-                sizes[lab] = sizes.get(lab, 0) + 1
-            return spark.createDataFrame(
-                [(n, lab, sizes[lab]) for n, lab in labs],
-                "node long, community long, community_size long",
-            )
-        sc = cached.sparkSession.sparkContext
-        n_part = max(1, min(sc.defaultParallelism, n_edges // 100_000 + 1))
-        edges = cached.repartition(n_part, "dst")  # keep `cached` for unpersist
+    def driver(rows):
+        labs = _driver_lpa(rows)
+        sizes: dict[int, int] = {}
+        for _, lab in labs:
+            sizes[lab] = sizes.get(lab, 0) + 1
+        return spark.createDataFrame(
+            [(n, lab, sizes[lab]) for n, lab in labs],
+            "node long, community long, community_size long",
+        )
+
+    def distributed(edges):
         labels = (
             edges.select(F.col("dst").alias("node"))
             .distinct()
@@ -372,14 +355,14 @@ def _lpa_from_pairs(spark: SparkSession, pairs) -> DataFrame:
                 .select("node", "label")
                 .localCheckpoint(eager=True)
             )
-    finally:
-        cached.unpersist()
-    wsize = Window.partitionBy("label")
-    return labels.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("label").cast("long").alias("community"),
-        F.count(F.lit(1)).over(wsize).cast("long").alias("community_size"),
-    )
+        wsize = Window.partitionBy("label")
+        return labels.select(
+            F.col("node").cast("long").alias("node"),
+            F.col("label").cast("long").alias("community"),
+            F.count(F.lit(1)).over(wsize).cast("long").alias("community_size"),
+        )
+
+    return solve_edges(_sym_edges(pairs), driver, distributed, key="dst")
 
 
 # ---------------------------------------------------------------------------
@@ -478,43 +461,41 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per round ONE state⋈edges join + a min aggregate with
     ``localCheckpoint`` truncating lineage; ≤
     {DRIVER_KHOP_MAX_EDGES:,} measured edges short-circuits to a
-    driver BFS (the count is paid anyway to size the shuffle). The
-    oracle unrolls the same rounds as chained single-reference CTEs
-    seeded from every node."""
+    driver BFS. The oracle unrolls the same rounds as chained
+    single-reference CTEs seeded from every node."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    cached = _sym_edges(pairs).persist()
-    n_edges = cached.count()
     schema = "node long, " + ", ".join(f"reach_{k} long" for k in range(1, KHOP_ITERS + 1))
-    if n_edges <= DRIVER_KHOP_MAX_EDGES:
-        out = _driver_khop([(r["src"], r["dst"]) for r in cached.collect()])
-        cached.unpersist()
-        return spark.createDataFrame(out, schema)
-    sc = cached.sparkSession.sparkContext
-    n_part = max(1, min(sc.defaultParallelism, n_edges // 100_000 + 1))
-    edges = cached.repartition(n_part, "src")  # keep `cached` for unpersist
-    dist = (
-        edges.select(F.col("src").alias("root"))
-        .distinct()
-        .select("root", F.col("root").alias("node"), F.lit(0).alias("dist"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(KHOP_ITERS):
+
+    def distributed(edges):
         dist = (
-            edges.join(dist, edges.src == dist.node)
-            .select("root", F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
-            .unionAll(dist)
-            .groupBy("root", "node")
-            .agg(F.min("dist").alias("dist"))
+            edges.select(F.col("src").alias("root"))
+            .distinct()
+            .select("root", F.col("root").alias("node"), F.lit(0).alias("dist"))
             .localCheckpoint(eager=True)
         )
-    cached.unpersist()
-    return dist.groupBy(F.col("root").cast("long").alias("node")).agg(
-        *[
-            F.sum(F.when(F.col("dist").between(1, k), 1).otherwise(0))
-            .cast("long")
-            .alias(f"reach_{k}")
-            for k in range(1, KHOP_ITERS + 1)
-        ]
+        for _ in range(KHOP_ITERS):
+            dist = (
+                edges.join(dist, edges.src == dist.node)
+                .select("root", F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))
+                .unionAll(dist)
+                .groupBy("root", "node")
+                .agg(F.min("dist").alias("dist"))
+                .localCheckpoint(eager=True)
+            )
+        return dist.groupBy(F.col("root").cast("long").alias("node")).agg(
+            *[
+                F.sum(F.when(F.col("dist").between(1, k), 1).otherwise(0))
+                .cast("long")
+                .alias(f"reach_{k}")
+                for k in range(1, KHOP_ITERS + 1)
+            ]
+        )
+
+    return solve_edges(
+        _sym_edges(pairs),
+        lambda rows: spark.createDataFrame(_driver_khop(rows), schema),
+        distributed,
+        max_edges=DRIVER_KHOP_MAX_EDGES,
     )
 
 
@@ -892,6 +873,21 @@ def _kcore_ctes() -> str:
     return out
 
 
+def _driver_kcore(rows: list) -> list[tuple[int, int, int]]:
+    """The peel rounds over collected (src, dst) rows — the tiny-graph
+    shortcut, same rule as the distributed loop and the oracle."""
+    edges = {(s, d) for s, d in rows}
+    out = []
+    for rnd in range(1, KCORE_ROUNDS + 1):
+        deg: dict[int, int] = {}
+        for s, _d in edges:
+            deg[s] = deg.get(s, 0) + 1
+        keep = {v for v, c in deg.items() if c >= KCORE_K}
+        edges = {(s, t) for s, t in edges if s in keep and t in keep}
+        out.append((rnd, len(keep), len(edges) // 2))
+    return out
+
+
 @query(
     "graph_kcore_peel",
     oracle=_GRAPH_CTES
@@ -918,48 +914,36 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale posture of the module: iteration operand is the
     match-bounded edge list (∝ duplication, not corpus); each round is
     one groupBy + two semi-joins with localCheckpoint truncating
-    lineage, and a ≤{cap:,}-edge graph solves driver-side."""
+    lineage, and a tiny graph solves driver-side (``solve_edges``)."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    cached = _sym_edges(pairs).persist()
-    n_edges = cached.count()
-    if n_edges <= DRIVER_PR_MAX_EDGES:
-        rows = [(r["src"], r["dst"]) for r in cached.collect()]
-        cached.unpersist()
-        edges = set(rows)
-        out = []
+    schema = "round long, n_nodes long, n_pairs long"
+
+    def distributed(edges):
+        stats = []
         for rnd in range(1, KCORE_ROUNDS + 1):
-            deg: dict[int, int] = {}
-            for s, _d in edges:
-                deg[s] = deg.get(s, 0) + 1
-            keep = {v for v, c in deg.items() if c >= KCORE_K}
-            edges = {(s, t) for s, t in edges if s in keep and t in keep}
-            out.append((rnd, len(keep), len(edges) // 2))
-        return spark.createDataFrame(out, "round long, n_nodes long, n_pairs long")
-    sc = cached.sparkSession.sparkContext
-    n_part = max(1, min(sc.defaultParallelism, n_edges // 100_000 + 1))
-    edges = cached.repartition(n_part, "src").localCheckpoint(eager=True)
-    stats = []
-    for rnd in range(1, KCORE_ROUNDS + 1):
-        keep = (
-            edges.groupBy(F.col("src").alias("node"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .filter(F.col("c") >= KCORE_K)
-            .select("node")
-        )
-        edges = (
-            edges.join(keep.withColumnRenamed("node", "src"), "src")
-            .join(keep.withColumnRenamed("node", "dst"), "dst")
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        stats.append((rnd, keep.count(), edges.count() // 2))
-    cached.unpersist()
-    return spark.createDataFrame(stats, "round long, n_nodes long, n_pairs long")
+            keep = (
+                edges.groupBy(F.col("src").alias("node"))
+                .agg(F.count(F.lit(1)).alias("c"))
+                .filter(F.col("c") >= KCORE_K)
+                .select("node")
+            )
+            edges = (
+                edges.join(keep.withColumnRenamed("node", "src"), "src")
+                .join(keep.withColumnRenamed("node", "dst"), "dst")
+                .select("src", "dst")
+                .localCheckpoint(eager=True)
+            )
+            stats.append((rnd, keep.count(), edges.count() // 2))
+        return spark.createDataFrame(stats, schema)
+
+    return solve_edges(
+        _sym_edges(pairs),
+        lambda rows: spark.createDataFrame(_driver_kcore(rows), schema),
+        distributed,
+    )
 
 
-graph_kcore_peel.__doc__ = (graph_kcore_peel.__doc__ or "").format(
-    k=KCORE_K, r=KCORE_ROUNDS, cap=DRIVER_PR_MAX_EDGES
-)
+graph_kcore_peel.__doc__ = (graph_kcore_peel.__doc__ or "").format(k=KCORE_K, r=KCORE_ROUNDS)
 
 
 # ---------------------------------------------------------------------------

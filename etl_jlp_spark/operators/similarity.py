@@ -147,16 +147,20 @@ def _minhash_bands(shingles: DataFrame) -> DataFrame:
 
 # the full LSH pair pipeline as reusable CTE text: shingles → k minhash
 # sigs → bands → candidate pairs → exact-Jaccard verification. Shared by
-# the dedup oracle and the split-leakage oracle so the two can never
-# drift.
+# the dedup oracle, the split-leakage oracle, the graph oracles
+# (operators/graph.py) and the connected-components oracles
+# (operators/components.py ``_CC_CTES``: dedup_connected_components,
+# dedup_cluster_representative, softdedup_weights, dedup_cc_incremental,
+# dup_cluster_size_histogram, golden_record_merge) so none can drift.
 #
 # ``pairs`` is MATERIALIZED: DuckDB inlines a CTE at every reference, and
-# the graph oracles (operators/graph.py) reference ``pairs`` through
-# ``edges``, ``nodes``, ``deg`` and ``und`` in every unrolled round, so
-# inlined, one plan re-runs this whole pipeline many times over. At
-# sf0.001 on one thread in a 4.4 GiB budget, graph_pagerank ran out of
-# memory after 79-125 s (3.2-3.3 GB peak RSS) and graph_modularity after
-# 55-66 s (2.9 GB); materialized, each takes ~2 s and ~225 MB.
+# the graph oracles reference ``pairs`` through ``edges``, ``nodes``,
+# ``deg`` and ``und`` in every unrolled round (the CC oracles through
+# ``edges`` in the recursive ``reach``), so inlined, one plan re-runs
+# this whole pipeline many times over. At sf0.001 on one thread in a
+# 4.4 GiB budget, graph_pagerank ran out of memory after 79-125 s
+# (3.2-3.3 GB peak RSS) and graph_modularity after 55-66 s (2.9 GB);
+# materialized, each takes ~2 s and ~225 MB.
 _MINHASH_PAIRS_CTES = f"""
 WITH {_SHINGLES_CTE},
 hashed AS (

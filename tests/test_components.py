@@ -29,7 +29,7 @@ def test_distributed_path_long_chain(spark, monkeypatch):
     also guards the converge-or-raise fix."""
     from etl_jlp_spark.operators import components as C
 
-    monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(C, "DRIVER_MAX_EDGES", 0)
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "doc_a long, doc_b long"
     )
@@ -45,7 +45,7 @@ def test_driver_and_distributed_paths_agree(spark, monkeypatch):
         "doc_a long, doc_b long",
     )
     small = sorted(map(tuple, C.connected_components(pairs).collect()))
-    monkeypatch.setattr(C, "DRIVER_CC_MAX_EDGES", 0)
+    monkeypatch.setattr(C, "DRIVER_MAX_EDGES", 0)
     big = sorted(map(tuple, C.connected_components(pairs).collect()))
     assert small == big == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (21, 20), (22, 20)]
 

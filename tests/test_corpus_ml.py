@@ -53,6 +53,19 @@ def test_textrank_matches_python_replica(spark):
     ]
 
 
+
+def test_textrank_distributed_path_matches_driver(spark, monkeypatch):
+    """Force the distributed PageRank loop (threshold 0): the term graph
+    has under a thousand directed edges at every test scale, so only this
+    test runs the loop — identical top-k rows to the driver shortcut."""
+    from etl_jlp_spark.operators import components
+
+    want = [tuple(r) for r in QS["textrank_keywords"](spark, SF_SMALL).collect()]
+    assert len(want) == 25
+    monkeypatch.setattr(components, "DRIVER_MAX_EDGES", 0)
+    got = [tuple(r) for r in QS["textrank_keywords"](spark, SF_SMALL).collect()]
+    assert got == want
+
 def test_js_divergence_bounds_and_replica(spark):
     rows = QS["js_divergence_sources"](spark, SF_SMALL).collect()
     assert len(rows) == 190  # C(20,2) source pairs

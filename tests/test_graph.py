@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMALL
-from etl_jlp_spark.operators import graph
+from etl_jlp_spark.operators import components, graph
 
 import __spark_entry__ as ent
 
@@ -23,7 +23,8 @@ def test_driver_pagerank_two_cliques_hand_values():
     damped mass == 1.0 (mass conservation, undirected ⇒ no dangling
     leakage)."""
     tri = [(1, 2), (2, 1), (1, 3), (3, 1), (2, 3), (3, 2), (8, 9), (9, 8)]
-    out = dict(graph._driver_pagerank(tri))
+    weighted = [(s, d, 1) for s, d in tri]
+    out = dict(graph._driver_pagerank(weighted, graph.PR_DAMPING, graph.PR_ITERS))
     assert set(out) == {1, 2, 3, 8, 9}
     # symmetry within each regular component
     assert out[1] == out[2] == out[3]
@@ -42,7 +43,7 @@ def test_pagerank_distributed_path_matches_driver(spark, monkeypatch):
         r["node"]: r["pagerank"] for r in graph.graph_pagerank(spark, SF_SMALL).collect()
     }
     assert want, "sf0.001 near-dup graph should not be empty"
-    monkeypatch.setattr(graph, "DRIVER_PR_MAX_EDGES", 0)
+    monkeypatch.setattr(components, "DRIVER_MAX_EDGES", 0)
     got = {
         r["node"]: r["pagerank"] for r in graph.graph_pagerank(spark, SF_SMALL).collect()
     }
@@ -97,7 +98,7 @@ def test_lpa_distributed_path_matches_driver(spark, monkeypatch):
         for r in graph.graph_label_propagation(spark, SF_SMALL).collect()
     }
     assert want, "sf0.001 near-dup graph should not be empty"
-    monkeypatch.setattr(graph, "DRIVER_LPA_MAX_EDGES", 0)
+    monkeypatch.setattr(components, "DRIVER_MAX_EDGES", 0)
     got = {
         r["node"]: (r["community"], r["community_size"])
         for r in graph.graph_label_propagation(spark, SF_SMALL).collect()
@@ -168,3 +169,44 @@ def test_khop_reach_monotone_and_bounded(spark):
         reaches = [r[f"reach_{k}"] for k in range(1, graph.KHOP_ITERS + 1)]
         assert all(a <= b for a, b in zip(reaches, reaches[1:]))
         assert reaches[0] >= 1  # every node in the pair graph has a neighbor
+
+
+def test_kcore_distributed_path_matches_driver(spark, monkeypatch):
+    """Force the distributed peel loop (threshold 0): identical
+    (round, n_nodes, n_pairs) rows to the driver shortcut."""
+    want = sorted(map(tuple, graph.graph_kcore_peel(spark, SF_SMALL).collect()))
+    assert len(want) == graph.KCORE_ROUNDS
+    monkeypatch.setattr(components, "DRIVER_MAX_EDGES", 0)
+    got = sorted(map(tuple, graph.graph_kcore_peel(spark, SF_SMALL).collect()))
+    assert got == want
+
+
+@pytest.mark.parametrize("forced", [False, True], ids=["driver", "distributed"])
+def test_graph_operators_release_their_caches(spark, monkeypatch, forced):
+    """Every graph operator unpersists what it persisted, on both paths:
+    a CacheManager entry left behind is substituted into every later
+    plan containing the same subtree. Counts entries instead of clearing
+    the cache first, which would also drop the session-memoized frames
+    other tests rely on (``similarity.batch_shingles_bands``)."""
+    pair_rows = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (7, 8)]
+
+    def fake_pairs(spark_, sf_dir_):
+        return spark.createDataFrame(pair_rows, "doc_a long, doc_b long")
+
+    monkeypatch.setattr(graph, "dedup_minhash_lsh", fake_pairs)
+    if forced:
+        monkeypatch.setattr(components, "DRIVER_MAX_EDGES", 0)
+        monkeypatch.setattr(graph, "DRIVER_KHOP_MAX_EDGES", 0)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    for op in (
+        lambda s, d: components.connected_components(fake_pairs(s, d)),
+        graph.graph_pagerank,
+        graph.graph_label_propagation,
+        graph.graph_khop_reach,
+        graph.graph_kcore_peel,
+        graph.graph_modularity,
+        graph.graph_triangle_stats,
+    ):
+        op(spark, SF_SMALL).write.mode("overwrite").format("noop").save()
+    assert cache.numCachedEntries() == before

@@ -124,8 +124,9 @@ def oracle_connection(sf_dir: str):
     overcommits a 15 GiB host, and the kernel then kills the JVM; with
     the budget, an oracle that needs more fails alone with DuckDB's
     out-of-memory error. An oracle's working memory grows with DuckDB's
-    thread count: at sf0.001 golden_record_merge needs more than 7 GiB
-    on 4 threads, more than 4.3 GiB on 2 and fits in 4.3 GiB on 1."""
+    thread count: at sf0.001 golden_record_merge, while it still inlined
+    its own copy of the pair pipeline, needed more than 7 GiB on 4
+    threads, more than 4.3 GiB on 2 and fit in 4.3 GiB on 1."""
     import os
 
     import duckdb
