@@ -39,7 +39,7 @@ def sniff_format(path: str) -> str:
        (``…/entity/{fmt}/{job_date}``) — ONLY that position, so an
        entity literally named 'json' can't short-circuit detection;
     2. data-file extensions (all files must agree);
-    3. magic bytes / first character of up to {_SNIFF_SAMPLE} data
+    3. magic bytes / first character of up to ``_SNIFF_SAMPLE`` data
        files (must agree).
     Disagreement raises instead of silently guessing (ADVICE r2).
     """

@@ -152,7 +152,7 @@ def phash_pairs_vs_index(
 ) -> DataFrame:
     """(id_a ∈ probe, id_b ∈ index, hamming) near-duplicate pairs.
     Banded equi-join generates candidates (complete for distances ≤
-    {PHASH_BANDS}−1 by pigeonhole); exact verification is one codegen'd
+    ``PHASH_BANDS``−1 by pigeonhole); exact verification is one codegen'd
     ``bit_count(xor)``. No cross join at any scale. With
     ``dedupe_self`` (probe IS the index) only id_a < id_b survives;
     otherwise same-id hits are dropped (an image probing an index that

@@ -257,7 +257,7 @@ SELECT source, term, y_ts, z, CAST(rk AS INT) AS rk FROM (
 """,
 )
 def source_logodds_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{LOGODDS_TOP_K} distinctive terms per source by
+    """Top-``LOGODDS_TOP_K`` distinctive terms per source by
     prior-shrunk, variance-normalized log-odds vs the rest of the
     corpus (Monroe et al. 2008).
 
@@ -356,13 +356,13 @@ FROM s
 )
 def zipf_rank_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf fit: OLS slope of ln(count) on ln(rank) over the corpus's
-    top-{ZIPF_TOP_N} terms (rank ties broken by term so both engines
+    top-``ZIPF_TOP_N`` terms (rank ties broken by term so both engines
     rank identically), plus intercept and R². One row out.
 
     Plan: one tokenize pass → (term, count) groupBy with partial
-    aggregation; the head is TakeOrdered-{ZIPF_TOP_N} (per-partition
+    aggregation; the head is TakeOrdered-``ZIPF_TOP_N`` (per-partition
     heap + driver merge, no global sort); the OLS runs over the
-    {ZIPF_TOP_N}-row result. Log sums are engine-stable at 6 decimals:
+    ``ZIPF_TOP_N``-row result. Log sums are engine-stable at 6 decimals:
     ≤1 ulp libm noise × 1k terms ≪ the rounding quantum."""
     tok = _tok_arrays(spark, sf_dir)
     term_counts = (

@@ -303,7 +303,7 @@ FROM l{LPA_ITERS}
 """,
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """{LPA_ITERS} synchronous label-propagation rounds over the
+    """``LPA_ITERS`` synchronous label-propagation rounds over the
     near-dup graph: each node adopts its neighborhood's
     (max-frequency, min-on-tie) label; output is (node, community,
     community_size).
@@ -312,7 +312,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-node top-1 window — all keyed on the match-bounded edge
     list, with ``localCheckpoint`` truncating lineage between rounds;
     tiny graphs short-circuit to the driver (``solve_edges``). The
-    oracle unrolls the same {LPA_ITERS} rounds as chained CTEs."""
+    oracle unrolls the same ``LPA_ITERS`` rounds as chained CTEs."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     return _lpa_from_pairs(spark, pairs)
 
@@ -451,7 +451,7 @@ FROM d{KHOP_ITERS} GROUP BY root
 )
 def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-hop neighborhood profile of the near-dup graph: for EVERY
-    node, how many other documents are within 1, 2, ... {KHOP_ITERS}
+    node, how many other documents are within 1, 2, ... ``KHOP_ITERS``
     hops — the geodesic shape of each duplicate cluster (a clique
     saturates at hop 1; a revision chain keeps growing), and a
     standard structural feature for downstream cluster triage.
@@ -460,7 +460,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bounded by Σ component², i.e. by duplication, never the corpus.
     Per round ONE state⋈edges join + a min aggregate with
     ``localCheckpoint`` truncating lineage; ≤
-    {DRIVER_KHOP_MAX_EDGES:,} measured edges short-circuits to a
+    ``DRIVER_KHOP_MAX_EDGES`` measured edges short-circuits to a
     driver BFS. The oracle unrolls the same rounds as chained
     single-reference CTEs seeded from every node."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")

@@ -140,7 +140,7 @@ FROM d a JOIN d b
 """,
 )
 def fuzzy_join_editdist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All document pairs whose {FUZZY_PFX_LEN}-char text prefix is
+    """All document pairs whose ``FUZZY_PFX_LEN``-char text prefix is
     within edit distance K — typo-tolerant linkage of near-identical
     titles/keys. Candidates via the PassJoin segment partition (see
     module doc); exact levenshtein verifies. The oracle brute-forces

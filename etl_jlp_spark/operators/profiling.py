@@ -207,7 +207,7 @@ FROM ranked GROUP BY bucket
 """,
 )
 def equidepth_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth deciles of the event value: {EQUIDEPTH_BUCKETS}
+    """Equi-depth deciles of the event value: ``EQUIDEPTH_BUCKETS``
     buckets of (near-)equal row count with their value ranges — the
     skew-adaptive complement to the fixed-width value_histogram, and
     the boundary source for range-partition tuning. ntile over the

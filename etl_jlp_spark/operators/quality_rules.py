@@ -374,7 +374,7 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     global threshold, so a clean source isn't starved by a noisy one).
     Reuses `text_quality_score` for the per-doc score (rounded to 4dp
     in BOTH engines — threshold comparisons are float-safe), computes
-    each source's exact interpolated {GATE_P}-quantile (Spark
+    each source's exact interpolated ``GATE_P``-quantile (Spark
     `percentile` ≡ DuckDB quantile_cont; `approx_percentile` is the
     documented 100 TB swap-in, as in percentile_stats), broadcasts the
     #sources-row threshold table back, and reports the keep decision

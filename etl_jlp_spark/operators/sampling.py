@@ -144,7 +144,7 @@ def balance_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture balancing — downsample every source to the smallest
     source's token count (equal-share data mixing). Two-phase plan:
     per-source token totals (tiny — one row per source) set a
-    deterministic md5-prefix keep-rate, quantized to 1/{MIX_QUANT}
+    deterministic md5-prefix keep-rate, quantized to 1/``MIX_QUANT``
     steps so the rate is a portable hex-prefix compare; the corpus then
     streams through one broadcast rate join + filter + agg. The rate
     table is bounded by #sources, so the broadcast holds at any corpus
@@ -201,7 +201,7 @@ def source_mix_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     rates proportional to share^α/share, so small sources are boosted
     and dominant ones capped — softer than ``balance_source_mix``'s
     equal-share floor. target_s = N·(tok_s^α / Σ tok^α); keep-rate =
-    min(1, target_s/tok_s), quantized to 1/{MIX_QUANT} md5-prefix steps
+    min(1, target_s/tok_s), quantized to 1/``MIX_QUANT`` md5-prefix steps
     (deterministic, RNG-free, streaming-safe). The rate table is
     #sources rows — broadcast at any corpus scale; the corpus pays one
     sizing projection + one broadcast-join filter + one agg."""

@@ -294,7 +294,7 @@ def time_on_page_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-incremental time_on_page: batch N = events before the
     boundary, batch N+1's head = each user's first event after it. Every
     user active across the boundary gets a REAL boundary time instead of
-    the {DEFAULT_LAST_PAGE_S:.0f} s default (the reference fixes this on
+    the ``DEFAULT_LAST_PAGE_S`` s default (the reference fixes this on
     every nightly run; round 1 always fell back to the default)."""
     events = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     boundary = F.lit(BATCH_BOUNDARY).cast("timestamp")

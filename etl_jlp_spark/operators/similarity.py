@@ -31,6 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from etl_jlp_spark import stores
 from etl_jlp_spark.catalog import load_table, read_parquet, widen
@@ -336,6 +337,11 @@ def batch_shingles_bands(
     key = (spark.sparkContext.applicationId, bands_path)
     hit = _BATCH_CACHE.get(key)
     if hit is not None:
+        # re-cache after spark.catalog.clearCache(); is_cached would
+        # still read True, the CacheManager's level reads NONE
+        for df in hit:
+            if df.storageLevel == StorageLevel.NONE:
+                df.persist()
         return hit
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(

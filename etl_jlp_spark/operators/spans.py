@@ -107,7 +107,7 @@ FROM spans GROUP BY doc_id, n_toks
 )
 def dup_span_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document duplicated-span report: maximal token spans covered
-    by some {SPAN_K}-gram that also occurs in ANOTHER document.
+    by some ``SPAN_K``-gram that also occurs in ANOTHER document.
     Overlapping/adjacent duplicated windows merge into one span
     (positions p, q with q - p ≤ k cover a contiguous range), so
     ``dup_tokens`` is the union length of all duplicated intervals and
@@ -404,7 +404,7 @@ GROUP BY s.doc_id, s.n_toks, s.n_spans, s.removed_tokens
 )
 def dup_span_excise(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The APPLY side of dup_span_report — Lee et al.'s actual edit:
-    every {SPAN_K}-gram occurring ≥2 times corpus-wide (WITHIN-doc
+    every ``SPAN_K``-gram occurring ≥2 times corpus-wide (WITHIN-doc
     repeats included, unlike the cross-doc report) keeps only its
     globally-first occurrence (min (doc_id, pos)); all later
     occurrences are merged into maximal spans (gaps-and-islands) and

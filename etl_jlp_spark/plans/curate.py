@@ -198,7 +198,7 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape, stage by stage: the quality gate is a zero-shuffle
     projection fused into the scan; decontamination joins the gated
     corpus against a BROADCAST benchmark shingle set (bounded by eval
-    size) and anti-joins the ≥{DECON_MIN_SHARED}-shared hits;
+    size) and anti-joins the ≥``DECON_MIN_SHARED``-shared hits;
     exact dedup is the single hash-partitioned window; the split is an
     md5-threshold projection. One broadcast + two hash exchanges total,
     independent of corpus size; every gate drops rows BEFORE the next

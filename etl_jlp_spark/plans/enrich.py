@@ -581,7 +581,7 @@ SELECT 3, '{FUNNEL_STEPS[2]}', n2,
 )
 def window_funnel_steps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed conversion funnel ({' → '.join(FUNNEL_STEPS)}, all
-    within {FUNNEL_WINDOW_DAYS} days of the user's first step-0
+    within ``FUNNEL_WINDOW_DAYS`` days of the user's first step-0
     event, strictly ordered): users per step plus step-over-step and
     from-first conversion rates.
 

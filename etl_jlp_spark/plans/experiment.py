@@ -531,11 +531,11 @@ FROM means
 """,
 )
 def bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bootstrap 95% CI for the mean event value: {BOOTSTRAP_B}
+    """Bootstrap 95% CI for the mean event value: ``BOOTSTRAP_B``
     deterministic resamples (row index = md5(b:i) mod n — a pure
     function of the data, so the interval is reproducible anywhere),
     resample means from exact e4-integer sums, interval = interpolated
-    quantiles over the {BOOTSTRAP_B} means.
+    quantiles over the ``BOOTSTRAP_B`` means.
 
     Plan: rank rows once (the exact anchor pays one global sort; the
     Poisson-bootstrap swap-in for 100 TB needs NO ranks), fan out

@@ -128,14 +128,14 @@ FROM agg
 )
 def wasserstein_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type 1-D Wasserstein-1 distance between the value
-    distribution of the first {W1_REF_DAYS} days and the rest:
+    distribution of the first ``W1_REF_DAYS`` days and the rest:
     W1 = ∫|F_ref − F_cur| dx over the merged cents grid, reported in
     dollars. W1 is the drift MAGNITUDE (dollars of probability mass
     moved) where ks_drift_report gives significance.
 
     Exactness: the integral telescopes over the merged grid as
     Σ |cumRef·nCur − cumCur·nRef| · Δv — pure integers (DECIMAL(38,0)
-    accumulated) — then rounded to {W1_ROUND} dp by one INTEGER
+    accumulated) — then rounded to ``W1_ROUND`` dp by one INTEGER
     half-away division (no double round-half ambiguity, no −0.0).
 
     Plan: one map-side-combinable groupBy on (type, cents) bounds the
@@ -262,7 +262,7 @@ FROM fin
 )
 def cliffs_delta_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cliff's delta δ = (#(x>y) − #(x<y)) / (n_x·n_y) of each
-    non-baseline event type's values against the '{CLIFF_BASELINE}'
+    non-baseline event type's values against the ``CLIFF_BASELINE``
     sample, with exact greater/less/tie pair counts.
 
     The naive pair count is O(n²); here both samples are grouped onto
@@ -1566,7 +1566,7 @@ FROM bounds b CROSS JOIN kept k
 )
 def winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5 %-per-tail trimmed and winsorized means of order totalprice:
-    exact cents ranks (ties → orderkey), k = n // {TRIM_DEN} by pure
+    exact cents ranks (ties → orderkey), k = n // ``TRIM_DEN`` by pure
     integer division (no float boundary), tail sums by rank windows —
     the means are single double divisions from integer sums.
 
@@ -1788,7 +1788,7 @@ def w1_against_reference(cur_counts: DataFrame, ref_counts: DataFrame) -> DataFr
     """Per-type 1-D Wasserstein distance (dollars) between a current
     and a reference cents-count relation: the wasserstein_value_drift
     integral Σ|cumRef·nCur − cumCur·nRef|·Δv / (nRef·nCur·100) over
-    the full-outer merged grid. Integers all the way: the {W1_ROUND}-dp
+    the full-outer merged grid. Integers all the way: the ``W1_ROUND``-dp
     round is the same integer half-away division the registered
     wasserstein_value_drift uses (engine-version-proof, no −0.0)."""
     ref = ref_counts.select("event_type", "v", F.col("c").alias("c_ref"))
@@ -2154,7 +2154,7 @@ FROM terms
 )
 def anderson_darling_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type two-sample Anderson–Darling statistic between the
-    reference (first {W1_REF_DAYS} days) and current value samples:
+    reference (first ``W1_REF_DAYS`` days) and current value samples:
     A² = (1/na + 1/nb)·Σ_j c_j·D_j² / (N·B_j·(N−B_j)) with
     D_j = cuma_j·N − B_j·na (the scaled CDF gap), B_j the pooled
     cumulative count and c_j the pooled multiplicity — the Pettitt
@@ -2168,7 +2168,7 @@ def anderson_darling_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum would be accumulation-order-sensitive across engines. Instead
     each term quantizes to an e12 INTEGER by the cliffs/W1 half-away
     div discipline, the sum is exact integer addition, and the final
-    /(na·nb) rounds to {W1_ROUND} dp by one more integer half-away div
+    /(na·nb) rounds to ``W1_ROUND`` dp by one more integer half-away div
     (the algebra: (1/na+1/nb)/N = 1/(na·nb), so A² = S/(na·nb·1e12)).
     Headroom: 2e12·c·D² needs c·N⁴ ≲ 5e25 → N ≲ 2.6e6 rows/type in
     DECIMAL(38,0)/HUGEINT; past that drop AD_TERM_SCALE (same

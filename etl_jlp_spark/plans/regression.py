@@ -209,7 +209,7 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def did_cells(events: DataFrame) -> DataFrame:
     """(event_type, treated, post) → exact (n, s) e4-integer cell sums.
     Additive across event slices — the mergeable state that streams per
-    micro-batch through ``streaming.pipeline.sink_batches``; summing
+    micro-batch through ``streaming.pipeline.sink_store``; summing
     per-batch cells (``did_view``) equals one batch pass."""
     boundary = F.lit(DID_PERIOD_BOUNDARY).cast("timestamp")
     cells = events.select(

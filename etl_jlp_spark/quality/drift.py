@@ -73,7 +73,7 @@ GROUP BY c.event_type
 )
 def psi_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type PSI of the value distribution: reference = first
-    {PSI_REF_DAYS} days, current = the rest. One combinable aggregate
+    ``PSI_REF_DAYS`` days, current = the rest. One combinable aggregate
     over raw events; everything downstream is bucket-vocabulary-sized."""
     events = load_table(spark, sf_dir, "events")
     d0 = events.agg(F.min(F.to_date("ts")).alias("d0"))  # 1 row → broadcast
@@ -204,7 +204,7 @@ FROM lamt
 )
 def ks_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type two-sample KS test of the value distribution:
-    reference window = first {PSI_REF_DAYS} days, current = the rest.
+    reference window = first ``PSI_REF_DAYS`` days, current = the rest.
 
     Plan: one scan labels rows, a (event_type, value) pre-aggregate
     collapses ties BEFORE the window sort (the window then ranks

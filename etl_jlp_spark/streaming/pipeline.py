@@ -9,7 +9,7 @@ tracks processed files (the watermark) and ``withWatermark`` bounds
 event-time state. The transforms reuse the batch operator functions —
 one definition, two execution modes.
 
-The exactly-once protocol, here and in ``rollup_sink``:
+The exactly-once protocol, here and in ``store``:
 
 - ``launch`` starts every stream as one ``availableNow`` catch-up run
   (process the backlog, then stop — the scheduled run of the
@@ -19,21 +19,25 @@ The exactly-once protocol, here and in ``rollup_sink``:
 - Each micro-batch writes its output with ``write_batch_idempotent``
   to its own ``batch_id=N`` directory, overwriting, so a replay lands
   on the same path and the sink is exactly-once. ``sink_batches`` is
-  that sink for one transform per batch; ``batch_ids`` lists the
-  directories. (``incremental_to_bronze`` uses Spark's parquet file
-  sink, whose own commit log is exactly-once.)
+  that sink for one transform per batch. (``incremental_to_bronze``
+  uses Spark's parquet file sink, whose own commit log is
+  exactly-once.)
 - A stateless streaming twin of a batch operator is no function of its
   own: it is ``sink_batches(stream_events(spark, src, schema), op,
   dest, ckpt)``, where ``op`` is the batch operator closed over its
   static side input (a reference distribution, a trained model, an
   index). ``op`` must need no cross-batch state: a per-document result
   holds because a document lives in one file, so in one micro-batch.
-  A mergeable per-batch state (``cms_counters``, ``hll_registers``,
-  ``kmv_sketch``, ``did_cells``) is read back merged by its ``*_view``.
-- State replaced as a whole (the rollup base, the cluster store) goes
-  to a new versioned directory and is committed by swapping a JSON
-  pointer (``stores.write_pointer``); the pointer's batch watermark
-  drops replays it already covers.
+- A mergeable per-batch state (the rollup, ``cms_counters``,
+  ``hll_registers``, ``kmv_sketch``, ``did_cells``, the SPRT arm
+  counts) lives in a ``store``: ``sink_store`` appends each batch's
+  partial as a delta, ``store.compact`` folds the deltas into a
+  versioned base committed by a pointer swap, and each ``*_view`` is
+  its estimator over ``store.view`` with the state's exact merge.
+- State replaced as a whole (the cluster store) goes to a new
+  versioned directory and is committed by swapping a JSON pointer
+  (``stores.write_pointer``); the pointer's batch watermark drops
+  replays it already covers.
 """
 
 from __future__ import annotations
@@ -42,7 +46,7 @@ import os
 import shutil
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
@@ -57,6 +61,8 @@ from pyspark.sql.types import (
 from etl_jlp_spark.catalog import read_parquet
 from etl_jlp_spark.operators.audit import with_audit_columns
 from etl_jlp_spark.stores import read_pointer, write_pointer
+from etl_jlp_spark.streaming import store
+from etl_jlp_spark.streaming.store import summed, write_batch_idempotent
 
 EVENTS_SCHEMA = StructType(
     [
@@ -88,29 +94,6 @@ def launch(
     return writer.option("checkpointLocation", checkpoint_dir).trigger(availableNow=True).start()
 
 
-def write_batch_idempotent(df: DataFrame, dest_dir: str, batch_id: int) -> None:
-    """Idempotent ``foreachBatch`` parquet write. A blind
-    ``.mode("append")`` inside foreachBatch is only AT-LEAST-once: a
-    crash after the parquet write but before the checkpoint commit
-    replays the batch on restart and duplicates its rows. Writing each
-    batch to its own ``batch_id=N`` partition directory with overwrite
-    makes the replay land on the same path — idempotent, so the sink is
-    exactly-once end-to-end. Readers see ``dest_dir`` as a
-    batch_id-partitioned parquet tree (drop the ``batch_id`` column if
-    unwanted)."""
-    df.write.mode("overwrite").parquet(os.path.join(dest_dir, f"batch_id={int(batch_id)}"))
-
-
-def batch_ids(dest_dir: str) -> list[int]:
-    """Ascending ids of the ``batch_id=N`` directories under
-    ``dest_dir``; none while it does not exist."""
-    try:
-        names = os.listdir(dest_dir)
-    except FileNotFoundError:
-        return []
-    return sorted(int(d.split("=", 1)[1]) for d in names if d.startswith("batch_id="))
-
-
 def sink_batches(
     stream: DataFrame,
     transform: Callable[[DataFrame], DataFrame],
@@ -123,6 +106,21 @@ def sink_batches(
         stream,
         checkpoint_dir,
         lambda batch_df, batch_id: write_batch_idempotent(transform(batch_df), dest_dir, batch_id),
+    )
+
+
+def sink_store(
+    stream: DataFrame,
+    transform: Callable[[DataFrame], DataFrame],
+    store_dir: str,
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Launch ``stream`` appending ``transform(batch)`` of each
+    micro-batch, a mergeable partial, to the ``store`` at ``store_dir``."""
+    return launch(
+        stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: store.append(transform(batch_df), store_dir, batch_id),
     )
 
 
@@ -302,16 +300,6 @@ def streaming_quality_monitor(
     )
 
 
-def cms_view(spark: SparkSession, dest_dir: str) -> DataFrame:
-    """The merged count-min sketch of per-batch ``cms_counters``
-    partitions: the sum, exact by counter additivity."""
-    return (
-        read_parquet(spark, dest_dir)
-        .groupBy("r", "bucket")
-        .agg(F.sum("c").cast("long").alias("c"))
-    )
-
-
 def streaming_cc_maintain(
     spark: SparkSession,
     docs_src_dir: str,
@@ -433,45 +421,55 @@ def cc_state_labels(spark: SparkSession, state_dir: str) -> DataFrame:
     return read_parquet(spark, read_pointer(os.path.join(state_dir, "_POINTER.json"))["labels"])
 
 
-def hll_view(spark: SparkSession, dest_dir: str) -> DataFrame:
-    """The merged per-day ``hll_registers`` of batch partitions + the
-    estimate: max over partitions (exact by the max-merge property),
-    then the standard small-range-corrected estimate per day."""
+cms_merge = summed(("r", "bucket"), ("c",))
+did_merge = summed(("event_type", "treated", "post"), ("n", "s"))
+_sprt_merge = summed(("arm",), ("n", "conv"))
+
+
+def hll_merge(registers: DataFrame) -> DataFrame:
+    """Per-day ``hll_registers`` merged by max (exact: a register holds
+    the max rank seen)."""
+    return registers.groupBy("day", "bucket").agg(F.max("m").alias("m"))
+
+
+def kmv_merge(sketches: DataFrame) -> DataFrame:
+    """``kmv_sketch`` (g, hv) rows re-ranked to the K smallest per type
+    (exact: sketch(A∪B) = topK(sketch(A) ∪ sketch(B)))."""
+    from etl_jlp_spark.operators.kmv import KMV_K
+
+    rn = F.row_number().over(Window.partitionBy("g").orderBy("hv"))
+    return sketches.distinct().withColumn("rn", rn).filter(F.col("rn") <= KMV_K).drop("rn")
+
+
+def cms_view(spark: SparkSession, store_dir: str) -> DataFrame:
+    """The merged count-min sketch of a store of ``cms_counters``."""
+    return store.view(spark, store_dir, cms_merge)
+
+
+def hll_view(spark: SparkSession, store_dir: str) -> DataFrame:
+    """The standard small-range-corrected estimate per day over the
+    merged registers of a store of ``hll_registers``."""
     from etl_jlp_spark.operators.sketches import hll_estimate
 
-    regs = (
-        read_parquet(spark, dest_dir)
-        .groupBy("day", "bucket")
-        .agg(F.max("m").alias("m"))
-    )
-    return hll_estimate(regs, ["day"])
+    return hll_estimate(store.view(spark, store_dir, hll_merge), ["day"])
 
 
-def kmv_view(spark: SparkSession, dest_dir: str) -> DataFrame:
-    """Merged per-type sketch + distinct estimate: union of batch
-    ``kmv_sketch`` (g, hv) partitions, re-ranked to the K smallest per
-    type (the KMV merge, exact: sketch(A∪B) = topK(sketch(A) ∪ sketch(B))),
-    then the (K−1)·M/h_(K) estimator; an unsaturated merged sketch IS
-    the distinct hash set, so the estimate falls back to its size."""
-    from pyspark.sql import Window
-
+def kmv_view(spark: SparkSession, store_dir: str) -> DataFrame:
+    """Per-type distinct estimate over the merged sketch of a store of
+    ``kmv_sketch`` rows: the (K−1)·M/h_(K) estimator; an unsaturated
+    merged sketch IS the distinct hash set, so the estimate falls back
+    to its size."""
     from etl_jlp_spark.operators.kmv import KMV_K, KMV_M
 
-    merged = (
-        read_parquet(spark, dest_dir)
-        .select("g", "hv")
-        .distinct()
-        .withColumn("rn", F.row_number().over(Window.partitionBy("g").orderBy("hv")))
-        .filter(F.col("rn") <= KMV_K)
-    )
-    agg = merged.groupBy("g").agg(
-        F.max(F.when(F.col("rn") == KMV_K, F.col("hv"))).alias("hk"),
+    agg = store.view(spark, store_dir, kmv_merge).groupBy("g").agg(
+        F.max("hv").alias("h_max"),
         F.count(F.lit(1)).cast("long").alias("n_sk"),
     )
+    hk = F.when(F.col("n_sk") == KMV_K, F.col("h_max"))
     return agg.select(
         F.col("g").alias("event_type"),
         F.coalesce(
-            F.round((KMV_K - 1) * F.lit(float(KMV_M)) / F.col("hk")),
+            F.round((KMV_K - 1) * F.lit(float(KMV_M)) / hk),
             F.col("n_sk").cast("double"),
         )
         .cast("long")
@@ -479,18 +477,13 @@ def kmv_view(spark: SparkSession, dest_dir: str) -> DataFrame:
     )
 
 
-def did_view(spark: SparkSession, dest_dir: str) -> DataFrame:
-    """The merged experiment readout: sum per-batch ``did_cells``
-    (exact by additivity of (n, Σv)), then the shared batch readout
-    algebra, so it equals ``did_lift_report`` over the arrived rows."""
+def did_view(spark: SparkSession, store_dir: str) -> DataFrame:
+    """The experiment readout over the merged cells of a store of
+    ``did_cells``: the shared batch readout algebra, so it equals
+    ``did_lift_report`` over the arrived rows."""
     from etl_jlp_spark.plans.regression import did_readout
 
-    cells = (
-        read_parquet(spark, dest_dir)
-        .groupBy("event_type", "treated", "post")
-        .agg(F.sum("n").cast("long").alias("n"), F.sum("s").cast("long").alias("s"))
-    )
-    return did_readout(cells)
+    return did_readout(store.view(spark, store_dir, did_merge))
 
 
 def streaming_sprt_monitor(
@@ -511,12 +504,10 @@ def streaming_sprt_monitor(
     registered batch query). Hypotheses arrive as the same exact e6
     integer rationals the batch query derives.
 
-    Unlike a stateless per-batch monitor, SPRT needs running totals:
-    state is versioned per batch (``state_dir/batch_id=N`` holds the
-    cumulative counts THROUGH batch N, written like the output) and
-    each batch reads the newest state STRICTLY BELOW its own id — so a
-    crash-replay of batch N re-reads N−1's state and rewrites the same
-    N state and output."""
+    The running totals are a ``store`` at ``state_dir``: each batch
+    appends its counts, compacts, and scores the base. A replay of
+    batch N is dropped by the pointer, its compaction is a no-op, and
+    it re-scores the same ``base/vN`` into the same output."""
     from etl_jlp_spark.plans.experiment import AB_SPLIT_HEX, sprt_score
 
     hyp = spark.createDataFrame([(int(p0_e6), int(p1_e6))], "p0_e6 long, p1_e6 long")
@@ -539,25 +530,12 @@ def streaming_sprt_monitor(
                 F.sum("conv").cast("long").alias("conv"),
             )
         )
-        older = [b for b in batch_ids(state_dir) if b < int(batch_id)]
-        merged = batch_counts
-        if older:
-            prior = read_parquet(spark, os.path.join(state_dir, f"batch_id={older[-1]}"))
-            merged = merged.unionByName(
-                prior.select("arm", F.col("cum_n").alias("n"), F.col("cum_conv").alias("conv"))
-            )
-        cum = merged.groupBy("arm").agg(
-            F.sum("n").cast("long").alias("cum_n"),
-            F.sum("conv").cast("long").alias("cum_conv"),
+        store.append(batch_counts, state_dir, batch_id)
+        store.compact(spark, state_dir, _sprt_merge)
+        cum = store.view(spark, state_dir, _sprt_merge).select(
+            "arm", F.col("n").alias("cum_n"), F.col("conv").alias("cum_conv")
         )
-        # state THROUGH this batch — overwrite is replay-idempotent
-        # (localCheckpoint first: the write below must not lazily
-        # re-read the prior-state dir while a replay overwrites it)
-        cum = cum.localCheckpoint(eager=True)
-        write_batch_idempotent(cum, state_dir, batch_id)
-        out = sprt_score(cum, hyp).join(
-            batch_counts.select("arm", "n", "conv"), "arm", "left"
-        ).select(
+        out = sprt_score(cum, hyp).join(batch_counts, "arm", "left").select(
             "arm",
             F.coalesce("n", F.lit(0)).alias("n"),
             F.coalesce("conv", F.lit(0)).alias("conv"),
@@ -567,11 +545,5 @@ def streaming_sprt_monitor(
             "decision",
         )
         write_batch_idempotent(out, dest_dir, batch_id)
-        # garbage-collect superseded state AFTER the output commit (the
-        # same discipline as streaming_cc_maintain's version pruning): a
-        # replay of batch N only ever reads N−1, so ids < N−1 are dead.
-        for b in older:
-            if b < int(batch_id) - 1:
-                shutil.rmtree(os.path.join(state_dir, f"batch_id={b}"), ignore_errors=True)
 
     return launch(stream_events(spark, src_dir), checkpoint_dir, handle)

@@ -185,9 +185,7 @@ def test_kcore_distributed_path_matches_driver(spark, monkeypatch):
 def test_graph_operators_release_their_caches(spark, monkeypatch, forced):
     """Every graph operator unpersists what it persisted, on both paths:
     a CacheManager entry left behind is substituted into every later
-    plan containing the same subtree. Counts entries instead of clearing
-    the cache first, which would also drop the session-memoized frames
-    other tests rely on (``similarity.batch_shingles_bands``)."""
+    plan containing the same subtree."""
     pair_rows = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (7, 8)]
 
     def fake_pairs(spark_, sf_dir_):

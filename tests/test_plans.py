@@ -403,6 +403,22 @@ def test_cc_incremental_tokenizes_batch_once(spark):
     assert "InMemoryTableScan" in plan
 
 
+def test_batch_memo_recaches_after_clear_cache(spark):
+    """``spark.catalog.clearCache()`` drops the memoized batch frames
+    from the CacheManager; the next call must cache them again, so the
+    probe still reads the batch through InMemoryTableScan."""
+    from etl_jlp_spark.operators.similarity import (
+        batch_shingles_bands,
+        ensure_minhash_store,
+    )
+
+    bands_path, _sh = ensure_minhash_store(spark, SF_SMALL)
+    batch_shingles_bands(spark, SF_SMALL, bands_path)
+    spark.catalog.clearCache()
+    plan = _plan(QS["dedup_minhash_prebuilt"](spark, SF_SMALL))
+    assert "InMemoryTableScan" in plan
+
+
 def test_bigram_lm_sides_are_aggregates_not_windows(spark):
     """All three LM sides must be groupBy aggregates joined back
     term-keyed (partial agg + AQE), never count-over-window on the

@@ -18,8 +18,8 @@ from etl_jlp_spark.operators.sessionize import (
 from etl_jlp_spark.streaming.pipeline import DEFAULT_WATERMARK_DELAY, launch, stream_events
 from etl_jlp_spark.streaming.stateful import sessionize_stateful, time_on_page_stateful
 
-# Streaming runs: excluded from the default run, which must finish inside
-# the tier-1 time limit; run via -m slow.
+# Streaming runs: part of the default run; select or exclude them with
+# -m slow / -m "not slow".
 pytestmark = pytest.mark.slow
 
 # an availableNow run over sf0.001 takes ~20 s here; a stream that keeps

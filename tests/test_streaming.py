@@ -54,13 +54,14 @@ from etl_jlp_spark.streaming.pipeline import (
     incremental_to_bronze,
     kmv_view,
     sink_batches,
+    sink_store,
     stream_events,
     streaming_sessionize,
     windowed_event_counts,
 )
 
-# Wall-clock-bound (streaming triggers / state timeouts): excluded from the
-# default run so the driver test window completes (r11); run via -m slow.
+# Wall-clock-bound (streaming triggers / state timeouts): part of the
+# default run; select or exclude them with -m slow / -m "not slow".
 pytestmark = pytest.mark.slow
 
 QS = ent.queries()
@@ -319,14 +320,27 @@ def test_streaming_sprt_monitor_matches_batch(spark, tmp_path):
     # the null-calibrated control arm never rejects
     assert final["A"]["decision"] != "reject_h0"
 
-    # exactly-once: a third run with no new files changes nothing
+    # exactly-once: with batch 1's commit dropped from the checkpoint, a
+    # third run replays it and changes neither the state nor the output
+    def listing():
+        return sorted(
+            os.path.relpath(os.path.join(d, f), state)
+            for d, _, files in os.walk(state)
+            for f in files
+        )
+
     before = sorted(map(tuple, out.collect()))
-    assert streaming_sprt_monitor(
-        spark, src, p0_e6, p1_e6, dest, state, ckpt
-    ).awaitTermination(120)
+    state_before = listing()
+    for name in ("1", ".1.crc"):
+        path = os.path.join(ckpt, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    q = streaming_sprt_monitor(spark, src, p0_e6, p1_e6, dest, state, ckpt)
+    assert q.awaitTermination(120)
+    assert [p["batchId"] for p in q.recentProgress] == [1]
     after = sorted(map(tuple, spark.read.parquet(dest).collect()))
     assert after == before
-    assert sorted(os.listdir(state)) == ["batch_id=0", "batch_id=1"]
+    assert listing() == state_before
 
 
 
@@ -494,6 +508,7 @@ class Twin:
     op: Callable  # (Inputs, batch) -> the batch operator over its side input
     want: Callable  # Inputs -> the batch twin's rows
     read: Callable = _served  # (Inputs, dest) -> the sink as served
+    sink: Callable = sink_batches  # (stream, op, dest, ckpt) -> the launched stream
     holds: Callable = lambda c, dest: True  # property beyond equality
 
 
@@ -558,19 +573,21 @@ TWINS = {
         # every CDF gap is identically 0: A² = 0 exactly (integer algebra)
         holds=lambda c, dest: _batch_max(c, dest, "ad_stat", 1) == 0.0,
     ),
-    # mergeable per-batch state: the view merged over the two runs'
-    # batch partitions equals the batch build
+    # mergeable per-batch state: a store at dest, whose view merged over
+    # the two runs' deltas equals the batch build
     "cms_monitor": Twin(
         runs=lambda c: [[h] for h in c.ev_halves],
         op=lambda c, b: cms_counters(b),
         want=lambda c: cms_counters(c.ev),
         read=lambda c, dest: cms_view(c.spark, dest),
+        sink=sink_store,
     ),
     "hll_monitor": Twin(
         runs=lambda c: [[h] for h in c.ev_halves],
         op=lambda c, b: _day_registers(b),
         want=lambda c: QS["hll_distinct_daily"](c.spark, SF_SMALL).select("day", "est_distinct"),
         read=lambda c, dest: hll_view(c.spark, dest),
+        sink=sink_store,
     ),
     "kmv_monitor": Twin(
         runs=lambda c: [[h] for h in c.ev_halves],
@@ -579,12 +596,14 @@ TWINS = {
             "event_type", "est_distinct"
         ),
         read=lambda c, dest: kmv_view(c.spark, dest),
+        sink=sink_store,
     ),
     "did_monitor": Twin(
         runs=lambda c: [[h] for h in c.ev_halves],
         op=lambda c, b: did_cells(b),
         want=lambda c: QS["did_lift_report"](c.spark, SF_SMALL),
         read=lambda c, dest: did_view(c.spark, dest),
+        sink=sink_store,
     ),
     # query 1 returns the registered probe's top-K in its order; the
     # single-term query 2 returns results too, capped at top-K
@@ -632,7 +651,7 @@ def test_streaming_twin_matches_batch(spark, inputs, tmp_path, name):
 
     def run_stream():
         stream = stream_events(spark, src, runs[0][0].schema)
-        assert sink_batches(stream, partial(twin.op, inputs), dest, ckpt).awaitTermination(120)
+        assert twin.sink(stream, partial(twin.op, inputs), dest, ckpt).awaitTermination(120)
 
     def served():
         rows = twin.read(inputs, dest).select(*want.columns).collect()

@@ -8,8 +8,8 @@ from etl_jlp_spark.catalog import load_table
 from etl_jlp_spark.operators.cdc import merge_changes
 from etl_jlp_spark.streaming.pipeline import stream_events
 import pytest
-# Wall-clock-bound (streaming triggers / state timeouts): excluded from the
-# default run so the driver test window completes (r11); run via -m slow.
+# Wall-clock-bound (streaming triggers / state timeouts): part of the
+# default run; select or exclude them with -m slow / -m "not slow".
 pytestmark = pytest.mark.slow
 
 

@@ -1,10 +1,15 @@
 """The exactly-once streaming protocol lives in one place each: streams
-start only in ``streaming.pipeline.launch`` and pointers are committed
-only by ``stores.write_pointer``. Also: the package's Arrow UDFs run when
-the process works from another directory."""
+start only in ``streaming.pipeline.launch``, pointers are committed
+only by ``stores.write_pointer`` and per-batch state is listed only by
+``streaming.store``. Also: the package's Arrow UDFs run when the
+process works from another directory, and no docstring shows a raw
+``{CONST}`` format placeholder."""
 
 import glob
+import importlib
+import inspect
 import os
+import pkgutil
 import re
 import subprocess
 import sys
@@ -49,6 +54,37 @@ def test_pointers_commit_only_through_stores():
         for fn in _function_of(src, "os.replace(")
     ]
     assert sites == [(os.path.join("etl_jlp_spark", "stores.py"), "write_pointer")]
+
+
+def test_per_batch_state_is_listed_only_by_the_store():
+    sites = [
+        (rel, fn)
+        for rel, src in _engine_sources()
+        for fn in _function_of(src, "batch_ids(")
+    ]
+    store = os.path.join("etl_jlp_spark", "streaming", "store.py")
+    assert sites and {rel for rel, _ in sites} == {store}, sites
+
+
+def test_docstrings_have_no_unformatted_placeholders():
+    """A ``{NAME}`` in a docstring that names a constant of its own
+    module reads as a format placeholder nobody filled in."""
+    import etl_jlp_spark
+
+    placeholder = re.compile(r"\{([A-Za-z_]\w*)[^{}]*\}")
+    raw = []
+    for info in pkgutil.walk_packages(etl_jlp_spark.__path__, "etl_jlp_spark."):
+        mod = importlib.import_module(info.name)
+        objs = [mod] + [
+            o
+            for o in vars(mod).values()
+            if (inspect.isfunction(o) or inspect.isclass(o)) and o.__module__ == mod.__name__
+        ]
+        for o in objs:
+            for name in placeholder.findall(o.__doc__ or ""):
+                if name.isupper() and name in vars(mod):
+                    raw.append(f"{mod.__name__}.{getattr(o, '__name__', '')}: {{{name}}}")
+    assert not raw, raw
 
 
 def test_arrow_udfs_run_outside_the_repo_directory(tmp_path):
